@@ -653,28 +653,21 @@ class Mr4VersionedReader(DataSourceReader):
         if self._where and vt._range_relation(
                 stats.get(d), dir_rows.get(d), self._where) == "miss":
             return True
-        blooms = self.manifest.get("bloom") or {}
         for col, val_lists in self._probes.items():
-            for vals in val_lists:
-                windowed = vt._window_survivors(
-                    self.manifest, col, vals, [d])[d]
-                if not windowed:
-                    return True  # range proof: no IN value lands here
-                ent = (blooms.get(d) or {}).get(col)
-                ctype = self.col_types.get(col)
-                if ent is None or ctype not in xxh64.SUPPORTED_TYPES:
-                    continue  # no bloom / no pinned hash twin: scan
-                import base64
+            ctype = self.col_types.get(col)
 
-                ba = base64.b64decode(ent["b64"])
-                hit = any(
-                    all((ba[p // 8] >> (p % 8)) & 1
-                        for p in xxh64.bloom_positions(
-                            v, ctype, ent["bits"], ent["k"]))
-                    for v in windowed
-                )
-                if not hit:
-                    return True  # bloom proof for this conjunct
+            def positions(vals, bits, k, ctype=ctype):
+                if ctype not in xxh64.SUPPORTED_TYPES:
+                    return None  # no pinned hash twin: no bloom proof
+                return [xxh64.bloom_positions(v, ctype, bits, k)
+                        for v in vals]
+
+            for vals in val_lists:
+                # the window-then-bloom rule of the copy-on-write
+                # classifiers, hashed by the pure-Python twin
+                if not vt._classify_key_dirs(
+                        self.manifest, col, vals, [d], positions)[d]:
+                    return True
         return False
 
     # planning-time ceiling on inlined deletion-vector positions: the

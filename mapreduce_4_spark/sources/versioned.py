@@ -14,12 +14,20 @@ Commit protocol: data lands FIRST (under ``v=N/``, or under a nonce'd
 as a create-if-absent — a reader only sees a version once its manifest
 exists, so a crashed writer leaves garbage data but never a readable
 half-snapshot, and two writers can never both believe they published
-the same version. ``write_version`` keeps the simple single-writer
-shape (its CAS losing is a loud VersionConflictError, since under the
-contract it can only mean the contract was broken);
-``write_version_concurrent`` is the multi-writer path — staged data +
-an optimistic manifest-CAS retry loop, the same commit protocol
-Iceberg/Delta run on an object store.
+the same version. Every commit path shares two functions.
+``_derive_manifest`` is the one inheritance rule: a new manifest keeps
+some of its parent's chain dirs by reference and carries their
+stats/bloom/row-count/partition entries, deletion vector and recorded
+clustering discipline (appends, copy-on-write DML and ``compact_tail``
+all build on it; ``_add_dir`` adds the commit's one new dir).
+``_publish`` is the one publish point: it stamps the commit and
+creates the manifest if absent, raising VersionConflictError when
+another writer got there first. The single-writer paths
+(``write_version``, the DML, maintenance) let that error surface —
+under the contract it can only mean the contract was broken;
+``write_version_concurrent`` and ``commit_staged_dir`` share one
+optimistic CAS retry loop (``_commit_staged``) over staged data, the
+same commit protocol Iceberg/Delta run on an object store.
 
 Scale: manifests are O(1) metadata; snapshots are plain parquet
 directories, so reads keep pushdown/pruning, and time travel costs
@@ -66,6 +74,17 @@ class VersionConflictError(RuntimeError):
     and a loud error beats the silent manifest overwrite (= data loss)
     it replaces. ``write_version_concurrent`` catches the same losing
     CAS internally and retries against the new parent instead."""
+
+
+class KeyBudgetError(ValueError):
+    """A copy-on-write key set exceeded its ``max_keys`` driver budget.
+
+    Raised by the manifest-classified mutations (``*_version_pruned``,
+    ``delete_version_dv``), which collect their keys on the driver.
+    Callers that can afford one classification scan catch it and route
+    to the join-classified ``*_version_joined`` twins, which never
+    collect the keys (``streaming.foreach_batch.versioned_merge_sink``
+    does exactly that)."""
 
 
 def _versions_dir(table_dir: str) -> str:
@@ -275,13 +294,20 @@ def _zorder_col(df: DataFrame, cols: list[str], bits: int):
     return zval
 
 
-def _check_append_schema(pm: dict, new_schema, table_dir: str) -> bool:
-    """Validate an append's schema against the chain's; returns True
-    when the append ADDITIVELY evolves it (the new rows carry every
-    parent column, same names/types/positions, plus new columns
-    appended at the end — read as typed nulls from pre-evolution dirs).
+def _check_append(pm: dict, new_schema, partition_by, table_dir: str) -> bool:
+    """Validate an append onto the parent manifest ``pm``; returns True
+    when the append ADDITIVELY evolves the chain's schema (the new rows
+    carry every parent column, same names/types/positions, plus new
+    columns appended at the end — read as typed nulls from
+    pre-evolution dirs).
 
-    Any other drift is refused LOUDLY: a plain multi-path parquet scan
+    Bucketed parents refuse appends outright: bucketing is a
+    CORRECTNESS contract (exchange-free joins assume every row hashed
+    into its bucket file), not a skipping heuristic. Hive partitioning
+    must match the chain's exactly (each chain dir is partitioned
+    independently, so one scheme must hold for all of them).
+
+    Any other schema drift is refused LOUDLY: a plain multi-path parquet scan
     silently resolves mixed file schemas from whichever file it samples
     first, so renames, type changes, drops, and reorders would corrupt
     without error — those still require a full snapshot (append=False).
@@ -296,6 +322,20 @@ def _check_append_schema(pm: dict, new_schema, table_dir: str) -> bool:
     partition column can never be added or retyped on a chain."""
     from pyspark.sql.types import StructType
 
+    if pm.get("bucket_by"):
+        raise ValueError(
+            "cannot append to a bucketed snapshot; compact() first"
+        )
+    if (pm.get("partition_by") or None) != (partition_by or None):
+        raise ValueError(
+            "append partitioning must match the chain: parent has "
+            f"partition_by={pm.get('partition_by')!r}, append got "
+            f"{partition_by!r}"
+            + ("" if partition_by else
+               " (the mr4ver writer stages flat files — append to a "
+               "hive-partitioned chain with write_version(partition_by="
+               "...))")
+        )
     part = set(pm.get("partition_by") or [])
 
     def _fields(schema_fields):
@@ -346,6 +386,235 @@ def _backfill_all_null_stats(parent_stats: dict, parent_dir_rows: dict,
                 e.append(None)
             ent_map[c] = e
         parent_stats[d] = ent_map
+
+# ---------------------------------------------------------------------------
+# The commit path
+#
+# Every commit is built from its parent by ONE inheritance rule
+# (_derive_manifest, plus _add_dir for the commit's one new chain dir)
+# and published by ONE function (_publish). Commits whose content is
+# the parent's (analyze, deletion vectors, restore) re-spread
+# _inherited_manifest instead, and publish the same way.
+#
+# Manifest fields, for reference:
+# - version / parent; committed_at: publish wall-clock (UTC epoch
+#   seconds), what timestamp AS-OF time travel resolves against
+#   (version_at) — stamped by _publish on every attempt, so a CAS
+#   retry records when the commit actually landed; nonce: per-write token — catalog names derive from
+#   it, so a recreated table dir never aliases a previous
+#   incarnation's entry; batch_id: exactly-once provenance for
+#   streaming sinks (streaming/foreach_batch.py); operation: what
+#   produced the commit (DESCRIBE HISTORY's column; callers override
+#   it via manifest_extra).
+# - row_count, schema; bucket_by / n_buckets / sort_by / zorder_by /
+#   zorder_bits / partition_by: the layout, or for chains the RECORDED
+#   clustering discipline.
+# - data_dirs: every chain dir (relative) this version reads; None for
+#   full snapshots. schema_evolved: True once an additive append
+#   evolved the chain (readers merge file schemas and null-pad to the
+#   manifest schema); cleared by any full snapshot (compact/replace).
+# - stats_for / col_stats: per-dir min/max/nulls(/sum) for metadata
+#   skipping; bloom_for / bloom_bits / bloom: per-dir bloom filters for
+#   point lookups; dir_rows: per-dir exact row counts (count_version's
+#   metadata source); dir_parts: per-dir partition-subdir index
+#   (read_version_pruned's listing-free probe); dv: the deletion
+#   vector (merge-on-read deletes) — full snapshots start clean, their
+#   content was read live.
+# ---------------------------------------------------------------------------
+
+
+def _chain_dirs(manifest: dict) -> list[str]:
+    """The relative data dirs a manifest reads (a full snapshot reads
+    its own version dir)."""
+    return manifest.get("data_dirs") or [f"v={manifest['version']:06d}"]
+
+
+def _hive_parts(data_dir: str) -> list[str]:
+    """The partition-subdir index of a dir just written — ONE listing,
+    O(new dir), so pruned probes pay zero FS listings per chain dir."""
+    return sorted(e for e in fsio.listdir(data_dir) if "=" in e)
+
+
+def _derive_manifest(pm: dict | None, kept: list[str], schema=None,
+                     evolved: bool = False,
+                     stats_for: list[str] | None = None) -> dict:
+    """The inheritance rule: the manifest a commit starts from when it
+    keeps the chain dirs ``kept`` of parent manifest ``pm`` BY
+    REFERENCE (``pm=None``: a fresh snapshot, nothing inherited).
+    Appends (all three writers), copy-on-write DML and compact_tail's
+    fold all build on it, then add their one new dir with ``_add_dir``.
+
+    - Per-dir metadata (``col_stats``, ``bloom``, ``dir_rows``,
+      ``dir_parts``) is restricted to the kept dirs, and so is the
+      deletion vector: entries for dropped/rewritten dirs disappear
+      (their files left the manifest, so their sidecar entries can
+      never match a live scan row again — stale rows are harmless and
+      the next compaction retires the sidecar), and a DV with nothing
+      left is released to vacuum. A DV-carrying parent must keep it:
+      dropping it would resurrect deleted rows on the next append.
+    - Table-level contracts carry whole: schema, partitioning, the
+      stats/bloom column sets and the recorded sort/zorder discipline
+      (round 12: a new dir lands unclustered — clustering a trickle is
+      write churn — so the layout decays only in the unfolded tail,
+      and compact_tail's fold re-applies the discipline). Bucketing
+      never carries: no dir-granular commit accepts a bucketed parent.
+    - ``schema_evolved`` survives only while kept dirs remain: new dirs
+      are written manifest-conformed, so only kept dirs can predate an
+      evolution.
+
+    Appends pass the appended rows' ``schema``, whether it ``evolved``
+    the chain (``_check_append``) and an explicit ``stats_for`` (None =
+    the chain's columns: a stats-carrying chain keeps collecting). An
+    evolving append backfills the kept dirs' all-null stats for
+    brand-new stats columns (``_backfill_all_null_stats``)."""
+    pm = pm or {}
+    keep = set(kept)
+
+    def _only(per_dir) -> dict:
+        return {d: x for d, x in (per_dir or {}).items() if d in keep}
+
+    if stats_for is None:
+        stats_for = pm.get("stats_for")
+    col_stats = _only(pm.get("col_stats"))
+    dir_rows = _only(pm.get("dir_rows"))
+    if evolved and stats_for:
+        _backfill_all_null_stats(
+            col_stats, dir_rows, {f["name"] for f in pm["schema"]["fields"]},
+            stats_for,
+            {f.name: f.dataType.simpleString() for f in schema.fields},
+        )
+    dv = pm.get("dv")
+    dv_counts = {d: n for d, n in _only((dv or {}).get("dir_counts")).items()
+                 if n}
+    bloom_for = pm.get("bloom_for")
+    return {
+        "schema": (schema.jsonValue() if schema is not None
+                   else pm.get("schema")),
+        "bucket_by": None,
+        "n_buckets": None,
+        "sort_by": pm.get("sort_by"),
+        "zorder_by": pm.get("zorder_by"),
+        "zorder_bits": pm.get("zorder_bits") if pm.get("zorder_by") else None,
+        "partition_by": pm.get("partition_by") or None,
+        "data_dirs": list(kept),
+        "schema_evolved": (
+            True if kept and (evolved or pm.get("schema_evolved")) else None),
+        "stats_for": stats_for,
+        "col_stats": col_stats or None,
+        "bloom_for": bloom_for,
+        "bloom_bits": ((pm.get("bloom_bits") or (1 << 17)) if bloom_for
+                       else None),
+        "bloom": _only(pm.get("bloom")) or None,
+        "dir_rows": dir_rows,
+        "dir_parts": _only(pm.get("dir_parts")) or None,
+        "dv": ({"path": dv["path"], "count": sum(dv_counts.values()),
+                "dir_counts": dv_counts} if dv_counts else None),
+    }
+
+
+def _add_dir(m: dict, rel: str, rows: int, stats: dict | None = None,
+             bloom: dict | None = None,
+             parts: list[str] | None = None) -> None:
+    """Add a commit's one NEW chain dir ``rel`` to a derived manifest:
+    its exact row count (from the footers just written), its
+    stats/bloom entries when collected, and — on partitioned tables —
+    its partition-subdir index."""
+    m["data_dirs"] = m["data_dirs"] + [rel]
+    m["dir_rows"] = {**m["dir_rows"], rel: rows}
+    if stats is not None:
+        m["col_stats"] = {**(m["col_stats"] or {}), rel: stats}
+    if bloom is not None:
+        m["bloom"] = {**(m["bloom"] or {}), rel: bloom}
+    if m["partition_by"]:
+        m["dir_parts"] = {**(m["dir_parts"] or {}), rel: parts}
+
+
+def _publish(table_dir: str, manifest: dict, retry_hint: str) -> int:
+    """The publish point of every commit, and the only place a manifest
+    file is written: stamp the commit time (and a fresh nonce unless
+    the writer recorded its own), then create the version's manifest
+    if absent. Data always landed first, so a reader only sees a
+    version once it is whole. Losing the create-if-absent raises
+    VersionConflictError (``retry_hint`` tells the caller what to
+    redo) — a loud error instead of the silent manifest overwrite
+    (= data loss) it replaces; ``_commit_staged``'s CAS loop catches it
+    and retries against the new head."""
+    version = manifest["version"]
+    manifest = {"nonce": uuid.uuid4().hex[:12], **manifest,
+                "committed_at": time.time()}
+    fsio.mkdirs(_versions_dir(table_dir))
+    if not fsio.create_text_exclusive(
+            _manifest_path(table_dir, version), json.dumps(manifest)):
+        raise VersionConflictError(
+            f"version {version} of {table_dir} was published "
+            f"concurrently — {retry_hint}"
+        )
+    return version
+
+
+def _write_base(table_dir: str, parent: int | None, append: bool, schema,
+                partition_by: list[str] | None,
+                stats_for: list[str] | None) -> dict:
+    """The derived manifest a WRITE starts from: an append onto an
+    existing ``parent`` is validated (``_check_append``) and keeps every
+    parent dir; anything else starts fresh. ``row_count`` is the
+    parent's, for the caller to add its new rows to."""
+    pm = (read_manifest(table_dir, parent)
+          if append and parent is not None else None)
+    if pm is None:
+        m = _derive_manifest(None, [], schema=schema, stats_for=stats_for)
+    else:
+        m = _derive_manifest(
+            pm, _chain_dirs(pm), schema=schema,
+            evolved=_check_append(pm, schema, partition_by, table_dir),
+            stats_for=stats_for)
+    m.update(partition_by=partition_by,
+             row_count=pm["row_count"] if pm else 0)
+    return m
+
+
+def _commit_staged(table_dir: str, staged_rel: str, schema, new_rows: int,
+                   append: bool, operation: str, batch_id=None,
+                   max_retries: int = 20,
+                   skip_if_batch_id_published: bool = False,
+                   partition_by: list[str] | None = None,
+                   parts: list[str] | None = None,
+                   stats_for: list[str] | None = None,
+                   dir_meta=None, nonce: str | None = None,
+                   manifest_extra: dict | None = None) -> int | None:
+    """The optimistic-concurrency commit loop shared by
+    ``write_version_concurrent`` and ``commit_staged_dir``: per
+    attempt, re-read the head, derive a manifest referencing the
+    staged dir (plus the parent chain for appends) and publish it.
+    Losing the CAS costs one manifest round trip and a retry against
+    the winner's snapshot; the staged data stands.
+
+    ``parts`` is the staged dir's partition index; ``dir_meta(m)``
+    returns its ``(stats, bloom)`` entries for the derived manifest's
+    column sets (None: the staged dir gets none — readers degrade
+    soundly, ``analyze_table`` backfills)."""
+    for _attempt in range(max_retries + 1):
+        parent = latest_version(table_dir)
+        if skip_if_batch_id_published and batch_id is not None \
+                and batch_id in published_batch_ids(table_dir):
+            return None
+        m = _write_base(table_dir, parent, append, schema, partition_by,
+                        stats_for)
+        stats, bloom = dir_meta(m) if dir_meta else (None, None)
+        _add_dir(m, staged_rel, new_rows, stats, bloom, parts)
+        m.update(version=(parent or 0) + 1, parent=parent,
+                 row_count=m["row_count"] + new_rows,
+                 batch_id=batch_id, operation=operation,
+                 **({"nonce": nonce} if nonce else {}))
+        m.update(manifest_extra or {})
+        try:
+            return _publish(table_dir, m, "retrying")
+        except VersionConflictError:
+            continue  # someone else published this version: re-read
+    raise VersionConflictError(
+        f"lost the manifest CAS {max_retries + 1} times on {table_dir} — "
+        "contention this hot needs a coordination layer, not more retries"
+    )
 
 
 def write_version(df: DataFrame, table_dir: str,
@@ -459,77 +728,18 @@ def write_version(df: DataFrame, table_dir: str,
         )
     parent = latest_version(table_dir)
     version = (parent or 0) + 1
-    parent_dirs: list[str] = []
-    parent_rows = 0
-    schema_evolved = False
-    #: what the manifest RECORDS as the table's clustering discipline —
-    #: for full snapshots, this write's own layout; for appends onto a
-    #: clustered base, the base's discipline carried forward (round 12):
-    #: the appended dir itself lands unclustered (clustering a trickle
-    #: batch is write churn), so the tail decays — bounded, because
-    #: compact_tail re-applies the recorded discipline when it folds
-    #: and `table cluster` re-establishes it whole-table
-    rec_sort, rec_zorder, rec_zbits = sort_by, zorder_by, zorder_bits
-    if append and parent is not None:
-        pm = read_manifest(table_dir, parent)
-        if pm.get("bucket_by"):
-            # bucketing stays append-refusing: it is a CORRECTNESS
-            # contract (exchange-free joins assume every row hashed
-            # into its bucket file), not a skipping heuristic
-            raise ValueError(
-                "cannot append to a bucketed snapshot; compact() first"
-            )
-        rec_sort = pm.get("sort_by")
-        rec_zorder = pm.get("zorder_by")
-        rec_zbits = pm.get("zorder_bits") or zorder_bits
-        if (pm.get("partition_by") or None) != (partition_by or None):
-            raise ValueError(
-                "append partitioning must match the chain: parent has "
-                f"partition_by={pm.get('partition_by')!r}, append got "
-                f"{partition_by!r}"
-            )
-        evolved = _check_append_schema(pm, df.schema, table_dir)
-        schema_evolved = bool(pm.get("schema_evolved")) or evolved
-        parent_dirs = pm.get("data_dirs") or [f"v={parent:06d}"]
-        parent_rows = pm["row_count"]
-        if stats_for is None:  # a stats-carrying chain keeps collecting
-            stats_for = pm.get("stats_for")
-        if bloom_for is None:  # bloom columns inherit the same way
-            bloom_for = pm.get("bloom_for")
-            if bloom_for:
-                bloom_bits = pm.get("bloom_bits") or bloom_bits
-        pset = set(parent_dirs)
-        parent_stats = {
-            d: s for d, s in (pm.get("col_stats") or {}).items()
-            if d in pset
-        }
-        parent_bloom = {
-            d: b for d, b in (pm.get("bloom") or {}).items()
-            if d in pset
-        }
-        parent_dir_rows = {
-            d: n for d, n in (pm.get("dir_rows") or {}).items()
-            if d in pset
-        }
-        parent_dir_parts = {
-            d: e for d, e in (pm.get("dir_parts") or {}).items()
-            if d in pset
-        }
-        # a DV-carrying parent keeps its deletion vector: dropping it
-        # here would resurrect deleted rows on the very next append
-        parent_dv = _carry_dv(pm, parent_dirs)
-        if evolved and stats_for:
-            _backfill_all_null_stats(
-                parent_stats, parent_dir_rows,
-                {f["name"] for f in pm["schema"]["fields"]},
-                stats_for, dict(df.dtypes),
-            )
-    else:
-        parent_stats = {}
-        parent_bloom = {}
-        parent_dir_rows = {}
-        parent_dir_parts = {}
-        parent_dv = None
+    m = _write_base(table_dir, parent, append, df.schema, partition_by,
+                    stats_for)
+    if not (append and parent is not None):
+        # a fresh snapshot RECORDS its own layout as the discipline; an
+        # append inherits the base's (_derive_manifest)
+        m.update(bucket_by=bucket_by, n_buckets=n_buckets,
+                 sort_by=(sort_by or bucket_by) if bucket_by else sort_by,
+                 zorder_by=zorder_by,
+                 zorder_bits=zorder_bits if zorder_by else None)
+    if bloom_for is not None:  # explicit bloom columns beat the chain's
+        m.update(bloom_for=bloom_for,
+                 bloom_bits=bloom_bits if bloom_for else None)
     data_dir = _data_dir(table_dir, version)
     _reclaim_torn_write(table_dir, version)
     nonce = uuid.uuid4().hex[:12]
@@ -569,90 +779,23 @@ def write_version(df: DataFrame, table_dir: str,
     # exact count from the footers just written — no second data scan
     # (append: parent's manifest count + the new dir's footers)
     new_rows = fsio.parquet_row_count(data_dir)
-    row_count = new_rows + parent_rows
-    data_dirs = parent_dirs + [f"v={version:06d}"] if append else None
-    col_stats = dict(parent_stats)
-    if stats_for:
-        col_stats[f"v={version:06d}"] = _column_stats(df, stats_for)
-    bloom = dict(parent_bloom)
-    if bloom_for:
-        bloom[f"v={version:06d}"] = _dir_bloom(df, bloom_for, bloom_bits)
-    # per-dir exact counts (from the same footer read) — what lets
-    # count_version answer COUNTs over fully-covered dirs from the
-    # manifest alone; inherited down chains like col_stats
-    dir_rows = dict(parent_dir_rows)
-    dir_rows[f"v={version:06d}"] = new_rows
-    # partitioned publishes index their partition subdirs in the
-    # manifest (ONE listing of the dir just written, O(new dir)) so
-    # read_version_pruned probes pay zero FS listings per chain dir
-    dir_parts = None
-    if partition_by:
-        dir_parts = dict(parent_dir_parts)
-        dir_parts[f"v={version:06d}"] = sorted(
-            e for e in fsio.listdir(data_dir) if "=" in e
-        )
-    fsio.mkdirs(_versions_dir(table_dir))
-    manifest = {
-        "version": version,
-        "parent": parent,
-        # publish wall-clock (UTC epoch seconds) — what timestamp
-        # AS-OF time travel resolves against (version_at)
-        "committed_at": time.time(),
-        "row_count": row_count,
-        "schema": df.schema.jsonValue(),
-        "bucket_by": bucket_by,
-        "n_buckets": n_buckets,
-        "sort_by": (sort_by or bucket_by) if bucket_by else rec_sort,
-        "zorder_by": rec_zorder,
-        "zorder_bits": rec_zbits if rec_zorder else None,
-        "partition_by": partition_by,
-        # provenance for exactly-once streaming sinks: which micro-batch
-        # produced this snapshot (see streaming/foreach_batch.py)
-        "batch_id": batch_id,
-        # per-write token: catalog names derive from it, so a recreated
-        # table dir can never alias a previous incarnation's entry
-        "nonce": nonce,
-        # append chains: every data dir (relative) this version reads;
-        # absent/None for full snapshots
-        "data_dirs": data_dirs,
-        # True once an additive append evolved this chain's schema:
-        # readers then merge file schemas and null-pad to the manifest
-        # schema; cleared by any full snapshot (compact/replace)
-        "schema_evolved": schema_evolved or None,
-        # metadata skipping: per-dir min/max for stats_for columns
-        "stats_for": stats_for,
-        "col_stats": col_stats or None,
-        # point-lookup dir skipping: per-dir bloom filters over the
-        # bloom_for columns (read_version_bloom_pruned's source)
-        "bloom_for": bloom_for,
-        "bloom_bits": bloom_bits if bloom_for else None,
-        "bloom": bloom or None,
-        # per-dir exact row counts (count_version's metadata source)
-        "dir_rows": dir_rows,
-        # partition-subdir index per dir (read_version_pruned's
-        # listing-free probe source); None for unpartitioned tables
-        "dir_parts": dir_parts,
-        # deletion vector inherited from a DV-carrying parent on
-        # appends (restricted to the dirs still referenced); full
-        # snapshots start clean — their content was read live
-        "dv": parent_dv,
-        # what produced this commit (DESCRIBE HISTORY's operation
-        # column); callers override via manifest_extra (compact,
-        # streaming sinks, ...)
-        "operation": "append" if append else "replace",
-        **(manifest_extra or {}),
-    }
-    # manifest written last = the publish point; create-exclusive so a
-    # broken single-writer contract fails loudly instead of silently
-    # overwriting another writer's already-published version
-    if not fsio.create_text_exclusive(
-            _manifest_path(table_dir, version), json.dumps(manifest)):
-        raise VersionConflictError(
-            f"version {version} of {table_dir} was published concurrently "
-            "— this table has more than one writer; use "
-            "write_version_concurrent for contending writers"
-        )
-    return version
+    _add_dir(
+        m, f"v={version:06d}", new_rows,
+        _column_stats(df, m["stats_for"]) if m["stats_for"] else None,
+        (_dir_bloom(df, m["bloom_for"], m["bloom_bits"])
+         if m["bloom_for"] else None),
+        _hive_parts(data_dir) if partition_by else None,
+    )
+    if not append:
+        m["data_dirs"] = None  # a full snapshot reads its own dir
+    m.update(version=version, parent=parent,
+             row_count=m["row_count"] + new_rows,
+             batch_id=batch_id, nonce=nonce,
+             operation="append" if append else "replace")
+    m.update(manifest_extra or {})  # callers may override any field
+    return _publish(
+        table_dir, m, "this table has more than one writer; use "
+        "write_version_concurrent for contending writers")
 
 
 def write_version_concurrent(df: DataFrame, table_dir: str,
@@ -711,136 +854,26 @@ def write_version_concurrent(df: DataFrame, table_dir: str,
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staged_dir)
-    new_rows = fsio.parquet_row_count(staged_dir)
-    my_parts = (sorted(e for e in fsio.listdir(staged_dir) if "=" in e)
-                if partition_by else None)
-    fsio.mkdirs(_versions_dir(table_dir))
-    my_stats: dict | None = None  # this writer's agg, computed at most once
-    my_bloom: dict | None = None
-    for _attempt in range(max_retries + 1):
-        parent = latest_version(table_dir)
-        version = (parent or 0) + 1
-        parent_dirs: list[str] = []
-        parent_rows = 0
-        parent_stats: dict = {}
-        parent_dir_rows: dict = {}
-        parent_dir_parts: dict = {}
-        parent_bloom: dict = {}
-        parent_dv = None
-        eff_stats_for = stats_for
-        eff_bloom_for = None
-        eff_bloom_bits = 1 << 17
-        schema_evolved = False
-        rec_sort = None
-        rec_zorder = None
-        rec_zbits = None
-        if append and parent is not None:
-            pm = read_manifest(table_dir, parent)
-            if pm.get("bucket_by"):
-                # bucketing is a correctness contract — append-refusing;
-                # sort/zorder disciplines carry RECORDED (round 12, the
-                # write_version rule): the staged dir is unclustered,
-                # compact_tail's fold re-applies the discipline
-                raise ValueError(
-                    "cannot append to a bucketed snapshot; "
-                    "compact() first"
-                )
-            rec_sort = pm.get("sort_by")
-            rec_zorder = pm.get("zorder_by")
-            rec_zbits = pm.get("zorder_bits")
-            if (pm.get("partition_by") or None) != (partition_by or None):
-                raise ValueError(
-                    "append partitioning must match the chain: parent "
-                    f"has partition_by={pm.get('partition_by')!r}, "
-                    f"append got {partition_by!r}"
-                )
-            evolved = _check_append_schema(pm, df.schema, table_dir)
-            schema_evolved = bool(pm.get("schema_evolved")) or evolved
-            parent_dirs = pm.get("data_dirs") or [f"v={parent:06d}"]
-            parent_rows = pm["row_count"]
-            if eff_stats_for is None:  # chains keep collecting stats
-                eff_stats_for = pm.get("stats_for")
-            eff_bloom_for = pm.get("bloom_for")
-            eff_bloom_bits = pm.get("bloom_bits") or eff_bloom_bits
-            pset = set(parent_dirs)
-            parent_stats = {
-                d: s for d, s in (pm.get("col_stats") or {}).items()
-                if d in pset
-            }
-            parent_dir_rows = {
-                d: n for d, n in (pm.get("dir_rows") or {}).items()
-                if d in pset
-            }
-            parent_dir_parts = {
-                d: e for d, e in (pm.get("dir_parts") or {}).items()
-                if d in pset
-            }
-            parent_bloom = {
-                d: b for d, b in (pm.get("bloom") or {}).items()
-                if d in pset
-            }
-            # same DV inheritance rule as write_version's append path
-            parent_dv = _carry_dv(pm, parent_dirs)
-            if evolved and eff_stats_for:
-                _backfill_all_null_stats(
-                    parent_stats, parent_dir_rows,
-                    {f["name"] for f in pm["schema"]["fields"]},
-                    eff_stats_for, dict(df.dtypes),
-                )
-        col_stats = dict(parent_stats)
-        if eff_stats_for:
-            if my_stats is None or set(my_stats) != set(eff_stats_for):
-                my_stats = _column_stats(df, eff_stats_for)
-            col_stats[staged_rel] = my_stats
-        bloom = dict(parent_bloom)
-        if eff_bloom_for:
-            if my_bloom is None or set(my_bloom) != set(eff_bloom_for):
-                my_bloom = _dir_bloom(df, eff_bloom_for, eff_bloom_bits)
-            bloom[staged_rel] = my_bloom
-        manifest = {
-            "version": version,
-            "parent": parent,
-            # re-stamped per CAS attempt: the time this commit actually
-            # landed, not the time the writer first tried
-            "committed_at": time.time(),
-            "row_count": new_rows + (parent_rows if append else 0),
-            "schema": df.schema.jsonValue(),
-            "bucket_by": None,
-            "n_buckets": None,
-            "sort_by": rec_sort,
-            "zorder_by": rec_zorder,
-            "zorder_bits": rec_zbits if rec_zorder else None,
-            "partition_by": partition_by,
-            "batch_id": batch_id,
-            "nonce": nonce,
-            "data_dirs": (parent_dirs + [staged_rel]) if append
-            else [staged_rel],
-            "schema_evolved": schema_evolved or None,
-            "stats_for": eff_stats_for,
-            "col_stats": col_stats or None,
-            "bloom_for": eff_bloom_for,
-            "bloom_bits": eff_bloom_bits if eff_bloom_for else None,
-            "bloom": bloom or None,
-            "dir_rows": {**(parent_dir_rows if append else {}),
-                         staged_rel: new_rows},
-            "dir_parts": (
-                {**(parent_dir_parts if append else {}),
-                 staged_rel: my_parts}
-                if partition_by else None
-            ),
-            "dv": parent_dv if append else None,
-            "operation": ("append-concurrent" if append
-                          else "replace-concurrent"),
-            **(manifest_extra or {}),
-        }
-        if fsio.create_text_exclusive(
-                _manifest_path(table_dir, version), json.dumps(manifest)):
-            return version
-        # lost the CAS: someone else published this version — re-read
-        # the new head and retry (metadata-only; the staged data stands)
-    raise VersionConflictError(
-        f"lost the manifest CAS {max_retries + 1} times on {table_dir} — "
-        "contention this hot needs a coordination layer, not more retries"
+    mine: dict = {}  # this writer's aggregates, computed at most once
+
+    def dir_meta(m):
+        stats_for, bloom_for = m["stats_for"], m["bloom_for"]
+        if stats_for and set(mine.get("stats", ())) != set(stats_for):
+            mine["stats"] = _column_stats(df, stats_for)
+        if bloom_for and set(mine.get("bloom", ())) != set(bloom_for):
+            mine["bloom"] = _dir_bloom(df, bloom_for, m["bloom_bits"])
+        return (mine["stats"] if stats_for else None,
+                mine["bloom"] if bloom_for else None)
+
+    return _commit_staged(
+        table_dir, staged_rel, df.schema,
+        fsio.parquet_row_count(staged_dir), append,
+        "append-concurrent" if append else "replace-concurrent",
+        batch_id=batch_id, max_retries=max_retries,
+        partition_by=partition_by,
+        parts=_hive_parts(staged_dir) if partition_by else None,
+        stats_for=stats_for, dir_meta=dir_meta, nonce=nonce,
+        manifest_extra=manifest_extra,
     )
 
 
@@ -850,11 +883,12 @@ def commit_staged_dir(table_dir: str, staged_rel: str, schema,
                       max_retries: int = 20,
                       skip_if_batch_id_published: bool = False):
     """CAS-publish a manifest referencing an ALREADY-STAGED data dir —
-    the commit tail of ``write_version_concurrent`` factored out for
-    callers whose data landed outside a Spark write, chiefly the
+    the same commit loop ``write_version_concurrent`` runs after its
+    stage (``_commit_staged``), for callers whose data landed outside
+    a Spark write, chiefly the
     ``mr4ver`` DataSource WRITER (whose ``commit`` hook runs in a
     Python worker with no SparkSession: everything here is manifest
-    file I/O + the CAS). Contract mirrors the concurrent writer:
+    file I/O + the CAS). Contract is the concurrent writer's:
     appends re-chain onto the new head on a lost CAS (commutative),
     replaces bump the version and retry (linearize by version order).
 
@@ -880,98 +914,10 @@ def commit_staged_dir(table_dir: str, staged_rel: str, schema,
     read a pre-winner head has its CAS refused by the winner's
     manifest. Delta re-validates txn versions inside its commit
     conflict loop for the same reason."""
-    for _attempt in range(max_retries + 1):
-        parent = latest_version(table_dir)
-        if skip_if_batch_id_published and batch_id is not None \
-                and batch_id in published_batch_ids(table_dir):
-            return None
-        version = (parent or 0) + 1
-        parent_dirs: list[str] = []
-        parent_rows = 0
-        parent_stats: dict = {}
-        parent_bloom: dict = {}
-        parent_dir_rows: dict = {}
-        parent_dv = None
-        stats_for = None
-        bloom_for = None
-        bloom_bits = None
-        schema_evolved = False
-        rec_sort = rec_zorder = rec_zbits = None
-        if append and parent is not None:
-            pm = read_manifest(table_dir, parent)
-            if pm.get("bucket_by"):
-                raise ValueError(
-                    "cannot append to a bucketed snapshot; "
-                    "compact() first"
-                )
-            if pm.get("partition_by"):
-                raise ValueError(
-                    "the mr4ver writer stages flat files — appending "
-                    "to a hive-partitioned chain needs "
-                    "write_version(partition_by=...)"
-                )
-            evolved = _check_append_schema(pm, schema, table_dir)
-            schema_evolved = bool(pm.get("schema_evolved")) or evolved
-            parent_dirs = pm.get("data_dirs") or [f"v={parent:06d}"]
-            parent_rows = pm["row_count"]
-            stats_for = pm.get("stats_for")
-            bloom_for = pm.get("bloom_for")
-            bloom_bits = pm.get("bloom_bits")
-            pset = set(parent_dirs)
-            parent_stats = {d: s for d, s in
-                            (pm.get("col_stats") or {}).items() if d in pset}
-            parent_bloom = {d: b for d, b in
-                            (pm.get("bloom") or {}).items() if d in pset}
-            parent_dir_rows = {d: n for d, n in
-                               (pm.get("dir_rows") or {}).items()
-                               if d in pset}
-            parent_dv = _carry_dv(pm, parent_dirs)
-            rec_sort = pm.get("sort_by")
-            rec_zorder = pm.get("zorder_by")
-            rec_zbits = pm.get("zorder_bits")
-            if evolved and stats_for:
-                _backfill_all_null_stats(
-                    parent_stats, parent_dir_rows,
-                    {f["name"] for f in pm["schema"]["fields"]},
-                    stats_for,
-                    {f.name: f.dataType.simpleString()
-                     for f in schema.fields},
-                )
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "committed_at": time.time(),
-            "row_count": new_rows + (parent_rows if append else 0),
-            "schema": schema.jsonValue(),
-            "bucket_by": None,
-            "n_buckets": None,
-            "sort_by": rec_sort,
-            "zorder_by": rec_zorder,
-            "zorder_bits": rec_zbits if rec_zorder else None,
-            "partition_by": None,
-            "batch_id": batch_id,
-            "nonce": uuid.uuid4().hex[:12],
-            "data_dirs": (parent_dirs + [staged_rel]) if append
-            else [staged_rel],
-            "schema_evolved": schema_evolved or None,
-            "stats_for": stats_for,
-            "col_stats": parent_stats or None,
-            "bloom_for": bloom_for,
-            "bloom_bits": bloom_bits if bloom_for else None,
-            "bloom": parent_bloom or None,
-            "dir_rows": {**(parent_dir_rows if append else {}),
-                         staged_rel: new_rows},
-            "dir_parts": None,
-            "dv": parent_dv if append else None,
-            "operation": operation,
-        }
-        fsio.mkdirs(_versions_dir(table_dir))
-        if fsio.create_text_exclusive(
-                _manifest_path(table_dir, version), json.dumps(manifest)):
-            return version
-        # lost the CAS: re-read the head and retry (metadata-only)
-    raise VersionConflictError(
-        f"lost the manifest CAS {max_retries + 1} times on {table_dir}"
+    return _commit_staged(
+        table_dir, staged_rel, schema, new_rows, append, operation,
+        batch_id=batch_id, max_retries=max_retries,
+        skip_if_batch_id_published=skip_if_batch_id_published,
     )
 
 
@@ -1005,7 +951,7 @@ def analyze_table(spark: SparkSession, table_dir: str,
             f"{table_dir} records no stats_for/bloom_for and none were "
             "given — nothing to analyze"
         )
-    dirs = pm.get("data_dirs") or [f"v={version:06d}"]
+    dirs = _chain_dirs(pm)
     col_stats = dict(pm.get("col_stats") or {})
     bloom = dict(pm.get("bloom") or {})
     todo = [d for d in dirs
@@ -1020,28 +966,19 @@ def analyze_table(spark: SparkSession, table_dir: str,
             col_stats[d] = _column_stats(df, stats_for)
         if bloom_for and d not in bloom:
             bloom[d] = _dir_bloom(df, bloom_for, bloom_bits)
-    manifest = {
+    v = _publish(table_dir, {
         **_inherited_manifest(pm),
         "version": version + 1,
         "parent": version,
-        "committed_at": time.time(),
         "batch_id": None,
-        "nonce": uuid.uuid4().hex[:12],
         "stats_for": stats_for,
         "col_stats": col_stats or None,
         "bloom_for": bloom_for,
         "bloom_bits": bloom_bits if bloom_for else None,
         "bloom": bloom or None,
         "operation": "analyze",
-    }
-    fsio.mkdirs(_versions_dir(table_dir))
-    if not fsio.create_text_exclusive(
-            _manifest_path(table_dir, version + 1), json.dumps(manifest)):
-        raise VersionConflictError(
-            f"version {version + 1} of {table_dir} was published "
-            "concurrently — analyze again from the new chain head"
-        )
-    return (version + 1, {"analyzed": todo}) if detail else version + 1
+    }, "analyze again from the new chain head")
+    return (v, {"analyzed": todo}) if detail else v
 
 
 def _nullable_deep(dt):
@@ -1771,7 +1708,8 @@ def read_version_bloom_pruned(spark: SparkSession, table_dir: str,
         return ((spark.createDataFrame([], schema),
                  {"missed": len(dirs), "scanned": 0, "unknown": 0})
                 if detail else spark.createDataFrame([], schema))
-    hits = _bloom_probe(spark, manifest, col, vals, dirs)
+    hits = _bloom_hits(manifest, col, {d: vals for d in dirs},
+                       _jvm_bloom_positions(spark, manifest, col))
     kept = [d for d in dirs if hits[d] is not False]
     missed = sum(h is False for h in hits.values())
     unknown = sum(h is None for h in hits.values())
@@ -1784,57 +1722,56 @@ def read_version_bloom_pruned(spark: SparkSession, table_dir: str,
     return (out, info) if detail else out
 
 
-def _bloom_probe(spark: SparkSession, manifest: dict, col: str,
-                 vals: list, dirs: list[str],
-                 vals_by_dir: dict[str, list] | None = None) -> dict:
-    """Probe each chain dir's recorded bloom filter for ``col`` against
-    the non-null ``vals``: True = at least one value may be present,
-    False = PROVABLY none is (skippable), None = no bloom recorded
-    (unknown — scan). Probe positions are computed by one tiny JVM job
-    per bits-variant with the SAME hash expression the writer used
-    (``_bloom_positions_col``), so writer and reader can never disagree
-    on hashing. Shared by the point-lookup read and the copy-on-write
-    classifiers.
-
-    ``vals_by_dir`` (each dir's values ⊆ ``vals``) restricts which
-    values each dir is tested against — the CoW classifiers pass each
-    dir's own [min, max]-window survivors so a value provably outside
-    dir d's range can never bloom-hit d (a cross-dir false positive
-    would force an unnecessary dir rewrite); position computation still
-    runs ONCE over the union."""
-    import base64
-
+def _jvm_bloom_positions(spark: SparkSession, manifest: dict, col: str):
+    """A ``positions(vals, bits, k)`` callable for ``_bloom_hits`` that
+    runs ONE tiny JVM job per call with the SAME hash expression the
+    writer used (``_bloom_positions_col`` — xxhash64 on the
+    manifest-declared column type), so writer and reader can never
+    disagree on hashing."""
     from pyspark.sql.types import StructType
 
-    blooms = manifest.get("bloom") or {}
-    schema = _scan_schema(manifest)
-    # per-(bits)-variant probe positions, one tiny JVM job per variant
-    # (bloom_bits can change across a chain's eras)
-    variants = {
-        ent["bits"] for d in dirs
-        for ent in [(blooms.get(d) or {}).get(col)] if ent
-    }
-    probe_schema = StructType([schema[col]])
-    pos_by_bits: dict[int, list[list[int]]] = {}
-    for bits in variants:
+    def positions(vals: list, bits: int, _k: int) -> list[list[int]]:
         rows = spark.createDataFrame(
-            [(v,) for v in vals], probe_schema
+            [(v,) for v in vals], StructType([_scan_schema(manifest)[col]])
         ).select(_bloom_positions_col(col, bits).alias("ps")).collect()
-        pos_by_bits[bits] = [list(map(int, r["ps"])) for r in rows]
-    idx = {v: i for i, v in enumerate(vals)}
+        return [list(map(int, r["ps"])) for r in rows]
+
+    return positions
+
+
+def _bloom_hits(manifest: dict, col: str, vals_by_dir: dict[str, list],
+                positions) -> dict:
+    """Probe each dir's recorded bloom filter for ``col`` against that
+    dir's non-null values: True = at least one value may be present,
+    False = PROVABLY none is (skippable), None = no bloom recorded or
+    no way to hash the column (unknown — scan). Shared by the
+    point-lookup read and every dir classifier.
+
+    ``positions(vals, bits, k)`` returns each value's bit positions,
+    or None when it has no hash for the column type. It runs ONCE per
+    bits-variant (bloom_bits can change across a chain's eras) over
+    the union of all dirs' values."""
+    import base64
+
+    blooms = manifest.get("bloom") or {}
+    ents = {d: (blooms.get(d) or {}).get(col) for d in vals_by_dir}
+    probe = sorted({v for vals in vals_by_dir.values() for v in vals},
+                   key=lambda x: (str(type(x)), str(x)))
+    pos = {}
+    for bits, k in {(e["bits"], e["k"]) for e in ents.values() if e}:
+        got = positions(probe, bits, k)
+        if got is not None:
+            pos[bits, k] = dict(zip(probe, got))
     out: dict[str, bool | None] = {}
-    for d in dirs:
-        ent = (blooms.get(d) or {}).get(col)
-        if ent is None:
+    for d, vals in vals_by_dir.items():
+        ent = ents[d]
+        by_val = pos.get((ent["bits"], ent["k"])) if ent else None
+        if by_val is None:
             out[d] = None  # no bloom recorded: scan, never skip
             continue
         ba = base64.b64decode(ent["b64"])
-        dvals = vals if vals_by_dir is None else vals_by_dir.get(d, [])
-        out[d] = any(
-            all((ba[p // 8] >> (p % 8)) & 1
-                for p in pos_by_bits[ent["bits"]][idx[v]])
-            for v in dvals
-        )
+        out[d] = any(all((ba[p // 8] >> (p % 8)) & 1 for p in by_val[v])
+                     for v in vals)
     return out
 
 
@@ -2529,7 +2466,7 @@ def _collect_keys(keys, key: str, max_keys: int) -> list:
         rows = keys.select(key).limit(max_keys + 1).collect()
         vals = [r[0] for r in rows if r[0] is not None]
         if len(rows) > max_keys:
-            raise ValueError(
+            raise KeyBudgetError(
                 f"key set exceeds max_keys={max_keys}; a merge/delete "
                 "this wide routes through delete_version_joined/"
                 "merge_version_joined (one-scan join classification, "
@@ -2575,165 +2512,102 @@ def _window_survivors(manifest: dict, key: str, vals: list,
     return windowed
 
 
+def _classify_key_dirs(manifest: dict, key: str, vals: list,
+                       dirs: list[str], positions) -> dict[str, bool]:
+    """Classify each chain dir as True (may hold one of ``vals`` in
+    ``key``) or False (PROVABLY holds none), from the manifest alone:
+    first the recorded [min, max] window discards values outside the
+    dir's range, then the dir's bloom filter (when recorded) must hit
+    at least one survivor. Unknown stats/bloom degrade to True —
+    conservative, never wrong. Nulls in the dir never matter: a null
+    key equals no value.
+
+    ``positions`` hashes values to bloom bit positions (see
+    ``_bloom_hits``): the JVM job of ``_jvm_bloom_positions`` for the
+    copy-on-write classifiers, the pure-Python ``xxh64`` twin for the
+    ``mr4ver`` DataSource's planning-time pruning — one rule for both
+    read surfaces."""
+    # each dir is probed ONLY against its own window survivors — a
+    # value provably outside dir d's [min, max] must not be able to
+    # bloom-hit d and force an unnecessary rewrite
+    need = {d: w for d, w in _window_survivors(manifest, key, vals,
+                                               dirs).items() if w}
+    hits = _bloom_hits(manifest, key, need, positions)
+    return {d: d in need and hits[d] is not False for d in dirs}
+
+
 def _dirs_maybe_holding_keys(spark: SparkSession, manifest: dict,
                              key: str, vals: list,
                              dirs: list[str]) -> dict:
-    """Classify each chain dir as True (may hold one of ``vals`` in
-    ``key``) or False (PROVABLY holds none): first the recorded
-    [min, max] window discards values outside the dir's range, then the
-    dir's bloom filter (when recorded) must hit at least one survivor.
-    Unknown stats/bloom degrade to True — conservative, never wrong.
-    Nulls in the dir never matter: a null key equals no value."""
-    windowed = _window_survivors(manifest, key, vals, dirs)
-    # bloom refinement only for dirs with window survivors; positions
-    # are computed once over the union of surviving values, but each
-    # dir is probed ONLY against its own window survivors — a value
-    # provably outside dir d's [min, max] must not be able to bloom-hit
-    # d and force an unnecessary rewrite
-    need = [d for d in dirs if windowed[d]]
-    probe_vals = sorted({v for d in need for v in windowed[d]},
-                        key=lambda x: (str(type(x)), str(x)))
-    hits = (_bloom_probe(spark, manifest, key, probe_vals, need,
-                         vals_by_dir={d: windowed[d] for d in need})
-            if probe_vals and (manifest.get("bloom") or {}) else
-            {d: None for d in need})
-    out = {}
-    for d in dirs:
-        if not windowed[d]:
-            out[d] = False  # range proof: no key lands in this dir
-        else:
-            out[d] = hits.get(d) is not False  # bloom False = proven out
-    return out
-
-
-def _carry_dv(pm: dict, keep_dirs: list[str]) -> dict | None:
-    """The parent's deletion vector restricted to the surviving dirs:
-    per-dir counts for dropped/rewritten dirs disappear (their files
-    left the manifest, so their sidecar entries can never match a live
-    scan row again — stale rows are harmless and the next compaction
-    retires the sidecar entirely). Returns None when nothing remains,
-    releasing the sidecar to vacuum."""
-    dv = pm.get("dv")
-    if not dv:
-        return None
-    kset = set(keep_dirs)
-    counts = {d: n for d, n in dv["dir_counts"].items()
-              if d in kset and n}
-    if not counts:
-        return None
-    return {"path": dv["path"], "count": sum(counts.values()),
-            "dir_counts": counts}
+    """``_classify_key_dirs`` with bloom positions from the JVM hash —
+    the copy-on-write classifiers' form."""
+    return _classify_key_dirs(manifest, key, vals, dirs,
+                              _jvm_bloom_positions(spark, manifest, key))
 
 
 def _cow_publish(spark: SparkSession, table_dir: str, pm: dict,
                  keep_dirs: list[str], new_df: DataFrame | None,
                  manifest_extra: dict | None = None,
-                 operation: str = "cow") -> int:
+                 operation: str = "cow",
+                 stats_from: DataFrame | None = None) -> int:
     """Publish a copy-on-write commit: ``keep_dirs`` (relative chain
     dirs of the parent) carry into the new version BY REFERENCE — no
     data movement, stats/blooms/row counts/partition indexes carried
-    with them — and ``new_df`` (rewritten survivors and/or inserts;
-    None for pure drops) lands as the one new dir. This is the
+    with them (``_derive_manifest``) — and ``new_df`` (rewritten
+    survivors and/or inserts, or compact_tail's folded tail; None for
+    pure drops) lands as the one new dir. This is the
     file-level rewrite unit of Delta/Iceberg MERGE/DELETE expressed at
     this format's dir granularity: commit cost is O(touched dirs +
     new rows), never O(table). Vacuum's mark-and-sweep already keeps
     any dir a retained manifest references, so shared dirs outlive
-    their original version exactly as appended dirs do."""
+    their original version exactly as appended dirs do.
+
+    The new dir's stats/blooms come from ``stats_from`` when given (the
+    fold's own rows), else from a read-back of the files just written
+    — exactly what landed, one bounded aggregate per contract, the
+    same cost class as write_version's."""
     version = pm["version"] + 1
-    data_rel = f"v={version:06d}"
     data_dir = _data_dir(table_dir, version)
     _reclaim_torn_write(table_dir, version)
-    part_by = pm.get("partition_by") or None
+    m = _derive_manifest(pm, keep_dirs)
     if new_df is None and not keep_dirs:
         # everything deleted: the empty table still needs a readable
         # snapshot — a schema-only dir (plain writes keep a schema
         # file; partitioned empty writes are skipped by the chain scan)
         new_df = spark.createDataFrame([], _scan_schema(pm))
-    wrote = False
     new_rows = 0
     if new_df is not None:
         writer = (_conform_to_schema(new_df, pm)
                   .write.mode("errorifexists"))
-        if part_by:
-            writer = writer.partitionBy(*part_by)
+        if m["partition_by"]:
+            writer = writer.partitionBy(*m["partition_by"])
         writer.parquet(data_dir)
         new_rows = fsio.parquet_row_count(data_dir)
         if new_rows == 0 and keep_dirs:
             # an all-dropped rewrite adds nothing: don't grow the chain
             fsio.delete(data_dir, recursive=True)
         else:
-            wrote = True
-    kset = set(keep_dirs)
-    col_stats = {d: s for d, s in (pm.get("col_stats") or {}).items()
-                 if d in kset}
-    bloom = {d: b for d, b in (pm.get("bloom") or {}).items() if d in kset}
-    dir_rows = {d: n for d, n in (pm.get("dir_rows") or {}).items()
-                if d in kset}
-    dir_parts = {d: e for d, e in (pm.get("dir_parts") or {}).items()
-                 if d in kset}
-    if wrote and new_rows > 0:
-        # stats/bloom for the new dir recompute from the files just
-        # written (read-back, exactly what landed — one bounded
-        # aggregate per contract, same cost class as write_version's)
-        back = spark.read.parquet(data_dir)
-        if pm.get("stats_for"):
-            col_stats[data_rel] = _column_stats(back, pm["stats_for"])
-        if pm.get("bloom_for"):
-            bloom[data_rel] = _dir_bloom(
-                back, pm["bloom_for"], pm.get("bloom_bits") or (1 << 17))
-    if wrote:
-        dir_rows[data_rel] = new_rows
-        if part_by:
-            dir_parts[data_rel] = sorted(
-                e for e in fsio.listdir(data_dir) if "=" in e)
-    dv = _carry_dv(pm, keep_dirs)
-    kept_live = sum(
-        (dir_rows[d] if d in dir_rows
+            stats = bloom = None
+            if new_rows:
+                src = (stats_from if stats_from is not None
+                       else spark.read.parquet(data_dir))
+                if m["stats_for"]:
+                    stats = _column_stats(src, m["stats_for"])
+                if m["bloom_for"]:
+                    bloom = _dir_bloom(src, m["bloom_for"], m["bloom_bits"])
+            _add_dir(m, f"v={version:06d}", new_rows, stats, bloom,
+                     _hive_parts(data_dir) if m["partition_by"] else None)
+    kept_rows = sum(
+        (m["dir_rows"][d] if d in m["dir_rows"]
          else fsio.parquet_row_count(os.path.join(table_dir, d)))
         for d in keep_dirs
-    ) - (sum((dv or {}).get("dir_counts", {}).values()) if dv else 0)
-    manifest = {
-        "version": version,
-        "parent": pm["version"],
-        "committed_at": time.time(),
-        "row_count": kept_live + new_rows,
-        "schema": pm["schema"],
-        "bucket_by": None,
-        "n_buckets": None,
-        # the recorded clustering discipline survives dir-granular
-        # mutation (rewritten dirs decay like appended ones; the fold
-        # re-establishes) — round 12
-        "sort_by": pm.get("sort_by"),
-        "zorder_by": pm.get("zorder_by"),
-        "zorder_bits": (pm.get("zorder_bits")
-                        if pm.get("zorder_by") else None),
-        "partition_by": part_by,
-        "batch_id": None,
-        "nonce": uuid.uuid4().hex[:12],
-        "data_dirs": keep_dirs + ([data_rel] if wrote else []),
-        # the new dir is written manifest-conformed: the evolved flag
-        # survives only while possibly-pre-evolution dirs remain
-        "schema_evolved": (pm.get("schema_evolved")
-                           if keep_dirs else None),
-        "stats_for": pm.get("stats_for"),
-        "col_stats": col_stats or None,
-        "bloom_for": pm.get("bloom_for"),
-        "bloom_bits": pm.get("bloom_bits") if pm.get("bloom_for") else None,
-        "bloom": bloom or None,
-        "dir_rows": dir_rows,
-        "dir_parts": (dir_parts or None) if part_by else None,
-        "dv": dv,
-        "operation": operation,
-        **(manifest_extra or {}),
-    }
-    fsio.mkdirs(_versions_dir(table_dir))
-    if not fsio.create_text_exclusive(
-            _manifest_path(table_dir, version), json.dumps(manifest)):
-        raise VersionConflictError(
-            f"version {version} of {table_dir} was published concurrently "
-            "— recompute the copy-on-write commit from the new chain head"
-        )
-    return version
+    )
+    m.update(version=version, parent=pm["version"],
+             row_count=kept_rows - (m["dv"] or {}).get("count", 0) + new_rows,
+             batch_id=None, operation=operation)
+    m.update(manifest_extra or {})
+    return _publish(table_dir, m,
+                    "recompute the commit from the new chain head")
 
 
 def _delete_cond(key: str | None, vals: list | None, predicate,
@@ -2758,6 +2632,130 @@ def _delete_cond(key: str | None, vals: list | None, predicate,
         if cond is None:
             raise ValueError("where bounds must not all be None")
     return cond.eqNullSafe(F.lit(True))
+
+
+def _cow_dml(spark: SparkSession, table_dir: str, verb: str, joined: bool,
+             keys=None, key: str | None = None, where: dict | None = None,
+             assignments: dict | None = None,
+             updates: DataFrame | None = None, detail: bool = False,
+             max_keys: int = 1_000_000,
+             manifest_extra: dict | None = None):
+    """The one body of the six copy-on-write DML functions —
+    ``{delete, update, merge}_version_{pruned, joined}``.
+
+    1. Prologue: the latest version's manifest, ``_require_plain_table``,
+       and the key/column checks.
+    2. Classify the chain dirs into untouched (carried by reference),
+       rewritten, and — for a range delete only — dropped whole.
+       ``pruned`` classifies from the manifest: keys by
+       ``_dirs_maybe_holding_keys`` (driver-bounded by ``max_keys``),
+       ``where`` ranges by ``_range_relation``. ``joined`` classifies
+       by ``_dirs_holding_keys_joined``'s one-scan LeftSemi (exact,
+       keys never collected).
+    3. Scan the rewrite dirs live (deletion vectors honored) and apply
+       the verb: delete drops matching rows, update rewrites
+       ``assignments`` on them (evaluated against the OLD row, cast
+       back to the column type), merge drops them and unions
+       ``updates`` in. Pruned paths match by a definitely-TRUE
+       ``isin``/range condition, joined paths by joins against the
+       key set.
+    4. ``_cow_publish`` under the verb's operation string."""
+    from pyspark.sql import Column
+    from pyspark.sql import functions as F
+
+    what = f"{verb}_version_{'joined' if joined else 'pruned'}"
+    if not joined and (key is None) == (where is None):
+        raise ValueError(
+            f"{what} takes either keys+key or where={{col: (lower, upper)}}"
+        )
+    version = latest_version(table_dir)
+    if version is None:
+        raise FileNotFoundError(f"no published versions in {table_dir}")
+    pm = read_manifest(table_dir, version)
+    _require_plain_table(pm, table_dir, what)
+    fields = {f["name"] for f in pm["schema"]["fields"]}
+    if key is not None and key not in fields:
+        raise ValueError(f"{key!r} is not a column of {table_dir}")
+    unknown = set(assignments or ()) - fields
+    if unknown:
+        raise ValueError(
+            f"update sets columns {sorted(unknown)} the table lacks — "
+            "evolve the schema with an additive append first"
+        )
+    extra = set(updates.columns if updates is not None else ()) - fields
+    if extra:
+        raise ValueError(
+            f"updates carry columns {sorted(extra)} the table lacks — "
+            "evolve the schema with an additive append first"
+        )
+    dirs = _chain_dirs(pm)
+    key_src = updates if updates is not None else keys
+    dropped: list[str] = []  # keys can never prove a WHOLE dir gone
+    if joined:
+        keyset = key_src.select(key).dropna().distinct()
+        rewrite = _dirs_holding_keys_joined(
+            spark, pm, table_dir, keyset, key, dirs)
+    elif key is not None:
+        vals = _collect_keys(key_src, key, max_keys)
+        holding = _dirs_maybe_holding_keys(spark, pm, key, vals, dirs)
+        rewrite = [d for d in dirs if holding[d]]
+        cond = _delete_cond(key, vals, None, None)
+    else:
+        stats = pm.get("col_stats") or {}
+        dir_rows = pm.get("dir_rows") or {}
+        rels = {d: _range_relation(stats.get(d), dir_rows.get(d), where)
+                for d in dirs}
+        # every row of a "full" dir provably matches: a delete drops it
+        # whole with zero data movement (the retention shape), an
+        # update must still rewrite it
+        drop_full = verb == "delete"
+        dropped = [d for d in dirs if drop_full and rels[d] == "full"]
+        rewrite = [d for d in dirs if rels[d] == "partial"
+                   or (rels[d] == "full" and not drop_full)]
+        cond = _delete_cond(None, None, None, where)
+    moved = set(rewrite) | set(dropped)
+    untouched = [d for d in dirs if d not in moved]
+    new_df = None
+    if rewrite:
+        scan = _scan_dirs(
+            spark, pm, [os.path.join(table_dir, d) for d in rewrite],
+            table_dir,
+        )
+        if verb == "update":
+            if joined:
+                flag = "__mr4_upd_hit"
+                rows = scan.join(
+                    keyset.withColumn(flag, F.lit(True)), key, "left")
+                hit = F.coalesce(F.col(flag), F.lit(False))
+            else:
+                rows, hit = scan, cond
+            types = dict(scan.dtypes)
+
+            def _new_val(c):
+                v = assignments[c]
+                return v if isinstance(v, Column) else F.lit(v)
+
+            new_df = rows.select(*[
+                (F.when(hit, _new_val(c)).otherwise(F.col(c))
+                 .cast(types[c]).alias(c))
+                if c in assignments else F.col(c)
+                for c in scan.columns
+            ])
+        else:  # delete, and merge's survivors
+            new_df = (scan.join(keyset, key, "left_anti") if joined
+                      else scan.filter(~cond))
+    if verb == "merge":
+        # every update row — matched (update) or not (insert) — lands
+        # in the one new dir
+        ups = _conform_to_schema(updates, pm)
+        new_df = ups if new_df is None else new_df.unionByName(ups)
+    v = _cow_publish(spark, table_dir, pm, untouched, new_df,
+                     manifest_extra=manifest_extra,
+                     operation=f"{verb}-cow" + ("-joined" if joined else ""))
+    info = {"untouched": len(untouched), "rewritten": len(rewrite)}
+    if verb == "delete":
+        info = {"dropped": len(dropped), **info}
+    return (v, info) if detail else v
 
 
 def delete_version_pruned(spark: SparkSession, table_dir: str,
@@ -2792,47 +2790,8 @@ def delete_version_pruned(spark: SparkSession, table_dir: str,
     the commit-cost proof. At 100 TB: commit cost is O(rewritten dirs),
     and the common retention shape is pure manifest arithmetic.
     """
-    from pyspark.sql import functions as F
-
-    if (key is None) == (where is None):
-        raise ValueError(
-            "delete_version_pruned takes either keys+key or "
-            "where={col: (lower, upper)}"
-        )
-    version = latest_version(table_dir)
-    if version is None:
-        raise FileNotFoundError(f"no published versions in {table_dir}")
-    pm = read_manifest(table_dir, version)
-    _require_plain_table(pm, table_dir, "delete_version_pruned")
-    dirs = pm.get("data_dirs") or [f"v={version:06d}"]
-    stats = pm.get("col_stats") or {}
-    dir_rows = pm.get("dir_rows") or {}
-    vals = None
-    if key is not None:
-        vals = _collect_keys(keys, key, max_keys)
-        holding = _dirs_maybe_holding_keys(spark, pm, key, vals, dirs)
-        dropped: list[str] = []  # keys can never prove a WHOLE dir gone
-        untouched = [d for d in dirs if not holding[d]]
-        rewrite = [d for d in dirs if holding[d]]
-        survivor = F.coalesce(~F.col(key).isin(vals), F.lit(True))
-    else:
-        rels = {d: _range_relation(stats.get(d), dir_rows.get(d), where)
-                for d in dirs}
-        dropped = [d for d, r in rels.items() if r == "full"]
-        untouched = [d for d, r in rels.items() if r == "miss"]
-        rewrite = [d for d, r in rels.items() if r == "partial"]
-        survivor = ~_delete_cond(None, None, None, where)
-    new_df = None
-    if rewrite:
-        new_df = _scan_dirs(
-            spark, pm, [os.path.join(table_dir, d) for d in rewrite],
-            table_dir,
-        ).filter(survivor)
-    v = _cow_publish(spark, table_dir, pm, untouched, new_df,
-                     operation="delete-cow")
-    info = {"dropped": len(dropped), "untouched": len(untouched),
-            "rewritten": len(rewrite)}
-    return (v, info) if detail else v
+    return _cow_dml(spark, table_dir, "delete", False, keys=keys, key=key,
+                    where=where, detail=detail, max_keys=max_keys)
 
 
 def update_version_pruned(spark: SparkSession, table_dir: str,
@@ -2853,66 +2812,9 @@ def update_version_pruned(spark: SparkSession, table_dir: str,
     partition column is legal: the rewritten dir re-partitions its
     rows under the chain's scheme. Returns the new version; with
     ``detail=True``, ``(version, {"untouched", "rewritten"})``."""
-    from pyspark.sql import functions as F
-
-    if (key is None) == (where is None):
-        raise ValueError(
-            "update_version_pruned takes either keys+key or "
-            "where={col: (lower, upper)}"
-        )
-    version = latest_version(table_dir)
-    if version is None:
-        raise FileNotFoundError(f"no published versions in {table_dir}")
-    pm = read_manifest(table_dir, version)
-    _require_plain_table(pm, table_dir, "update_version_pruned")
-    fields = {f["name"] for f in pm["schema"]["fields"]}
-    unknown = set(assignments) - fields
-    if unknown:
-        raise ValueError(
-            f"update sets columns {sorted(unknown)} the table lacks — "
-            "evolve the schema with an additive append first"
-        )
-    dirs = pm.get("data_dirs") or [f"v={version:06d}"]
-    if key is not None:
-        vals = _collect_keys(keys, key, max_keys)
-        holding = _dirs_maybe_holding_keys(spark, pm, key, vals, dirs)
-        rewrite = [d for d in dirs if holding[d]]
-        cond = _delete_cond(key, vals, None, None)
-    else:
-        stats = pm.get("col_stats") or {}
-        dir_rows = pm.get("dir_rows") or {}
-        rewrite = [
-            d for d in dirs
-            if _range_relation(stats.get(d), dir_rows.get(d), where)
-            != "miss"
-        ]
-        cond = _delete_cond(None, None, None, where)
-    rewrite_set = set(rewrite)
-    untouched = [d for d in dirs if d not in rewrite_set]
-    new_df = None
-    if rewrite:
-        from pyspark.sql import Column
-
-        scan = _scan_dirs(
-            spark, pm, [os.path.join(table_dir, d) for d in rewrite],
-            table_dir,
-        )
-        schema_types = dict(scan.dtypes)
-
-        def _new_val(c):
-            v = assignments[c]
-            return v if isinstance(v, Column) else F.lit(v)
-
-        new_df = scan.select(*[
-            (F.when(cond, _new_val(c)).otherwise(F.col(c))
-             .cast(schema_types[c]).alias(c))
-            if c in assignments else F.col(c)
-            for c in scan.columns
-        ])
-    v = _cow_publish(spark, table_dir, pm, untouched, new_df,
-                     operation="update-cow")
-    info = {"untouched": len(untouched), "rewritten": len(rewrite)}
-    return (v, info) if detail else v
+    return _cow_dml(spark, table_dir, "update", False, keys=keys, key=key,
+                    where=where, assignments=assignments, detail=detail,
+                    max_keys=max_keys)
 
 
 def merge_version_pruned(spark: SparkSession, table_dir: str,
@@ -2934,39 +2836,9 @@ def merge_version_pruned(spark: SparkSession, table_dir: str,
     broadcast-scale merges are the CoW sweet spot; wider merges
     rewrite via ``upsert_version``. Returns the new version; with
     ``detail=True``, ``(version, {"untouched", "rewritten"})``."""
-    from pyspark.sql import functions as F
-
-    version = latest_version(table_dir)
-    if version is None:
-        raise FileNotFoundError(f"no published versions in {table_dir}")
-    pm = read_manifest(table_dir, version)
-    _require_plain_table(pm, table_dir, "merge_version_pruned")
-    fields = {f["name"] for f in pm["schema"]["fields"]}
-    extra = set(updates.columns) - fields
-    if key not in fields:
-        raise ValueError(f"{key!r} is not a column of {table_dir}")
-    if extra:
-        raise ValueError(
-            f"updates carry columns {sorted(extra)} the table lacks — "
-            "evolve the schema with an additive append first"
-        )
-    dirs = pm.get("data_dirs") or [f"v={version:06d}"]
-    vals = _collect_keys(updates, key, max_keys)
-    holding = _dirs_maybe_holding_keys(spark, pm, key, vals, dirs)
-    untouched = [d for d in dirs if not holding[d]]
-    rewrite = [d for d in dirs if holding[d]]
-    new_df = _conform_to_schema(updates, pm)
-    if rewrite:
-        survivors = _scan_dirs(
-            spark, pm, [os.path.join(table_dir, d) for d in rewrite],
-            table_dir,
-        ).filter(F.coalesce(~F.col(key).isin(vals), F.lit(True)))
-        new_df = survivors.unionByName(new_df)
-    v = _cow_publish(spark, table_dir, pm, untouched, new_df,
-                     manifest_extra=manifest_extra,
-                     operation="merge-cow")
-    info = {"untouched": len(untouched), "rewritten": len(rewrite)}
-    return (v, info) if detail else v
+    return _cow_dml(spark, table_dir, "merge", False, key=key,
+                    updates=updates, detail=detail, max_keys=max_keys,
+                    manifest_extra=manifest_extra)
 
 
 def _dirs_holding_keys_joined(spark: SparkSession, pm: dict,
@@ -3045,32 +2917,8 @@ def delete_version_joined(spark: SparkSession, table_dir: str,
     WRITE of a full-rewrite delete. Same SQL DELETE semantics (null
     keys never match, DV rows honored and carried). Returns the new
     version; ``detail=True`` adds the dir tallies."""
-    from pyspark.sql import functions as F
-
-    version = latest_version(table_dir)
-    if version is None:
-        raise FileNotFoundError(f"no published versions in {table_dir}")
-    pm = read_manifest(table_dir, version)
-    _require_plain_table(pm, table_dir, "delete_version_joined")
-    if key not in {f["name"] for f in pm["schema"]["fields"]}:
-        raise ValueError(f"{key!r} is not a column of {table_dir}")
-    dirs = pm.get("data_dirs") or [f"v={version:06d}"]
-    keyset = keys.select(key).dropna().distinct()
-    rewrite = _dirs_holding_keys_joined(
-        spark, pm, table_dir, keyset, key, dirs)
-    rset = set(rewrite)
-    untouched = [d for d in dirs if d not in rset]
-    new_df = None
-    if rewrite:
-        new_df = _scan_dirs(
-            spark, pm, [os.path.join(table_dir, d) for d in rewrite],
-            table_dir,
-        ).join(keyset, key, "left_anti")
-    v = _cow_publish(spark, table_dir, pm, untouched, new_df,
-                     operation="delete-cow-joined")
-    info = {"dropped": 0, "untouched": len(untouched),
-            "rewritten": len(rewrite)}
-    return (v, info) if detail else v
+    return _cow_dml(spark, table_dir, "delete", True, keys=keys, key=key,
+                    detail=detail)
 
 
 def update_version_joined(spark: SparkSession, table_dir: str,
@@ -3085,54 +2933,8 @@ def update_version_joined(spark: SparkSession, table_dir: str,
     UPDATE semantics — Column expressions or literals, cast back to
     the column's type). Null keys never match. Returns the new
     version; ``detail=True`` adds the dir tallies."""
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-
-    version = latest_version(table_dir)
-    if version is None:
-        raise FileNotFoundError(f"no published versions in {table_dir}")
-    pm = read_manifest(table_dir, version)
-    _require_plain_table(pm, table_dir, "update_version_joined")
-    fields = {f["name"] for f in pm["schema"]["fields"]}
-    if key not in fields:
-        raise ValueError(f"{key!r} is not a column of {table_dir}")
-    unknown = set(assignments) - fields
-    if unknown:
-        raise ValueError(
-            f"update sets columns {sorted(unknown)} the table lacks — "
-            "evolve the schema with an additive append first"
-        )
-    dirs = pm.get("data_dirs") or [f"v={version:06d}"]
-    keyset = keys.select(key).dropna().distinct()
-    rewrite = _dirs_holding_keys_joined(
-        spark, pm, table_dir, keyset, key, dirs)
-    rset = set(rewrite)
-    untouched = [d for d in dirs if d not in rset]
-    new_df = None
-    if rewrite:
-        scan = _scan_dirs(
-            spark, pm, [os.path.join(table_dir, d) for d in rewrite],
-            table_dir,
-        )
-        flag = "__mr4_upd_hit"
-        flagged = scan.join(
-            keyset.withColumn(flag, F.lit(True)), key, "left")
-        schema_types = dict(scan.dtypes)
-
-        def _new_val(c):
-            v = assignments[c]
-            return v if isinstance(v, Column) else F.lit(v)
-
-        new_df = flagged.select(*[
-            (F.when(F.coalesce(F.col(flag), F.lit(False)), _new_val(c))
-             .otherwise(F.col(c)).cast(schema_types[c]).alias(c))
-            if c in assignments else F.col(c)
-            for c in scan.columns
-        ])
-    v = _cow_publish(spark, table_dir, pm, untouched, new_df,
-                     operation="update-cow-joined")
-    info = {"untouched": len(untouched), "rewritten": len(rewrite)}
-    return (v, info) if detail else v
+    return _cow_dml(spark, table_dir, "update", True, keys=keys, key=key,
+                    assignments=assignments, detail=detail)
 
 
 def merge_version_joined(spark: SparkSession, table_dir: str,
@@ -3149,38 +2951,9 @@ def merge_version_joined(spark: SparkSession, table_dir: str,
     ``upsert_version``/``merge_version_pruned`` by the parity tests
     (updates win on key collision). Returns the new version;
     ``detail=True`` adds the dir tallies."""
-    version = latest_version(table_dir)
-    if version is None:
-        raise FileNotFoundError(f"no published versions in {table_dir}")
-    pm = read_manifest(table_dir, version)
-    _require_plain_table(pm, table_dir, "merge_version_joined")
-    fields = {f["name"] for f in pm["schema"]["fields"]}
-    if key not in fields:
-        raise ValueError(f"{key!r} is not a column of {table_dir}")
-    extra = set(updates.columns) - fields
-    if extra:
-        raise ValueError(
-            f"updates carry columns {sorted(extra)} the table lacks — "
-            "evolve the schema with an additive append first"
-        )
-    dirs = pm.get("data_dirs") or [f"v={version:06d}"]
-    keyset = updates.select(key).dropna().distinct()
-    rewrite = _dirs_holding_keys_joined(
-        spark, pm, table_dir, keyset, key, dirs)
-    rset = set(rewrite)
-    untouched = [d for d in dirs if d not in rset]
-    new_df = _conform_to_schema(updates, pm)
-    if rewrite:
-        survivors = _scan_dirs(
-            spark, pm, [os.path.join(table_dir, d) for d in rewrite],
-            table_dir,
-        ).join(keyset, key, "left_anti")
-        new_df = survivors.unionByName(new_df)
-    v = _cow_publish(spark, table_dir, pm, untouched, new_df,
-                     manifest_extra=manifest_extra,
-                     operation="merge-cow-joined")
-    info = {"untouched": len(untouched), "rewritten": len(rewrite)}
-    return (v, info) if detail else v
+    return _cow_dml(spark, table_dir, "merge", True, key=key,
+                    updates=updates, detail=detail,
+                    manifest_extra=manifest_extra)
 
 
 def delete_version_dv(spark: SparkSession, table_dir: str,
@@ -3215,28 +2988,16 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
         raise FileNotFoundError(f"no published versions in {table_dir}")
     pm = read_manifest(table_dir, version)
     _require_plain_table(pm, table_dir, "delete_version_dv")
-    dirs_abs = [os.path.join(table_dir, d)
-                for d in pm.get("data_dirs") or [f"v={version:06d}"]]
     vals = _collect_keys(keys, key, max_keys) if key is not None else None
-    # live scan WITH the (file, pos) join key still attached
-    if pm.get("partition_by"):
-        scan = _scan_partitioned_chain(spark, dirs_abs, pm, with_pos=True)
-    else:
-        paths = [p for p in dirs_abs if fsio.has_parquet(p)]
-        if paths:
-            reader = spark.read
-            if pm.get("schema_evolved"):
-                reader = reader.option("mergeSchema", "true")
-            scan = _conform_to_schema(_with_pos(reader.parquet(*paths)),
-                                      pm, keep=_DV_COLS)
-        else:
-            scan = None
+    # live scan (rows already deleted excluded) WITH the (file, pos)
+    # join key still attached
+    scan = _scan_dirs(
+        spark, pm, [os.path.join(table_dir, d) for d in _chain_dirs(pm)],
+        table_dir, keep_pos=True)
     old_dv = pm.get("dv")
     old_total = old_dv["count"] if old_dv else 0
     new_deletes = None
-    if scan is not None:
-        if old_dv:
-            scan = _anti_dv(scan, _dv_frame(spark, table_dir, pm))
+    if _DV_COLS[0] in scan.columns:  # an all-empty chain deletes nothing
         new_deletes = scan.filter(
             _delete_cond(key, vals, predicate, where)
         ).select(F.col(_DV_COLS[0]).alias("file"),
@@ -3250,13 +3011,11 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
             # rows of dirs a copy-on-write commit has since rewritten
             # out of the chain (harmless to reads, but they'd inflate
             # the per-dir counts the row_count arithmetic trusts)
-            live = [d for d in pm.get("data_dirs")
-                    or [f"v={version:06d}"]]
             new_deletes = new_deletes.unionByName(
                 spark.read.parquet(
                     os.path.join(table_dir, old_dv["path"])
                 ).select("file", "pos")
-                .filter(_dv_dir_col().isin(live))
+                .filter(_dv_dir_col().isin(_chain_dirs(pm)))
             )
         nonce = uuid.uuid4().hex[:12]
         dv_rel = os.path.join("_dv", f"{nonce}.parquet")
@@ -3281,27 +3040,16 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
         dv = old_dv
         total = old_total
     n_new = total - old_total
-    manifest = {
+    v = _publish(table_dir, {
         **_inherited_manifest(pm),
         "version": version + 1,
         "parent": version,
-        "committed_at": time.time(),
-        "nonce": uuid.uuid4().hex[:12],
         "batch_id": None,
         "row_count": pm["row_count"] - n_new,
         "dv": dv,
         "operation": "delete-dv",
-    }
-    fsio.mkdirs(_versions_dir(table_dir))
-    if not fsio.create_text_exclusive(
-            _manifest_path(table_dir, version + 1), json.dumps(manifest)):
-        raise VersionConflictError(
-            f"version {version + 1} of {table_dir} was published "
-            "concurrently — recompute the deletion vector from the new "
-            "chain head"
-        )
-    return ((version + 1, {"deleted": n_new, "dv_rows": total})
-            if detail else version + 1)
+    }, "recompute the deletion vector from the new chain head")
+    return (v, {"deleted": n_new, "dv_rows": total}) if detail else v
 
 
 def restore_version(table_dir: str, version: int) -> int:
@@ -3325,26 +3073,15 @@ def restore_version(table_dir: str, version: int) -> int:
             "re-publish read_version(..., version=target) instead"
         )
     latest = latest_version(table_dir)
-    new_version = latest + 1
-    manifest = {
+    return _publish(table_dir, {
         **_inherited_manifest(tm),
-        "version": new_version,
+        "version": latest + 1,
         "parent": latest,
-        "committed_at": time.time(),
-        "nonce": uuid.uuid4().hex[:12],
         "batch_id": None,
-        "data_dirs": tm.get("data_dirs") or [f"v={version:06d}"],
+        "data_dirs": _chain_dirs(tm),
         "restored_from": version,
         "operation": "restore",
-    }
-    fsio.mkdirs(_versions_dir(table_dir))
-    if not fsio.create_text_exclusive(
-            _manifest_path(table_dir, new_version), json.dumps(manifest)):
-        raise VersionConflictError(
-            f"version {new_version} of {table_dir} was published "
-            "concurrently — restore again from the new chain head"
-        )
-    return new_version
+    }, "restore again from the new chain head")
 
 
 def publish_checked(df: DataFrame, table_dir: str, expectations: dict,
@@ -3501,32 +3238,18 @@ def compact_tail(spark: SparkSession, table_dir: str,
     dv_in_tail = bool(dv) and any(
         dv["dir_counts"].get(d) for d in tail)
     rows = None
-    if dv_in_tail:
+    if any(fsio.has_parquet(p) for p in tail_abs):
         # deletion-vector rows in the tail FOLD AWAY here: the live
         # scan (DV anti-join applied) is what lands in the folded dir,
         # so the sidecar debt for these dirs is retired by the same
         # maintenance pass that bounds the chain
-        live = _scan_dirs(spark, manifest, tail_abs, table_dir)
-        rows = (live.repartition(*part_by) if part_by
-                else live.coalesce(target_files or 1))
-    elif part_by:
-        rows = _scan_partitioned_chain(spark, tail_abs, manifest)
-        if rows is not None:
-            # one file per partition value in the folded dir (not
-            # shuffle-tasks x values tiny files) — file count is what
-            # the chain's listing cost scales with
-            rows = rows.repartition(*part_by)
-    else:
-        tail_paths = [p for p in tail_abs if fsio.has_parquet(p)]
-        if tail_paths:
-            reader = spark.read
-            if manifest.get("schema_evolved"):
-                reader = reader.option("mergeSchema", "true")
-                rows = _conform_to_schema(
-                    reader.parquet(*tail_paths), manifest
-                ).coalesce(target_files or 1)
-            else:
-                rows = reader.parquet(*tail_paths).coalesce(target_files or 1)
+        rows = _scan_dirs(spark, manifest, tail_abs,
+                          table_dir if dv_in_tail else None)
+        # partitioned: one file per partition value in the folded dir
+        # (not shuffle-tasks x values tiny files) — file count is what
+        # the chain's listing cost scales with
+        rows = (rows.repartition(*part_by) if part_by
+                else rows.coalesce(target_files or 1))
     # layout-preserving fold (round 12): when the chain RECORDS a
     # clustering discipline (a sort_by/zorder_by base that trickle
     # appends carried forward), re-apply it to the folded dir — the
@@ -3568,93 +3291,20 @@ def compact_tail(spark: SparkSession, table_dir: str,
             else:
                 rows = (rows.repartitionByRange(n, *sort_disc)
                         .sortWithinPartitions(*sort_disc))
-    new_version = version + 1
-    data_dir = _data_dir(table_dir, new_version)
-    _reclaim_torn_write(table_dir, new_version)
-    if rows is not None:
-        writer = rows.write.mode("errorifexists")
-        if part_by:
-            writer = writer.partitionBy(*part_by)
-        writer.parquet(data_dir)
     # a zero-row tail (partitioned appends keep no schema-only file)
     # writes no folded dir and must not LIST one: the manifest's
     # data_dirs only ever names dirs that exist on disk
-    new_dirs = base + ([f"v={new_version:06d}"] if rows is not None else [])
-    if not new_dirs:
+    if rows is None and not base:
         return None  # keep_base=0 over an all-empty chain: nothing real
-    # stats carry through the fold: base dirs keep their entries, the
-    # folded dir gets a recomputed one (same content as the tail it
+    # a keep-these-dirs-plus-one-new-dir commit: base dirs carry their
+    # stats/blooms/counts/DV entries by reference; the folded dir gets
+    # stats recomputed from the fold (same content as the tail it
     # replaced, but recomputed rather than min/max-merged so the fold
-    # can only tighten after deletes ever land in a chain)
-    bset = set(base)
-    col_stats = {
-        d: s for d, s in (manifest.get("col_stats") or {}).items()
-        if d in bset
-    }
-    if manifest.get("stats_for") and rows is not None:
-        col_stats[f"v={new_version:06d}"] = _column_stats(
-            rows, manifest["stats_for"]
-        )
-    bloom = {
-        d: b for d, b in (manifest.get("bloom") or {}).items()
-        if d in bset
-    }
-    if manifest.get("bloom_for") and rows is not None:
-        bloom[f"v={new_version:06d}"] = _dir_bloom(
-            rows, manifest["bloom_for"],
-            manifest.get("bloom_bits") or (1 << 17),
-        )
-    # per-dir counts follow the same carry rule as col_stats: base dirs
-    # keep theirs, the folded dir gets an exact footer count (O(files)
-    # of the dir just written, never a data scan)
-    dir_rows = {
-        d: n for d, n in (manifest.get("dir_rows") or {}).items()
-        if d in bset
-    }
-    dir_parts = {
-        d: e for d, e in (manifest.get("dir_parts") or {}).items()
-        if d in bset
-    }
-    if rows is not None:
-        dir_rows[f"v={new_version:06d}"] = fsio.parquet_row_count(data_dir)
-        if part_by:
-            dir_parts[f"v={new_version:06d}"] = sorted(
-                e for e in fsio.listdir(data_dir) if "=" in e
-            )
-    folded_manifest = {
-        **_inherited_manifest(manifest),
-        "version": new_version,
-        "parent": version,
-        "committed_at": time.time(),
-        # the folded dir is written manifest-conformed, so the evolved
-        # flag survives only while PRE-EVOLUTION base dirs remain; a
-        # base-less fold (keep_base=0) unifies the chain's file schemas
-        "schema_evolved": (manifest.get("schema_evolved")
-                           if base else None),
-        # same logical content as the parent — count carries over
-        "batch_id": None,
-        "nonce": uuid.uuid4().hex[:12],
-        "data_dirs": new_dirs,
-        "col_stats": col_stats or None,
-        "bloom": bloom or None,
-        "dir_rows": dir_rows,
-        "dir_parts": (dir_parts or None) if part_by else None,
-        # tail DV entries folded away above; base-dir entries carry
-        # (their files didn't move), and an emptied DV releases its
-        # sidecar to vacuum
-        "dv": _carry_dv(manifest, base),
-        "operation": "compact-tail",
-    }
-    fsio.mkdirs(_versions_dir(table_dir))
-    if not fsio.create_text_exclusive(
-            _manifest_path(table_dir, new_version),
-            json.dumps(folded_manifest)):
-        raise VersionConflictError(
-            f"version {new_version} of {table_dir} was published "
-            "concurrently during compact_tail — fold again from the "
-            "new chain head"
-        )
-    return new_version
+    # can only tighten after deletes ever land in a chain) and an exact
+    # footer count. Tail DV entries folded away above; an emptied DV
+    # releases its sidecar to vacuum.
+    return _cow_publish(spark, table_dir, manifest, base, rows,
+                        operation="compact-tail", stats_from=rows)
 
 
 def vacuum(table_dir: str, keep_last: int = 1,

@@ -186,6 +186,7 @@ def versioned_merge_sink(table_dir: str, key: str,
     slower commit, never to a dead query.
     """
     from mapreduce_4_spark.sources.versioned import (
+        KeyBudgetError,
         merge_version_joined,
         merge_version_pruned,
         published_batch_ids,
@@ -214,9 +215,7 @@ def versioned_merge_sink(table_dir: str, key: str,
             write_version(batch_df, table_dir, batch_id=batch_id,
                           manifest_extra=extra,
                           stats_for=[key], bloom_for=[key])
-        except ValueError as e:
-            if "max_keys" not in str(e):
-                raise
+        except KeyBudgetError:
             # wide batch (backfill/catch-up burst): the join-classified
             # merge keeps the commit dir-granular without the driver
             # key collect — slower (one classification scan), alive

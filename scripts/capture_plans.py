@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') for a set of registered queries into
-plans/r15/<query>_<suffix>.txt (round-14 optimization evidence).
+plans/r<N>/<query>_<suffix>.txt (round-N optimization evidence).
 
-Usage: python scripts/capture_plans_r15.py <suffix> [query ...]
+Usage: python scripts/capture_plans.py --round N <suffix> [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -36,21 +37,29 @@ DEFAULT = [
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(
+        description="Write formatted plans of registered queries to "
+                    "plans/r<N>/<query>_<suffix>.txt.")
+    ap.add_argument("--round", type=int, required=True,
+                    help="optimization round N (output dir plans/rN)")
+    ap.add_argument("suffix", help="file suffix, e.g. before / after")
+    ap.add_argument("queries", nargs="*",
+                    help="registry names (default: the standard set)")
+    args = ap.parse_args()
+
     from mapreduce_4_spark.plans import REGISTRY
     from mapreduce_4_spark.session import get_spark
 
-    suffix = sys.argv[1]
-    names = sys.argv[2:] or DEFAULT
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r15")
+        os.path.abspath(__file__))), "plans", f"r{args.round}")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("capture-plans-r15")
-    for name in names:
+    spark = get_spark(f"capture-plans-r{args.round}")
+    for name in args.queries or DEFAULT:
         df = REGISTRY[name].builder(spark, SF_DIR)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"))
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print("wrote", path, flush=True)

@@ -657,6 +657,23 @@ def test_collect_keys_cap_fails_loudly(spark, tmp_path):
             wide.withColumn("v", F.col("k")), "k", max_keys=10)
 
 
+def test_key_budget_error_is_typed(spark, tmp_path):
+    """The max_keys refusal is a KeyBudgetError — a ValueError
+    subclass, so callers degrade to the joined paths by type (the
+    merge sink does) instead of matching the message."""
+    from mapreduce_4_spark.sources.versioned import KeyBudgetError
+
+    tdir = str(tmp_path / "t")
+    _chain(spark, tdir, slices=((0, 30),))
+    wide = spark.range(100).select(F.col("id").alias("k"))
+    with pytest.raises(KeyBudgetError, match="max_keys"):
+        delete_version_dv(spark, tdir, keys=wide, key="k", max_keys=10)
+    assert issubclass(KeyBudgetError, ValueError)
+    # a narrow key set is no budget problem
+    assert delete_version_pruned(spark, tdir, keys=[1], key="k",
+                                 max_keys=10) == 2
+
+
 def test_new_commits_never_inherit_per_commit_provenance(spark, tmp_path):
     """A DV delete or restore builds its manifest by re-spreading the
     parent's/target's — but only the structural fields: inheriting a

@@ -938,6 +938,55 @@ def test_cow_bloom_probe_is_per_dir_window(spark, tmp_path):
     assert out == {d1: False, d2: True}
 
 
+def test_key_dir_classifier_agrees_across_hash_twins(spark, tmp_path):
+    """The window-then-bloom dir classifier is one function for both
+    read surfaces: with bloom positions from the JVM hash job (the
+    copy-on-write path) and from the pure-Python xxh64 twin (the
+    DataSource planning worker) it must classify every dir the same,
+    and a column type the twin cannot hash must degrade to 'may hold'
+    (never a false skip)."""
+    from mapreduce_4_spark.sources import xxh64
+    from mapreduce_4_spark.sources.versioned import (
+        _classify_key_dirs,
+        _jvm_bloom_positions,
+        read_manifest,
+        write_version,
+    )
+
+    tdir = str(tmp_path / "t")
+    for i, lo in enumerate((0, 7, 3000, 5)):  # overlapping windows
+        write_version(
+            spark.range(lo, lo + 40, 3).selectExpr(
+                "id AS k", "CAST(id AS STRING) AS s"),
+            tdir, append=True, stats_for=["k"] if i == 0 else None,
+            bloom_for=["k", "s"] if i == 0 else None, bloom_bits=512)
+    m = read_manifest(tdir, 4)
+    dirs = m["data_dirs"]
+
+    def py_positions(ctype):
+        def positions(vals, bits, k):
+            if ctype not in xxh64.SUPPORTED_TYPES:
+                return None
+            return [xxh64.bloom_positions(v, ctype, bits, k) for v in vals]
+        return positions
+
+    for col, ctype, vals in (
+            ("k", "bigint", [1, 8, 10, 3003, 3004, 10 ** 9]),
+            ("s", "string", ["1", "10", "3003", "nope"])):
+        jvm = _classify_key_dirs(m, col, vals, dirs,
+                                 _jvm_bloom_positions(spark, m, col))
+        py = _classify_key_dirs(m, col, vals, dirs, py_positions(ctype))
+        assert jvm == py, col
+        assert not all(jvm.values()), col  # something was proven out
+    # no hash twin for the type: bloom evidence is unknown, so only the
+    # window proves dirs out (2 lies inside dir 1's window, not in it)
+    windows = {d: m["col_stats"][d]["k"][:2] for d in dirs}
+    in_window = {d: lo <= 2 <= hi for d, (lo, hi) in windows.items()}
+    assert in_window[dirs[0]] and not all(in_window.values())
+    assert _classify_key_dirs(m, "k", [2], dirs,
+                              py_positions("double")) == in_window
+
+
 def test_compact_tail_reapplies_zorder_discipline(spark, tmp_path):
     """The layout-preserving fold (round 12): a Z-ordered base takes
     trickle appends (unclustered tail), and compact_tail's fold
