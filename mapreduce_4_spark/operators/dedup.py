@@ -12,10 +12,12 @@ Scale design: every operator is expressed as shuffles/joins on bounded
 keys — never a driver-side loop, never an O(n^2) cross product. The LSH
 band join is the 100 TB path: candidate generation cost is
 O(n * bands) rows shuffled on (band, band_hash), and only hash-bucket
-collisions are verified exactly. Signature/shingle construction is pure
-column expressions (xxhash64 / transform / array_min) — JVM-side,
-whole-stage-codegen'd, no Python in the hot path. SimHash uses an
-Arrow-batched pandas UDF deliberately, as the engine's showcase of the
+collisions are verified exactly. The MinHash signature is one hash
+aggregate over the exploded shingles (k ``min`` slots, built from one
+SQL string) — compiled operators only; higher-order functions
+(``transform``/``array_min`` lambdas) are ``CodegenFallback`` in Spark
+4.1 and stay out of the signature path. SimHash uses an Arrow-batched
+pandas UDF deliberately, as the engine's showcase of the
 vectorized-UDF surface (the reference's dlopen plugin analogue, O11).
 """
 
@@ -53,32 +55,19 @@ def shingle_sets(docs: DataFrame, n: int = 3, text_col: str = "text",
     return df.select(id_col, F.array_distinct(sh).alias("shingles"))
 
 
-def minhash_signature(shingles: Column, k: int = MINHASH_K) -> Column:
-    """k-slot signature: slot s = min over shingles of perm_s(h(shingle)).
-
-    Each shingle is string-hashed ONCE (xxhash64); the k "permutations"
-    re-hash the resulting (long, seed) pair — fixed-width input, so each
-    is a handful of integer ops instead of another variable-length string
-    hash, and overflow-free under ANSI mode (no raw multiply). This turns
-    k*N string hashes into N string hashes + k*N integer hashes and cut
-    the sf0.1 LSH benchmark ~10x. Everything stays inside codegen
-    (transform/array_min), no UDF.
-    """
-    base = F.transform(shingles, lambda x: F.xxhash64(x))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda s: F.array_min(F.transform(base, lambda h: F.xxhash64(h, s))),
-    )
-
-
-# Portable (cross-engine) MinHash family: base hash = 31-bit integer from
-# the md5 hex prefix, permutations = affine maps mod the Mersenne prime
-# 2^31-1 with seeded literal coefficients. Every op (md5, hex->int, *, %,
-# min) is bit-identical in Spark and DuckDB, so the LSH candidate set —
-# and therefore the exact-verified output — is fully oracle-checkable.
-# Costs one md5 per shingle instead of one xxhash64 (same one-string-hash
-# structure as the fast family; the k permutations stay integer-only and
-# overflow-free: 31-bit * 31-bit < 2^62 under ANSI mode).
+# Two MinHash families share one signature path. Each shingle is
+# string-hashed ONCE to a base long; the k "permutations" re-hash that
+# fixed-width base with integer ops only, which turns k*N string hashes
+# into N string hashes + k*N integer ops.
+#
+# - "portable" (default): base = 31-bit integer from the md5 hex prefix,
+#   permutations = affine maps mod the Mersenne prime 2^31-1 with seeded
+#   literal coefficients. Every op (md5, hex->int, *, %, min) is
+#   bit-identical in Spark and DuckDB, so the LSH candidate set — and
+#   therefore the exact-verified output — is fully oracle-checkable.
+#   Overflow-free under ANSI mode: 31-bit * 31-bit < 2^62.
+# - "fast": base = xxhash64(shingle), permutation s = xxhash64(base, s);
+#   same structure, not expressible outside Spark.
 MERSENNE_31 = (1 << 31) - 1
 
 
@@ -100,79 +89,140 @@ def _base31(x: Column) -> Column:
     )
 
 
+def _base_hash(x: Column, hash_family: str) -> Column:
+    """The one string hash per shingle of a family."""
+    if hash_family == "portable":
+        return _base31(x)
+    if hash_family == "fast":
+        return F.xxhash64(x)
+    raise ValueError(f"unknown hash_family: {hash_family!r}")
+
+
+def _slot_sql(h: str, hash_family: str, k: int = MINHASH_K,
+              seed: int = 7) -> list[str]:
+    """The k slot permutations of the base hash ``h``, as SQL. The
+    literals parse as INT; the fast family's seed type is part of what
+    xxhash64 hashes."""
+    if hash_family == "portable":
+        return [f"({a} * {h} + {b}) % {MERSENNE_31}"
+                for a, b in _perm_coefficients(k, seed)]
+    if hash_family == "fast":
+        return [f"xxhash64({h}, {s})" for s in range(k)]
+    raise ValueError(f"unknown hash_family: {hash_family!r}")
+
+
 def minhash_signature_from_base(base: Column, k: int = MINHASH_K,
                                 seed: int = 7) -> Column:
-    """Signature from a PRE-COMPUTED base-hash array column.
+    """Portable signature from a PRE-COMPUTED base-hash array column,
+    as a scalar: slot s = ``array_min(transform(base, h -> perm_s(h)))``.
 
-    The k permutation expressions each reference ``base``; if that were
-    an inline ``transform(shingles, md5...)`` expression, Catalyst would
-    not common-subexpression-eliminate it across the k lambda bodies and
-    every shingle would be md5-hashed k times (observed 3.5x wall-clock
-    on the sf0.1 bench). Callers materialize the base array once — in a
-    separate projection or a persisted intermediate — and pass the
-    column here, restoring the one-string-hash-per-shingle structure of
-    the fast family.
+    Built from one SQL string (one py4j call). Its output equals the
+    signature column of :func:`_minhash_signatures`, which the package's
+    dedup operators use instead: the 64 lambdas here are interpreted per
+    element (``CodegenFallback``), the aggregate's ``min`` slots are
+    compiled. ``base`` must be a plain column reference (its SQL text is
+    spliced into the expression).
     """
-    coef = _perm_coefficients(k, seed)
-    return F.array(*[
-        F.array_min(
-            F.transform(base, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_31))
-        )
-        for a, b in coef
-    ])
-
-
-def minhash_signature_portable(shingles: Column, k: int = MINHASH_K,
-                               seed: int = 7) -> Column:
-    return minhash_signature_from_base(F.transform(shingles, _base31), k, seed)
+    slots = ", ".join(
+        f"array_min(transform(({base._jc.toString()}), h -> {e}))"
+        for e in _slot_sql("h", "portable", k, seed)
+    )
+    return F.expr(f"array({slots})")
 
 
 def sql_minhash_signature(base_expr: str, k: int = MINHASH_K,
                           seed: int = 7) -> str:
-    """DuckDB twin of :func:`minhash_signature_portable` over a BIGINT
-    list expression (the base31 hashes)."""
-    coef = _perm_coefficients(k, seed)
+    """DuckDB twin of the portable signature over a BIGINT list
+    expression (the base31 hashes)."""
     slots = ", ".join(
-        f"list_min([({a} * h + {b}) % {MERSENNE_31} for h in {base_expr}])"
-        for a, b in coef
+        f"list_min([{e} for h in {base_expr}])"
+        for e in _slot_sql("h", "portable", k, seed)
     )
     return f"[{slots}]"
+
+
+def _minhash_shingles(docs: DataFrame, n: int) -> DataFrame:
+    """Persisted (doc_id, shingles) for the MinHash operators.
+
+    Unlike :func:`shingle_sets` there is no ``size >= n`` filter: a
+    document shorter than ``n`` words keeps an EMPTY shingle array,
+    which explodes to no rows in :func:`_minhash_signatures`, so it
+    never gets a signature and never becomes a candidate. The filter
+    would be pushed below the repartition (tokenizing every document
+    twice, the first time in the scan's task).
+
+    The input is repartitioned to the session's parallelism first: the
+    signature stage is compute-heavy per row, and a corpus that arrives
+    as a few small files would otherwise run it on as few cores
+    (observed 1-task stages at sf0.1 — a single parquet file). At real
+    scale the scan has thousands of splits and this shuffle is noise.
+
+    The table feeds the signatures and both sides of the verify join;
+    persisting it trades one corpus-sized pass of memory for running
+    clean+tokenize+shingle once per consumer (MEMORY_AND_DISK — spills
+    at scale rather than OOMs).
+    """
+    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    ws = docs.select("doc_id", words("text").alias("_w"))
+    return ws.select(
+        "doc_id", F.array_distinct(ngrams_join(F.col("_w"), n)).alias("shingles")
+    ).persist()
+
+
+def _minhash_signatures(sh: DataFrame, id_col: str = "doc_id",
+                        hash_family: str = "portable") -> DataFrame:
+    """(id, signature) — the one MinHash signature path.
+
+    Explode the shingles, string-hash each once, and compute the k slot
+    minima in ONE hash aggregate grouped by id: ``array(min(perm_0(h)),
+    ..., min(perm_k-1(h)))``, written as one SQL string. Min over the
+    exploded rows gives the same integers as ``array_min`` over the
+    per-document array, and the column is ``array<bigint>`` with
+    nullable elements, like the scalar builder's. Documents with no
+    shingle have no row here.
+    """
+    slots = ", ".join(f"min({e})" for e in _slot_sql("_h", hash_family))
+    return (
+        sh.select(id_col, F.explode("shingles").alias("_s"))
+        .select(id_col, _base_hash(F.col("_s"), hash_family).alias("_h"))
+        .groupBy(id_col)
+        .agg(F.expr(f"array({slots})").alias("signature"))
+    )
 
 
 def lsh_band_table(sigs: DataFrame, id_col: str = "doc_id",
                    sig_col: str = "signature",
                    bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> DataFrame:
-    """Explode each signature into (id, band, band_hash) bucket keys."""
-    band_structs = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda j: F.struct(
-            j.alias("band"),
-            F.xxhash64(j, F.slice(sig_col, j * rows + 1, rows)).alias("band_hash"),
-        ),
+    """Explode each signature into (id, band, band_hash) bucket keys:
+    band j's key is ``xxhash64(j, slice(signature, j*rows+1, rows))``
+    with an INT ``j``, all bands in one ``inline`` (no lambda)."""
+    structs = ", ".join(
+        f"named_struct('band', {j}, 'band_hash', "
+        f"xxhash64({j}, slice(`{sig_col}`, {j * rows + 1}, {rows})))"
+        for j in range(bands)
     )
-    return (
-        sigs.select(id_col, F.explode(band_structs).alias("b"))
-        .select(id_col, "b.band", "b.band_hash")
-    )
+    return sigs.select(id_col, F.expr(f"inline(array({structs}))"))
 
 
 def candidate_pairs(bands_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing any LSH bucket.
 
-    Self-join shuffles on (band, band_hash); bucket sizes are tiny for
-    non-duplicate data, so the join output is near-linear in true
-    duplicates — this is what replaces the O(n^2) cross product at scale.
+    One aggregate shuffles on (band, band_hash) and collects each
+    bucket's ids; only buckets holding two or more ids expand into
+    pairs. Bucket sizes are tiny for non-duplicate data, so the output
+    is near-linear in true duplicates — this is what replaces the
+    O(n^2) cross product at scale. It emits the pairs a bucket
+    self-join would (a bucket of k ids gives k^2 rows before the
+    filter either way), but reads ``bands_df`` once: a self-join plans
+    the band table, and the signature stage under it, on both sides.
     """
-    left = bands_df.select(
-        F.col(id_col).alias("id_a"), "band", "band_hash"
-    )
-    right = bands_df.select(
-        F.col(id_col).alias("id_b"), "band", "band_hash"
-    )
+    ids = bands_df.groupBy("band", "band_hash").agg(
+        F.collect_list(id_col).alias("_ids"))
     return (
-        left.join(right, ["band", "band_hash"])
+        ids.filter(F.size("_ids") > 1)
+        .select(F.explode("_ids").alias("id_a"), "_ids")
+        .select("id_a", F.explode("_ids").alias("id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
         .distinct()
     )
 
@@ -392,68 +442,47 @@ def prefix_filtered_containment_pairs(sh: DataFrame, threshold: float,
     )
 
 
+def _verified_pairs(cands: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
+                    a: str, b: str, threshold: float,
+                    id_col: str = "doc_id") -> DataFrame:
+    """(a, b, jaccard_sim) for the (a, b) candidates whose exact Jaccard
+    on the shingle sets of ``sh_a`` / ``sh_b`` reaches ``threshold``."""
+    sa = sh_a.select(F.col(id_col).alias(a), F.col("shingles").alias("_sh_a"))
+    sb = sh_b.select(F.col(id_col).alias(b), F.col("shingles").alias("_sh_b"))
+    return (
+        cands.join(sa, a).join(sb, b)
+        .select(a, b, jaccard(F.col("_sh_a"), F.col("_sh_b")).alias("jaccard_sim"))
+        .filter(F.col("jaccard_sim") >= threshold)
+    )
+
+
 def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.8,
                             n: int = 3,
                             hash_family: str = "portable") -> DataFrame:
     """End-to-end MinHash-LSH near-dup pairs, exact-verified.
 
-    candidates (LSH bucket join) -> verify (join shingle sets back,
-    exact Jaccard >= threshold). Returns (id_a, id_b, jaccard_sim).
+    shingles -> signatures -> bands -> candidates (LSH bucket join) ->
+    verify (join shingle sets back, exact Jaccard >= threshold).
+    Returns (id_a, id_b, jaccard_sim).
 
     ``hash_family``: "portable" (default — md5-seeded, reproducible in
     DuckDB, so the registered query is fully oracle-checked) or "fast"
     (xxhash64-based; same structure, marginally cheaper string hash,
     not expressible outside Spark).
-
-    The shingle table feeds three plan branches (signatures + both sides
-    of the verify join); persisting it trades one corpus-sized pass of
-    memory for recomputing clean+tokenize+shingle three times — the
-    right trade at any scale where the shingle table fits the cluster
-    (it is ~the corpus size; spill handles the rest).
-
-    The input is repartitioned to the session's parallelism first: the
-    signature stage is compute-heavy per row, and a corpus that arrives
-    as a few small files would otherwise run it on as few cores
-    (observed 1-task stages at sf0.1 — a single parquet file). At real
-    scale the scan has thousands of splits and this shuffle is noise.
     """
     if hash_family not in ("portable", "fast"):
         raise ValueError(f"unknown hash_family: {hash_family!r}")
-    spark = docs.sparkSession
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    sh = shingle_sets(docs, n=n)
-    if hash_family == "portable":
-        # base md5 hashes land INSIDE the persisted intermediate: each
-        # shingle is string-hashed exactly once, and the 64 affine
-        # permutations below run over cached longs (inlining the md5
-        # into the permutation lambdas defeats CSE — see
-        # minhash_signature_from_base)
-        sh = sh.withColumn("_base", F.transform("shingles", _base31))
-    sh = sh.persist()
-    if hash_family == "portable":
-        sigs = sh.select(
-            "doc_id", minhash_signature_from_base(F.col("_base")).alias("signature")
-        )
-    else:
-        sigs = sh.select(
-            "doc_id", minhash_signature(F.col("shingles")).alias("signature")
-        )
-    cands = candidate_pairs(lsh_band_table(sigs))
-    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        cands.join(sa, "id_a").join(sb, "id_b")
-        .select(
-            "id_a", "id_b",
-            jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
+    sh = _minhash_shingles(docs, n)
+    cands = candidate_pairs(lsh_band_table(
+        _minhash_signatures(sh, hash_family=hash_family)))
+    return _verified_pairs(cands, sh, sh, "id_a", "id_b", threshold)
 
 
 def _portable_shingle_table(docs: DataFrame, n: int) -> DataFrame:
-    """Persisted (doc_id, shingles, _base) under the portable family —
-    each shingle md5-hashed exactly once (see minhash_signature_from_base)."""
+    """Persisted (doc_id, shingles, _base) under the portable family:
+    :func:`shingle_sets` over the repartitioned input plus each
+    shingle's base hash — the input of the scalar
+    :func:`minhash_signature_from_base`."""
     spark = docs.sparkSession
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     return (
@@ -479,34 +508,20 @@ def minhash_incremental_neardup(base_docs: DataFrame, delta_docs: DataFrame,
     the whole pipeline — candidate set and exact-Jaccard verify — is
     reproducible in any engine. Returns (delta_id, base_id, jaccard_sim).
     """
-    sh_b = _portable_shingle_table(base_docs, n)
-    sh_d = _portable_shingle_table(delta_docs, n)
+    sh_b = _minhash_shingles(base_docs, n)
+    sh_d = _minhash_shingles(delta_docs, n)
 
-    def _bands(sh: DataFrame) -> DataFrame:
-        sigs = sh.select(
-            "doc_id", minhash_signature_from_base(F.col("_base")).alias("signature")
-        )
-        return lsh_band_table(sigs)
+    def _bands(sh: DataFrame, alias: str) -> DataFrame:
+        return lsh_band_table(_minhash_signatures(sh)).select(
+            F.col("doc_id").alias(alias), "band", "band_hash")
 
     cands = (
-        _bands(sh_d).select(F.col("doc_id").alias("delta_id"), "band", "band_hash")
-        .join(
-            _bands(sh_b).select(F.col("doc_id").alias("base_id"), "band", "band_hash"),
-            ["band", "band_hash"],
-        )
+        _bands(sh_d, "delta_id")
+        .join(_bands(sh_b, "base_id"), ["band", "band_hash"])
         .select("delta_id", "base_id")
         .distinct()
     )
-    sd = sh_d.select(F.col("doc_id").alias("delta_id"), F.col("shingles").alias("sh_d"))
-    sb = sh_b.select(F.col("doc_id").alias("base_id"), F.col("shingles").alias("sh_b"))
-    return (
-        cands.join(sd, "delta_id").join(sb, "base_id")
-        .select(
-            "delta_id", "base_id",
-            jaccard(F.col("sh_d"), F.col("sh_b")).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
+    return _verified_pairs(cands, sh_d, sh_b, "delta_id", "base_id", threshold)
 
 
 @pandas_udf(LongType())
@@ -578,11 +593,12 @@ def simhash_chunks_portable(docs: DataFrame, text_col: str = "text",
     # exactly bit r in lane 0 and bit r+8 in lane 1.
     #
     # Lane-overflow safety at ANY document size: a lane sum is at most
-    # the doc's token count n, and n < 2^30 (tokens are >= 2 chars of a
-    # < 2^31-byte string), so lane 0 can never bleed into lane 1
-    # (needs n >= 2^32) and the long SUM is bounded by
-    # n * (1 + 2^32) < 2^30 * 2^33 = 2^63 — no overflow, and under ANSI
-    # a violated bound would fail loud, never wrap silently.
+    # the doc's token count n. Tokens may be 1 char, but consecutive
+    # tokens need a separator between them, so n tokens take at least
+    # 2n - 1 chars of a < 2^31-byte string: n <= 2^30. Lane 0 can never
+    # bleed into lane 1 (needs n >= 2^32) and the long SUM is bounded by
+    # n * (1 + 2^32) <= 2^30 * (1 + 2^32) < 2^63 — no overflow, and
+    # under ANSI a violated bound would fail loud, never wrap silently.
     #
     # Vote recovery: sign = 2*sum(bit) - n > 0 (round-14 identity —
     # sum(2b-1) == 2*sum(b) - n, exact integer math). The md5-derived
@@ -654,12 +670,12 @@ def _simhash_verify(banded_pairs: DataFrame, max_hamming: int) -> DataFrame:
     )
 
 
-def _sig64(sig: DataFrame) -> DataFrame:
-    """(doc_id, sig): the four 16-bit chunk columns reassembled into one
+def _sig64(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, sig): the four 16-bit chunk columns reassembled into one
     long — exact bit concatenation (c3's high bit stays unsigned via the
     shift, never sign-pollutes)."""
     s = sum(F.shiftleft(F.col(f"c{c}").cast("long"), 16 * c) for c in range(4))
-    return sig.select("doc_id", s.alias("sig"))
+    return sig.select(id_col, s.alias("sig"))
 
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,

@@ -54,11 +54,10 @@ from pyspark.sql import functions as F
 
 from mapreduce_4_spark.functions.text import ngrams_join, words
 from mapreduce_4_spark.operators.dedup import (
-    _base31,
+    _minhash_signatures,
+    _verified_pairs,
     candidate_pairs,
-    jaccard,
     lsh_band_table,
-    minhash_signature_from_base,
 )
 from mapreduce_4_spark.sources.versioned import (
     compact,
@@ -190,34 +189,26 @@ def dedup_ingest_sink(corpus_dir: str, index_dir: str,
         shingle = F.when(F.size("_w") >= n, grams).otherwise(
             F.array(F.concat_ws(" ", "_w"))
         )
-        sh_d = (
-            toks.select(id_col, shingle.alias("shingles"))
-            .withColumn("_base", F.transform("shingles", _base31))
-            .persist()
-        )
-        pinned = []  # small id-set DataFrames persisted for the batch
+        sh_d = toks.select(id_col, shingle.alias("shingles")).persist()
+        pinned = []  # batch-sized DataFrames persisted for the batch
         try:
-            sigs_d = sh_d.select(
-                id_col,
-                minhash_signature_from_base(F.col("_base")).alias("signature"),
-            )
+            # the signature aggregate feeds the within-batch candidates,
+            # the corpus probe and every publish: compute it once
+            sigs_d = _minhash_signatures(sh_d, id_col=id_col).persist()
+            pinned.append(sigs_d)
             bands_d = lsh_band_table(sigs_d, id_col=id_col)
 
             # (1) within-batch: LSH candidates, exact-Jaccard verify,
             # smaller id wins — drop every dominated (larger) id
             cands = candidate_pairs(bands_d, id_col=id_col)
-            sa = sh_d.select(F.col(id_col).alias("id_a"),
-                             F.col("shingles").alias("sh_a"))
-            sb = sh_d.select(F.col(id_col).alias("id_b"),
-                             F.col("shingles").alias("sh_b"))
             # dominated/matched are persisted: they are tiny (dup ids
             # only) but head the expensive LSH-probe + jaccard-verify
             # subplan, and the 2-3 publishes below each re-evaluate
             # their consumers — without the pin the verify would run
             # once per publish instead of once per batch.
             dominated = (
-                cands.join(sa, "id_a").join(sb, "id_b")
-                .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= threshold)
+                _verified_pairs(cands, sh_d, sh_d, "id_a", "id_b", threshold,
+                                id_col=id_col)
                 .select(F.col("id_b").alias(id_col))
                 .distinct()
                 .persist()
@@ -301,15 +292,8 @@ def dedup_ingest_sink(corpus_dir: str, index_dir: str,
                         base_idx = read_version(spark, index_dir)
                 if base_idx is not None:
                     matched = (
-                        cand_d
-                        .join(sh_d.select(F.col(id_col).alias("delta_id"),
-                                          F.col("shingles").alias("sh_dd")),
-                              "delta_id")
-                        .join(base_idx.select(F.col(id_col).alias("base_id"),
-                                              F.col("shingles").alias("sh_bb")),
-                              "base_id")
-                        .filter(jaccard(F.col("sh_dd"), F.col("sh_bb"))
-                                >= threshold)
+                        _verified_pairs(cand_d, sh_d, base_idx, "delta_id",
+                                        "base_id", threshold, id_col=id_col)
                         .select(F.col("delta_id").alias(id_col))
                         .distinct()
                         .persist()

@@ -76,6 +76,38 @@ def test_no_cartesian_in_lsh_dedup(spark, sf_oracle):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_minhash_signature_is_one_compiled_aggregate(spark, sf_oracle):
+    """The 64 MinHash slot minima are ONE HashAggregate (compiled; not an
+    ObjectHashAggregate or SortAggregate), no per-slot
+    array_min(transform(...)) lambda survives, and the executed (final
+    AQE) plan computes the signature exactly once — the candidate stage
+    reads the band table once instead of once per self-join side."""
+    df = REGISTRY["minhash_lsh_neardup"].builder(spark, sf_oracle)
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    plan = adaptive.toString()
+    assert "isFinalPlan=true" in plan
+    # the final physical plan alone (a cached input still prints its own
+    # nested initial plan, so splitting the string would not isolate it)
+    final = adaptive.executedPlan().toString()
+    assert "array_min(transform(" not in plan
+    # short docs need no size >= n filter (their gram array explodes to
+    # nothing); one would be pushed below the repartition and tokenize
+    # every document a second time
+    assert not re.search(r"Filter .*split\(", plan), plan
+    # final-mode min slots print as functions=[min(..), ...]; toString
+    # elides past 25 entries as "... N more fields"
+    sig_aggs = re.findall(
+        r"(\w+)\(keys=\[doc_id#\d+L?\], functions=\[(min\(.*?)\], output=",
+        final)
+    assert len(sig_aggs) == 1, final
+    op, funcs = sig_aggs[0]
+    assert op == "HashAggregate", op
+    more = re.search(r"\.\.\. (\d+) more fields$", funcs)
+    n_slots = funcs.count("min(") + (int(more.group(1)) if more else 0)
+    assert n_slots == 64, funcs
+
+
 def test_events_window_agg_single_shuffle(spark, sf_oracle):
     plan = _plan(spark, sf_oracle, "events_tumbling_1h")
     assert plan.count("Exchange hashpartitioning") == 1
