@@ -29,6 +29,23 @@ under the contract it can only mean the contract was broken;
 optimistic CAS retry loop (``_commit_staged``) over staged data, the
 same commit protocol Iceberg/Delta run on an object store.
 
+Read planner: every read path decides which chain dirs it touches
+through one function. ``_open_version`` resolves the addressed version
+(number, tag, ``as_of`` or latest) and reads its manifest.
+``_plan_dirs`` classifies each chain dir as ``"miss"`` (provably no
+matching row: skip), ``"full"`` (provably every row matches) or
+``"partial"`` (scan with the exact residual). It applies the range
+proof (``_range_relation``, with the manifest's ``dir_rows``), then
+window-then-bloom for each point-lookup conjunct, then, for callers
+that fold full dirs from metadata, the metadata and deletion-vector
+demotion. Its callers: the stats- and bloom-pruned reads scan the
+non-miss dirs; ``count/sum/minmax_version`` answer full dirs from the
+manifest and scan only partial ones (``_scan_partial``); copy-on-write
+DML drops or rewrites dirs by the same verdicts; the ``mr4ver``
+DataSource plans its input partitions from it with the pure-Python
+``xxh64`` bloom hash. ``_scan_dirs`` is the one manifest-pinned scan
+they all read through, ``read_version`` included.
+
 Scale: manifests are O(1) metadata; snapshots are plain parquet
 directories, so reads keep pushdown/pruning, and time travel costs
 nothing at write time (old snapshots are simply not deleted until
@@ -1005,10 +1022,10 @@ def _nullable_deep(dt):
 def _scan_schema(manifest: dict):
     """The manifest schema as a SCAN sees it: every field nullable at
     every nesting level (a parquet read never guarantees non-null),
-    manifest-declared types. Both partitioned read paths
-    (read_version's chain union and read_version_pruned) pin their
-    output to this, so they can never disagree with each other or with
-    an empty result's schema."""
+    manifest-declared types. Every read path (``_scan_dirs``, which
+    ``read_version`` and the pruned readers share, and
+    ``read_version_pruned``) pins its output to this, so they can never
+    disagree with each other or with an empty result's schema."""
     from pyspark.sql.types import StructType
 
     return _nullable_deep(StructType.fromJson(manifest["schema"]))
@@ -1027,9 +1044,14 @@ def _conform_to_schema(df: DataFrame, manifest: dict,
     vector's file/position pair) to carry through untouched."""
     from pyspark.sql import functions as F
 
-    have = dict(zip(df.columns, df.schema.fields))
+    fields = df.schema.fields
+    target = _scan_schema(manifest).fields
+    if not keep and [(f.name, f.dataType) for f in fields] \
+            == [(f.name, f.dataType) for f in target]:
+        return df  # already conformant: the projection would be identity
+    have = {f.name: f for f in fields}
     cols = []
-    for f in _scan_schema(manifest).fields:
+    for f in target:
         got = have.get(f.name)
         if got is None:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
@@ -1129,11 +1151,14 @@ def _scan_partitioned_chain(spark: SparkSession, dirs: list[str],
                             with_pos: bool = False) -> DataFrame | None:
     """Union the non-empty dirs of a hive-partitioned append chain,
     null-padded and type-aligned to the manifest schema; None when
-    every dir is empty. Shared by read_version and compact_tail so the
-    chain-scan rules (per-root reads for partition discovery, empty-dir
-    skipping to dodge UNABLE_TO_INFER_SCHEMA, manifest-schema
-    conformance — which also null-pads pre-evolution dirs) live in
-    exactly one place. ``dirs`` are absolute paths. ``with_pos``
+    every dir is empty. The partitioned branch of ``_scan_dirs``, so
+    the chain-scan rules live in exactly one place: hive partition
+    DISCOVERY needs each dir read from its own root (a multi-path read
+    with a shared basePath would infer the v=NNNNNN level as a bogus
+    partition column), and a zero-row partitioned append writes no
+    parquet file at all, so empty dirs are skipped (scanning one raises
+    UNABLE_TO_INFER_SCHEMA); manifest-schema conformance also null-pads
+    pre-evolution dirs. ``dirs`` are absolute paths. ``with_pos``
     attaches the per-row file/position helper pair (``_DV_COLS``) each
     scan branch can still resolve from its own ``_metadata`` — the
     hook the deletion-vector filter joins on."""
@@ -1163,23 +1188,6 @@ def _reclaim_torn_write(table_dir: str, version: int) -> None:
     if fsio.exists(data_dir) and not fsio.exists(
             _manifest_path(table_dir, version)):
         fsio.delete(data_dir, recursive=True)
-
-
-def _align_partition_types(df: DataFrame, manifest: dict) -> DataFrame:
-    """Cast hive-DISCOVERED partition columns back to the manifest's
-    declared types (discovery infers e.g. int where the writer declared
-    long — the manifest is the source of truth), keeping column order.
-    No-op for unpartitioned manifests."""
-    from pyspark.sql import functions as F
-
-    if not manifest.get("partition_by"):
-        return df
-    part_cols = set(manifest["partition_by"])
-    return df.select(*[
-        F.col(f.name).cast(f.dataType).alias(f.name)
-        if f.name in part_cols else F.col(f.name)
-        for f in _scan_schema(manifest).fields
-    ])
 
 
 def _as_of_epoch(as_of) -> float:
@@ -1282,6 +1290,20 @@ def _resolve_version(table_dir: str, version, as_of) -> int:
     return version
 
 
+def _open_version(table_dir: str, version, as_of) -> dict:
+    """The manifest of the addressed version — the prologue of every
+    reader and metadata aggregate. Resolution is ``_resolve_version``'s;
+    an EXPLICIT version (number or tag) that has no manifest raises
+    ``FileNotFoundError("version N not published in ...")`` instead of
+    the manifest read's raw errno."""
+    explicit = version is not None
+    version = _resolve_version(table_dir, version, as_of)
+    if explicit and not fsio.exists(_manifest_path(table_dir, version)):
+        raise FileNotFoundError(
+            f"version {version} not published in {table_dir}")
+    return read_manifest(table_dir, version)
+
+
 def _tag_path(table_dir: str, name: str) -> str:
     import re
 
@@ -1366,15 +1388,15 @@ def read_version(spark: SparkSession, table_dir: str,
     Bucketed snapshots come back as catalog tables (re-registered from
     the manifest's bucket spec if the session is fresh), so the planner
     sees the bucketing and drops the Exchange on bucket-key joins/aggs.
+    Every other shape — a single dir, a plain or partitioned chain, a
+    schema-evolved chain, a deletion vector — is ``_scan_dirs`` over all
+    chain dirs, with the manifest-pinned schema.
     """
-    had_explicit = version is not None
-    version = _resolve_version(table_dir, version, as_of)
-    if had_explicit and not fsio.exists(_manifest_path(table_dir, version)):
-        raise FileNotFoundError(f"version {version} not published in {table_dir}")
-    manifest = read_manifest(table_dir, version)
+    manifest = _open_version(table_dir, version, as_of)
     if manifest.get("bucket_by"):
         from pyspark.sql.types import StructType
 
+        version = manifest["version"]
         name = _catalog_name(table_dir, version, manifest.get("nonce") or "")
         if not spark.catalog.tableExists(name):
             schema = StructType.fromJson(manifest["schema"])
@@ -1390,46 +1412,9 @@ def read_version(spark: SparkSession, table_dir: str,
                 f"LOCATION '{_data_dir(table_dir, version)}'"
             )
         return spark.table(name)
-    if manifest.get("dv"):
-        # merge-on-read: one manifest-conformed scan over the listed
-        # dirs with the deletion-vector anti-join applied (the shared
-        # _scan_dirs path every pruned reader also goes through)
-        dirs = [
-            os.path.join(table_dir, d)
-            for d in manifest.get("data_dirs") or [f"v={version:06d}"]
-        ]
-        return _scan_dirs(spark, manifest, dirs, table_dir)
-    if manifest.get("data_dirs"):
-        dirs = [os.path.join(table_dir, d) for d in manifest["data_dirs"]]
-        if manifest.get("partition_by"):
-            # partitioned append chain: hive partition DISCOVERY needs
-            # each dir read from its own root (a multi-path read with a
-            # shared basePath would infer the v=NNNNNN level as a bogus
-            # partition column), so the chain is a union of per-dir
-            # scans — a partition filter still prunes directories inside
-            # EVERY branch, which is the point of the layout.
-            # A zero-row append writes NO parquet files under its dir
-            # (partitioned writes keep no schema-only file, unlike plain
-            # ones), so empty dirs are skipped — scanning one raises
-            # UNABLE_TO_INFER_SCHEMA and would brick the whole chain.
-            out = _scan_partitioned_chain(spark, dirs, manifest)
-            if out is None:  # every version so far appended zero rows
-                return spark.createDataFrame([], _scan_schema(manifest))
-            return out
-        # plain append chain: the version's content is the union of its
-        # listed dirs; one multi-path parquet read, pushdown intact.
-        # Evolved chains merge file schemas (one footer pass at
-        # planning) and null-pad to the manifest schema, so dirs
-        # written before a column existed read as typed nulls.
-        if manifest.get("schema_evolved"):
-            return _conform_to_schema(
-                spark.read.option("mergeSchema", "true").parquet(*dirs),
-                manifest,
-            )
-        return spark.read.parquet(*dirs)
-    return _align_partition_types(
-        spark.read.parquet(_data_dir(table_dir, version)), manifest
-    )
+    return _scan_dirs(spark, manifest, [
+        os.path.join(table_dir, d) for d in _chain_dirs(manifest)
+    ], table_dir)
 
 
 def read_version_pruned(spark: SparkSession, table_dir: str,
@@ -1462,8 +1447,7 @@ def read_version_pruned(spark: SparkSession, table_dir: str,
     """
     from pyspark.sql import functions as F
 
-    version = _resolve_version(table_dir, version, as_of)
-    manifest = read_manifest(table_dir, version)
+    manifest = _open_version(table_dir, version, as_of)
     part_cols = manifest.get("partition_by") or []
     if len(part_cols) != 1 or set(partition_values) != set(part_cols):
         raise ValueError(
@@ -1474,7 +1458,7 @@ def read_version_pruned(spark: SparkSession, table_dir: str,
     col = part_cols[0]
     schema = _scan_schema(manifest)
     col_type = schema[col].dataType
-    dirs = manifest.get("data_dirs") or [f"v={version:06d}"]
+    dirs = _chain_dirs(manifest)
     # The partition-subdir index recorded at publish (dir_parts) makes
     # the probe LISTING-FREE: matching col=value subdirs come straight
     # from the manifest already in hand — zero FS round trips however
@@ -1529,9 +1513,7 @@ def _range_relation(dir_stats: dict | None, dir_row_count,
     """Classify one chain dir against conjunctive range bounds using
     its recorded stats: ``"miss"`` (provably no row matches — skip),
     ``"full"`` (provably EVERY row matches — metadata-countable), or
-    ``"partial"`` (must scan). Shared by ``read_version_stats_pruned``
-    (which keeps everything != miss) and ``count_version`` (which
-    counts full dirs from the manifest and scans only partials).
+    ``"partial"`` (must scan). The range proof of ``_plan_dirs``.
 
     Soundness rules, identical to the pruned read's: unknown stats pass
     as partial (never a guess), date/timestamp bounds normalize to the
@@ -1610,116 +1592,39 @@ def _range_relation(dir_stats: dict | None, dir_row_count,
     return rel
 
 
-def read_version_stats_pruned(spark: SparkSession, table_dir: str,
-                              col: str | None = None, lower=None, upper=None,
-                              version: int | None = None,
-                              where: dict | None = None,
-                              as_of=None) -> DataFrame:
-    """Range read with manifest-stats DIRECTORY skipping: scan only the
-    chain dirs whose recorded [min, max] intersects the requested
-    range(s), then apply the exact predicate as a residual filter.
-    Single-column form: ``col`` + ``lower``/``upper`` (either bound
-    optional). Multi-column form: ``where={col: (lower, upper), ...}``
-    — the ranges AND together, so a dir is skipped when ANY column's
-    recorded range provably misses its bound (the conjunctive-skipping
-    rule Iceberg/Delta apply). Dirs with no stats for a column (older
-    appends, all-null batches) pass that column's check — unknown
-    means conservative, never wrong.
-
-    This is the metadata-skipping layer real table formats put ABOVE
-    parquet's row-group stats: a month-partitioned-by-arrival append
-    chain of 10^3 dirs serves a one-day range query by touching the
-    handful of dirs whose range overlaps it — zero file listings, zero
-    footer reads for the rest, because the decision reads ONLY the one
-    manifest already in hand. Inside the surviving dirs, pushdown
-    continues to parquet footers as usual (the residual filter reaches
-    the scan). Output schema is manifest-pinned like every other read
-    path. Time-ordered data is the textbook fit for one column;
-    multi-column boxes want the chain written in a z-order layout
-    (zorder_interleave) so both columns' per-dir ranges stay narrow —
-    pinned by the compose test in tests/test_stats_pruning.py.
-    """
-    from pyspark.sql import functions as F
-
-    if (col is None) == (where is None):
-        raise ValueError(
-            "read_version_stats_pruned takes either col (+ lower/upper) "
-            "or where={col: (lower, upper)}, not both"
-        )
-    if col is not None:
-        where = {col: (lower, upper)}
-    if all(lo is None and hi is None for lo, hi in where.values()):
-        raise ValueError("read_version_stats_pruned needs lower or upper")
-    version = _resolve_version(table_dir, version, as_of)
-    manifest = read_manifest(table_dir, version)
-    if manifest.get("bucket_by"):
-        # one catalog table = one dir; nothing to skip at dir level
-        return _apply_range_filter(
-            read_version(spark, table_dir, version), where
-        )
-    dirs = manifest.get("data_dirs") or [f"v={version:06d}"]
+def _window_survivors(manifest: dict, key: str, vals: list,
+                      dirs: list[str]) -> dict[str, list]:
+    """Per dir, the subset of ``vals`` inside its recorded [min, max]
+    window for ``key`` — an empty list is a RANGE PROOF the dir holds
+    none. Unknown/NaN stats degrade to "all values possible". Pure
+    manifest arithmetic (no Spark): the window half of the planner's
+    window-then-bloom rule."""
     stats = manifest.get("col_stats") or {}
-    kept = [
-        os.path.join(table_dir, d) for d in dirs
-        if _range_relation(stats.get(d), None, where) != "miss"
-    ]
-    return _apply_range_filter(
-        _scan_dirs(spark, manifest, kept, table_dir), where
-    )
-
-
-def read_version_bloom_pruned(spark: SparkSession, table_dir: str,
-                              col: str, values, version: int | None = None,
-                              as_of=None, detail: bool = False):
-    """Point lookup ``col IN (values)`` with BLOOM directory skipping:
-    scan only the chain dirs whose recorded bloom filter hits at least
-    one probe value, then apply the exact IN filter as a residual.
-
-    This is the pruning axis min/max stats cannot provide when the
-    column is UNSORTED across the chain — an id-keyed corpus appended
-    in arrival order gives every dir a [min, max] spanning the whole
-    keyspace, while each dir's bloom contains only its own keys, so a
-    K-id lookup over a 10^3-dir chain touches ~the dirs that actually
-    hold those ids (plus a fill^k false-positive tail, priced in the
-    write_version docstring). Soundness is one-directional by
-    construction: a bloom can only prove ABSENCE, a false positive
-    costs a wasted dir scan, and dirs without a bloom for ``col``
-    (published before bloom_for, or a different column set) are always
-    scanned — unknown means conservative, never wrong. Null probe
-    values are dropped (SQL ``col IN (...)`` never matches null).
-
-    The probe positions are computed by ONE tiny JVM job over the
-    probe values with the SAME hash expression the writer used
-    (``_bloom_positions_col`` — xxhash64 on the manifest-declared
-    column type), so writer and reader can never disagree on hashing.
-    With ``detail=True`` returns ``(df, {"missed", "scanned",
-    "unknown"})`` dir tallies (the plan-visible proof of the skip).
-    """
-    from pyspark.sql import functions as F
-
-    version = _resolve_version(table_dir, version, as_of)
-    manifest = read_manifest(table_dir, version)
-    dirs = manifest.get("data_dirs") or [f"v={version:06d}"]
-    schema = _scan_schema(manifest)
-    if col not in schema.fieldNames():
-        raise ValueError(f"{col!r} is not a column of {table_dir}")
-    vals = [v for v in values if v is not None]
-    if not vals:
-        return ((spark.createDataFrame([], schema),
-                 {"missed": len(dirs), "scanned": 0, "unknown": 0})
-                if detail else spark.createDataFrame([], schema))
-    hits = _bloom_hits(manifest, col, {d: vals for d in dirs},
-                       _jvm_bloom_positions(spark, manifest, col))
-    kept = [d for d in dirs if hits[d] is not False]
-    missed = sum(h is False for h in hits.values())
-    unknown = sum(h is None for h in hits.values())
-    scan = _scan_dirs(spark, manifest,
-                      [os.path.join(table_dir, d) for d in kept],
-                      table_dir)
-    out = scan.filter(F.col(col).isin(vals))
-    info = {"missed": missed, "scanned": len(kept) - unknown,
-            "unknown": unknown}
-    return (out, info) if detail else out
+    windowed: dict[str, list] = {}
+    for d in dirs:
+        ent = (stats.get(d) or {}).get(key)
+        if not ent or ent[0] is None or ent[1] is None:
+            windowed[d] = vals  # unknown range: every value is possible
+            continue
+        mn, mx = ent[0], ent[1]
+        if (isinstance(mn, float) and mn != mn) \
+                or (isinstance(mx, float) and mx != mx):
+            windowed[d] = vals  # NaN stats mean unknown
+            continue
+        cand = []
+        for v in vals:
+            # date/timestamp stats serialize as canonical strings whose
+            # lexicographic order is time order (the _range_relation
+            # normalization)
+            vv = (str(v) if isinstance(mn, str)
+                  and not isinstance(v, str) else v)
+            try:
+                if mn <= vv <= mx:
+                    cand.append(v)
+            except TypeError:
+                cand.append(v)  # incomparable: conservative
+        windowed[d] = cand
+    return windowed
 
 
 def _jvm_bloom_positions(spark: SparkSession, manifest: dict, col: str):
@@ -1744,8 +1649,8 @@ def _bloom_hits(manifest: dict, col: str, vals_by_dir: dict[str, list],
     """Probe each dir's recorded bloom filter for ``col`` against that
     dir's non-null values: True = at least one value may be present,
     False = PROVABLY none is (skippable), None = no bloom recorded or
-    no way to hash the column (unknown — scan). Shared by the
-    point-lookup read and every dir classifier.
+    no way to hash the column (unknown — scan). The bloom half of the
+    planner's window-then-bloom rule.
 
     ``positions(vals, bits, k)`` returns each value's bit positions,
     or None when it has no hash for the column type. It runs ONCE per
@@ -1775,6 +1680,172 @@ def _bloom_hits(manifest: dict, col: str, vals_by_dir: dict[str, list],
     return out
 
 
+def _plan_dirs(manifest: dict, where: dict | None = None,
+               probes: dict | None = None, positions=None,
+               meta: tuple | None = None) -> dict[str, str]:
+    """The read planner: ``{dir: "miss" | "full" | "partial"}`` for
+    every chain dir of ``manifest``, in chain order, from the manifest
+    alone. Unknown evidence never proves anything — it leaves
+    a dir partial, never skips it.
+
+    - ``where={col: (lower, upper)}`` (conjunctive closed ranges):
+      ``_range_relation`` with the manifest's ``dir_rows``, so an empty
+      dir, or one provably all-null for a bounded column, is a miss.
+      Without ``where`` every dir starts full.
+    - ``probes={col: [values, ...]}``: each value list is one ``IN``
+      conjunct. A dir is a miss when no value lies in its recorded
+      [min, max] window, or its bloom filter proves every window
+      survivor absent; each dir is probed only against its OWN window
+      survivors. A point lookup never proves every row matches, so a
+      probed dir that survives is partial. ``positions(col)`` returns
+      the column's ``positions(vals, bits, k)`` bloom hash (the JVM job
+      of ``_jvm_bloom_positions``, or the pure-Python ``xxh64`` twin in
+      the DataSource planning worker, where no SparkSession exists).
+    - ``meta=(col, width)``: the caller folds full dirs from metadata,
+      so a full dir lacking what the fold reads is demoted to partial.
+      ``col=None`` folds live row counts (``dir_rows`` minus the dir's
+      deletion-vector rows). Otherwise the fold reads ``col``'s stats
+      entries at least ``width`` long (2: min/max, 3: null count,
+      which a count subtracts from ``dir_rows``, 4: sum). Recorded
+      column values include rows a deletion vector deleted, so a dir
+      carrying deletion-vector rows is demoted for a column fold.
+    """
+    dirs = _chain_dirs(manifest)
+    stats = manifest.get("col_stats") or {}
+    dir_rows = manifest.get("dir_rows") or {}
+    plan = {d: (_range_relation(stats.get(d), dir_rows.get(d), where)
+                if where else "full") for d in dirs}
+    for col, val_lists in (probes or {}).items():
+        for vals in val_lists:
+            live = [d for d in dirs if plan[d] != "miss"]
+            need = {d: w for d, w in _window_survivors(
+                manifest, col, vals, live).items() if w}
+            hits = _bloom_hits(manifest, col, need, positions(col))
+            for d in live:
+                plan[d] = ("partial" if d in need and hits[d] is not False
+                           else "miss")
+    if meta is not None:
+        col, width = meta
+        dvc = (manifest.get("dv") or {}).get("dir_counts") or {}
+        for d in [d for d in dirs if plan[d] == "full"]:
+            ent = (stats.get(d) or {}).get(col)
+            known = d in dir_rows if col is None else (
+                ent is not None and len(ent) >= width and not dvc.get(d)
+                and (width != 3 or d in dir_rows))
+            if not known:
+                plan[d] = "partial"
+    return plan
+
+
+def _kept(table_dir: str, plan: dict, rel: tuple = ("full", "partial")):
+    """The absolute paths of the planned dirs whose verdict is in
+    ``rel`` (default: every non-miss dir), in chain order."""
+    return [os.path.join(table_dir, d) for d, r in plan.items() if r in rel]
+
+
+def read_version_stats_pruned(spark: SparkSession, table_dir: str,
+                              col: str | None = None, lower=None, upper=None,
+                              version: int | None = None,
+                              where: dict | None = None,
+                              as_of=None) -> DataFrame:
+    """Range read with manifest-stats DIRECTORY skipping: scan only the
+    chain dirs the planner cannot prove out of the requested range(s),
+    then apply the exact predicate as a residual filter.
+    Single-column form: ``col`` + ``lower``/``upper`` (either bound
+    optional). Multi-column form: ``where={col: (lower, upper), ...}``
+    — the ranges AND together, so a dir is skipped when ANY column's
+    recorded range provably misses its bound (the conjunctive-skipping
+    rule Iceberg/Delta apply), or the dir is empty or provably all-null
+    for a bounded column. Dirs with no stats for a column (older
+    appends) pass that column's check — unknown means conservative,
+    never wrong.
+
+    This is the metadata-skipping layer real table formats put ABOVE
+    parquet's row-group stats: a month-partitioned-by-arrival append
+    chain of 10^3 dirs serves a one-day range query by touching the
+    handful of dirs whose range overlaps it — zero file listings, zero
+    footer reads for the rest, because the decision reads ONLY the one
+    manifest already in hand. Inside the surviving dirs, pushdown
+    continues to parquet footers as usual (the residual filter reaches
+    the scan). Output schema is manifest-pinned like every other read
+    path. Time-ordered data is the textbook fit for one column;
+    multi-column boxes want the chain written in a z-order layout
+    (zorder_interleave) so both columns' per-dir ranges stay narrow —
+    pinned by the compose test in tests/test_stats_pruning.py.
+    """
+    if (col is None) == (where is None):
+        raise ValueError(
+            "read_version_stats_pruned takes either col (+ lower/upper) "
+            "or where={col: (lower, upper)}, not both"
+        )
+    if col is not None:
+        where = {col: (lower, upper)}
+    if all(lo is None and hi is None for lo, hi in where.values()):
+        raise ValueError("read_version_stats_pruned needs lower or upper")
+    manifest = _open_version(table_dir, version, as_of)
+    if manifest.get("bucket_by"):
+        # one catalog table = one dir; nothing to skip at dir level
+        return _apply_range_filter(
+            read_version(spark, table_dir, manifest["version"]), where
+        )
+    plan = _plan_dirs(manifest, where=where)
+    return _apply_range_filter(
+        _scan_dirs(spark, manifest, _kept(table_dir, plan), table_dir),
+        where)
+
+
+def read_version_bloom_pruned(spark: SparkSession, table_dir: str,
+                              col: str, values, version: int | None = None,
+                              as_of=None, detail: bool = False):
+    """Point lookup ``col IN (values)`` with BLOOM directory skipping:
+    scan only the chain dirs the planner's window-then-bloom rule
+    cannot prove free of every probe value, then apply the exact IN
+    filter as a residual.
+
+    This is the pruning axis min/max stats cannot provide when the
+    column is UNSORTED across the chain — an id-keyed corpus appended
+    in arrival order gives every dir a [min, max] spanning the whole
+    keyspace, while each dir's bloom contains only its own keys, so a
+    K-id lookup over a 10^3-dir chain touches ~the dirs that actually
+    hold those ids (plus a fill^k false-positive tail, priced in the
+    write_version docstring). A dir whose recorded [min, max] excludes
+    every probe is skipped without its bloom. Soundness is
+    one-directional by construction: a bloom can only prove ABSENCE, a
+    false positive costs a wasted dir scan, and dirs without a bloom
+    for ``col`` (published before bloom_for, or a different column
+    set) are scanned unless their window proves them out — unknown
+    means conservative, never wrong. Null probe values are dropped (SQL
+    ``col IN (...)`` never matches null).
+
+    The probe positions are computed by ONE tiny JVM job over the
+    probe values with the SAME hash expression the writer used
+    (``_bloom_positions_col`` — xxhash64 on the manifest-declared
+    column type), so writer and reader can never disagree on hashing.
+    With ``detail=True`` returns ``(df, {"missed", "scanned",
+    "unknown"})`` dir tallies (the plan-visible proof of the skip;
+    ``unknown`` counts the scanned dirs that carry no bloom for
+    ``col``).
+    """
+    from pyspark.sql import functions as F
+
+    manifest = _open_version(table_dir, version, as_of)
+    if col not in _scan_schema(manifest).fieldNames():
+        raise ValueError(f"{col!r} is not a column of {table_dir}")
+    vals = [v for v in values if v is not None]
+    plan = _plan_dirs(
+        manifest, probes={col: [vals]},
+        positions=lambda c: _jvm_bloom_positions(spark, manifest, c))
+    out = _scan_dirs(spark, manifest, _kept(table_dir, plan),
+                     table_dir).filter(F.col(col).isin(vals))
+    if not detail:
+        return out
+    blooms = manifest.get("bloom") or {}
+    kept = [d for d, r in plan.items() if r != "miss"]
+    unknown = sum(not (blooms.get(d) or {}).get(col) for d in kept)
+    return out, {"missed": len(plan) - len(kept),
+                 "scanned": len(kept) - unknown, "unknown": unknown}
+
+
 def _apply_range_filter(df: DataFrame, where: dict) -> DataFrame:
     """The exact residual predicate a stats-pruned read/count applies
     inside surviving dirs (conjunctive closed ranges, SQL semantics)."""
@@ -1794,14 +1865,18 @@ def _scan_dirs(spark: SparkSession, manifest: dict,
                keep_pos: bool = False) -> DataFrame:
     """One manifest-pinned-schema scan over the given chain dirs
     (possibly none -> empty DataFrame); partition columns restored for
-    partitioned chains. The shared tail of the stats-pruned read and
-    the metadata count's partial-dir fallback. When the manifest
-    carries a deletion vector and ``table_dir`` is given, the DV
-    anti-join is applied here — every pruned/partial read path
-    therefore sees live rows only, from exactly one place.
+    partitioned chains, pre-evolution dirs null-padded. The one scan
+    every read path shares: ``read_version`` (all chain dirs), the
+    pruned reads (the planner's non-miss dirs), the metadata
+    aggregates' residual scan and the copy-on-write rewrites. When the
+    manifest carries a deletion vector and ``table_dir`` is given, the
+    DV anti-join is applied here — every read path therefore sees live
+    rows only, from exactly one place. Dirs holding no parquet file
+    (a zero-row partitioned append) are skipped.
     ``keep_pos=True`` keeps the per-row (file, row-index) helper pair
     (``_DV_COLS``) on the output — the join-classified wide-mutation
     paths derive each live row's chain dir from it."""
+
     schema = _scan_schema(manifest)
     dv_live = bool(manifest.get("dv")) and table_dir is not None
     want_pos = dv_live or keep_pos
@@ -1829,6 +1904,43 @@ def _scan_dirs(spark: SparkSession, manifest: dict,
     return out
 
 
+def _scan_partial(spark: SparkSession | None, table_dir: str,
+                  manifest: dict, plan: dict, where: dict | None,
+                  what: str, why: str) -> DataFrame | None:
+    """The one residual scan of the metadata aggregates: the live rows
+    of the planner's PARTIAL dirs under the exact range filter, or None
+    when every dir was answered from metadata. ``spark=None`` asserts
+    the metadata-only path: a partial dir raises instead of scanning."""
+    partial = [d for d, r in plan.items() if r == "partial"]
+    if not partial:
+        return None
+    if spark is None:
+        raise ValueError(
+            f"{what}({table_dir}): {len(partial)} chain dir(s) {why} — "
+            "pass a SparkSession to scan them"
+        )
+    scan = _scan_dirs(spark, manifest, _kept(table_dir, plan, ("partial",)),
+                      table_dir)
+    return _apply_range_filter(scan, where or {})
+
+
+def _tally(plan: dict, full: str) -> dict:
+    """The aggregates' dir tallies: missed, answered from metadata (under
+    the aggregate's own name), scanned."""
+    rels = list(plan.values())
+    return {"missed": rels.count("miss"), full: rels.count("full"),
+            "scanned": rels.count("partial")}
+
+
+def _bounded(where: dict | None) -> dict | None:
+    """``where`` when at least one of its bounds is set, else None (an
+    all-unbounded box is satisfied by every row, nulls included)."""
+    if where and any(lo is not None or hi is not None
+                     for lo, hi in where.values()):
+        return where
+    return None
+
+
 def count_version(spark: SparkSession | None, table_dir: str,
                   col: str | None = None, lower=None, upper=None,
                   version: int | None = None, where: dict | None = None,
@@ -1843,14 +1955,16 @@ def count_version(spark: SparkSession | None, table_dir: str,
     Unbounded (no ``col``/``where``): returns the manifest's exact
     ``row_count`` — no filesystem traffic beyond the one manifest JSON,
     no Spark job, works with ``spark=None``. Bounded: each chain dir is
-    classified by its recorded stats (``_range_relation``) — dirs whose
-    range provably misses contribute 0, dirs that provably lie FULLY
-    inside the bounds (min/max inside, zero recorded nulls) contribute
-    their recorded ``dir_rows`` count straight from the manifest, and
-    only the boundary-straddling remainder is scanned (one job over
-    those dirs with the exact residual filter). A month-long append
-    chain asked "how many rows in [day X, day Y]" therefore scans at
-    most the two dirs containing the endpoints.
+    classified by the read planner (``_plan_dirs``) — dirs whose range
+    provably misses contribute 0, dirs that provably lie FULLY inside
+    the bounds (min/max inside, zero recorded nulls) contribute their
+    recorded ``dir_rows`` count straight from the manifest, and only
+    the boundary-straddling remainder is scanned (one job over those
+    dirs with the exact residual filter). A month-long append chain
+    asked "how many rows in [day X, day Y]" therefore scans at most the
+    two dirs containing the endpoints. COUNT(*) stays metadata-exact
+    under deletion vectors: a full dir contributes its physical count
+    minus its recorded DV cardinality, both manifest numbers.
 
     ``spark`` may be ``None`` to ASSERT the metadata-only path: if any
     dir would need scanning, raises instead of guessing — the
@@ -1863,7 +1977,8 @@ def count_version(spark: SparkSession | None, table_dir: str,
     ``count_col`` switches to SQL ``COUNT(col)`` — NON-NULL rows of
     that column (composable with the same bounds). Metadata source: a
     provably-in-range dir contributes ``dir_rows − recorded null
-    count`` of the column; dirs without a recorded null count for it
+    count`` of the column; dirs without a recorded null count for it,
+    or carrying deletion-vector rows (whose null-ness is unrecorded),
     scan. Pre-evolution dirs (column didn't exist there) carry the
     backfilled all-null entry, so they contribute exactly 0 from
     metadata.
@@ -1875,72 +1990,31 @@ def count_version(spark: SparkSession | None, table_dir: str,
         )
     if col is not None:
         where = {col: (lower, upper)}
-    where = where or {}
-    version = _resolve_version(table_dir, version, as_of)
-    manifest = read_manifest(table_dir, version)
-    dirs = manifest.get("data_dirs") or [f"v={version:06d}"]
-    bounded = bool(where) and any(
-        lo is not None or hi is not None for lo, hi in where.values()
-    )
-    if not bounded and count_col is None:
-        info = {"missed": 0, "counted": len(dirs), "scanned": 0}
+    where = _bounded(where)
+    manifest = _open_version(table_dir, version, as_of)
+    if where is None and count_col is None:
+        info = {"missed": 0, "counted": len(_chain_dirs(manifest)),
+                "scanned": 0}
         return (manifest["row_count"], info) if detail else manifest["row_count"]
+    plan = _plan_dirs(manifest, where=where, meta=(count_col, 3))
     stats = manifest.get("col_stats") or {}
     dir_rows = manifest.get("dir_rows") or {}
-    rels = {
-        d: (_range_relation(stats.get(d), dir_rows.get(d), where)
-            if bounded else
-            ("full" if dir_rows.get(d) is not None else "partial"))
-        for d in dirs
-    }
     dvc = (manifest.get("dv") or {}).get("dir_counts") or {}
-    if count_col is not None:
-        # COUNT(col): a full dir needs the column's recorded null count
-        # on top of the range proof — dir contribution is rows − nulls.
-        # A dir with deletion-vector rows degrades to a scan: the
-        # deleted rows' null-ness is unrecorded, so metadata cannot
-        # split the DV count between null and non-null rows.
-        for d, r in rels.items():
-            if r != "full":
-                continue
-            ent = (stats.get(d) or {}).get(count_col)
-            if ent is None or len(ent) < 3 or dvc.get(d):
-                rels[d] = "partial"
-    # COUNT(*) stays metadata-exact under deletion vectors: a range-FULL
-    # proof covers every physical row, deleted ones included, so the
-    # dir's live contribution is its physical count minus its recorded
-    # DV cardinality — both manifest numbers
     total = sum(
-        dir_rows[d]
-        - (stats[d][count_col][2] if count_col is not None else 0)
-        - (0 if count_col is not None else dvc.get(d, 0))
-        for d, r in rels.items() if r == "full"
+        dir_rows[d] - (stats[d][count_col][2] if count_col is not None
+                       else dvc.get(d, 0))
+        for d, r in plan.items() if r == "full"
     )
-    partial = [d for d, r in rels.items() if r == "partial"]
-    if partial:
-        if spark is None:
-            raise ValueError(
-                f"count_version({table_dir}): {len(partial)} chain dir(s) "
-                "cannot be answered from manifest metadata (partial range "
-                "overlap, missing stats/null counts, or a pre-dir_rows "
-                "manifest) — pass a SparkSession to scan them"
-            )
+    scan = _scan_partial(
+        spark, table_dir, manifest, plan, where, "count_version",
+        "cannot be answered from manifest metadata (partial range "
+        "overlap, missing stats/null counts, or a pre-dir_rows manifest)")
+    if scan is not None:
         from pyspark.sql import functions as F
 
-        kept = [os.path.join(table_dir, d) for d in partial]
-        scan = _apply_range_filter(
-            _scan_dirs(spark, manifest, kept, table_dir), where)
-        if count_col is not None:
-            total += scan.agg(
-                F.count(count_col).alias("n")).first()["n"]
-        else:
-            total += scan.count()
-    info = {
-        "missed": sum(r == "miss" for r in rels.values()),
-        "counted": sum(r == "full" for r in rels.values()),
-        "scanned": len(partial),
-    }
-    return (total, info) if detail else total
+        total += (scan.agg(F.count(count_col).alias("n")).first()["n"]
+                  if count_col is not None else scan.count())
+    return (total, _tally(plan, "counted")) if detail else total
 
 
 def avg_version(spark: SparkSession | None, table_dir: str, col: str,
@@ -1997,12 +2071,14 @@ def sum_version(spark: SparkSession | None, table_dir: str, col: str,
     all-null dir records None = contributes nothing, still metadata).
     Bounded (``lower``/``upper`` on ``col``, or ``where={...}`` on any
     columns): provably-missing dirs contribute 0, provably-covered
-    dirs (the same ``_range_relation`` proof ``count_version`` uses)
+    dirs (the same ``_plan_dirs`` proof ``count_version`` uses)
     contribute their recorded sum, boundary-straddling dirs scan with
-    the exact residual filter. ``spark=None`` asserts the
-    metadata-only path by raising instead of scanning. Returns the sum
-    (None when no non-null values exist, matching SQL SUM), or
-    ``(sum, {"missed", "summed", "scanned"})`` with ``detail=True``.
+    the exact residual filter. A dir carrying deletion-vector rows
+    scans: its recorded sum includes the deleted values. ``spark=None``
+    asserts the metadata-only path by raising instead of scanning.
+    Returns the sum (None when no non-null values exist, matching SQL
+    SUM), or ``(sum, {"missed", "summed", "scanned"})`` with
+    ``detail=True``.
     """
     if where is not None and (lower is not None or upper is not None):
         raise ValueError(
@@ -2010,55 +2086,25 @@ def sum_version(spark: SparkSession | None, table_dir: str, col: str,
             "where={col: (lower, upper)}, not both"
         )
     if where is None:
-        where = ({col: (lower, upper)}
-                 if (lower is not None or upper is not None) else {})
-    version = _resolve_version(table_dir, version, as_of)
-    manifest = read_manifest(table_dir, version)
-    dirs = manifest.get("data_dirs") or [f"v={version:06d}"]
+        where = {col: (lower, upper)}
+    where = _bounded(where)
+    manifest = _open_version(table_dir, version, as_of)
+    plan = _plan_dirs(manifest, where=where, meta=(col, 4))
     stats = manifest.get("col_stats") or {}
-    dir_rows = manifest.get("dir_rows") or {}
-    bounded = bool(where) and any(
-        lo is not None or hi is not None for lo, hi in where.values()
-    )
-    dvc = (manifest.get("dv") or {}).get("dir_counts") or {}
-    rels = {}
-    for d in dirs:
-        rel = (_range_relation(stats.get(d), dir_rows.get(d), where)
-               if bounded else "full")
-        if rel == "full":
-            ent = (stats.get(d) or {}).get(col)
-            if ent is None or len(ent) < 4 or dvc.get(d):
-                # no recorded sum (float col / legacy manifest), or the
-                # dir carries deletion-vector rows — the recorded sum
-                # includes deleted values, so the dir must scan
-                rel = "partial"
-        rels[d] = rel
-    vals = [stats[d][col][3] for d, r in rels.items() if r == "full"]
-    known = [v for v in vals if v is not None]
-    partial = [d for d, r in rels.items() if r == "partial"]
-    if partial:
-        if spark is None:
-            raise ValueError(
-                f"sum_version({table_dir}): {len(partial)} chain dir(s) "
-                "cannot be answered from manifest metadata (partial "
-                "range overlap, non-integral column, or a pre-sum "
-                "manifest) — pass a SparkSession to scan them"
-            )
+    known = [stats[d][col][3] for d, r in plan.items() if r == "full"]
+    known = [v for v in known if v is not None]
+    scan = _scan_partial(
+        spark, table_dir, manifest, plan, where, "sum_version",
+        "cannot be answered from manifest metadata (partial range "
+        "overlap, non-integral column, or a pre-sum manifest)")
+    if scan is not None:
         from pyspark.sql import functions as F
 
-        kept = [os.path.join(table_dir, d) for d in partial]
-        scan = _apply_range_filter(
-            _scan_dirs(spark, manifest, kept, table_dir), where)
         s = scan.agg(F.sum(col).alias("s")).first()["s"]
         if s is not None:
             known.append(s)
     total = sum(known) if known else None
-    info = {
-        "missed": sum(r == "miss" for r in rels.values()),
-        "summed": sum(r == "full" for r in rels.values()),
-        "scanned": len(partial),
-    }
-    return (total, info) if detail else total
+    return (total, _tally(plan, "summed")) if detail else total
 
 
 def minmax_version(spark: SparkSession | None, table_dir: str, col: str,
@@ -2068,42 +2114,27 @@ def minmax_version(spark: SparkSession | None, table_dir: str, col: str,
     sound with NO null-count caveat because SQL MIN/MAX themselves
     ignore nulls, so an all-null or empty dir's [None, None] entry
     contributes nothing on either path. Dirs lacking a stats entry for
-    ``col`` (published before stats collection started) are scanned
-    and folded in; ``spark=None`` asserts the metadata-only path by
-    raising instead. Returns ``(min, max)`` — ``(None, None)`` for a
-    table with no non-null values. Date/timestamp stats come back as
-    their canonical strings (the manifest's serialized form, same
-    order), exactly as ``read_version_stats_pruned`` compares them.
+    ``col`` (published before stats collection started), or carrying
+    deletion-vector rows (the recorded extrema may BE deleted rows),
+    are scanned and folded in; ``spark=None`` asserts the
+    metadata-only path by raising instead. Returns ``(min, max)`` —
+    ``(None, None)`` for a table with no non-null values.
+    Date/timestamp stats come back as their canonical strings (the
+    manifest's serialized form, same order), exactly as
+    ``read_version_stats_pruned`` compares them.
     """
-    version = _resolve_version(table_dir, version, as_of)
-    manifest = read_manifest(table_dir, version)
-    dirs = manifest.get("data_dirs") or [f"v={version:06d}"]
+    manifest = _open_version(table_dir, version, as_of)
+    plan = _plan_dirs(manifest, meta=(col, 2))
     stats = manifest.get("col_stats") or {}
-    dvc = (manifest.get("dv") or {}).get("dir_counts") or {}
-    mins: list = []
-    maxs: list = []
-    unstatted = []
-    for d in dirs:
-        ent = (stats.get(d) or {}).get(col)
-        if ent is None or dvc.get(d):
-            # no recorded stats, or deletion-vector rows: the recorded
-            # extrema may BE deleted rows, so the dir must scan
-            unstatted.append(d)
-            continue
-        if ent[0] is not None:
-            mins.append(ent[0])
-            maxs.append(ent[1])
-    if unstatted:
-        if spark is None:
-            raise ValueError(
-                f"minmax_version({table_dir}): {len(unstatted)} chain "
-                f"dir(s) have no recorded stats for {col!r} — pass a "
-                "SparkSession to scan them"
-            )
+    ents = [stats[d][col] for d, r in plan.items() if r == "full"]
+    mins = [e[0] for e in ents if e[0] is not None]
+    maxs = [e[1] for e in ents if e[0] is not None]
+    scan = _scan_partial(spark, table_dir, manifest, plan, None,
+                         "minmax_version",
+                         f"have no recorded stats for {col!r}")
+    if scan is not None:
         from pyspark.sql import functions as F
 
-        kept = [os.path.join(table_dir, d) for d in unstatted]
-        scan = _scan_dirs(spark, manifest, kept, table_dir)
         mn, mx = F.min(col), F.max(col)
         if dict(scan.dtypes).get(col) in ("date", "timestamp",
                                           "timestamp_ntz"):
@@ -2152,12 +2183,12 @@ def fsck_table(table_dir: str, version: int | None = None,
     degrade those dirs, so physical agreement is the right contract).
     """
     findings: list[str] = []
-    version = _resolve_version(table_dir, version, None)
-    m = read_manifest(table_dir, version)
+    m = _open_version(table_dir, version, None)
+    version = m["version"]
     if m.get("bucket_by"):
         dirs = [f"v={version:06d}"]
     else:
-        dirs = m.get("data_dirs") or [f"v={version:06d}"]
+        dirs = _chain_dirs(m)
     dir_rows = m.get("dir_rows") or {}
     actual_rows: dict[str, int] = {}
     for d in dirs:
@@ -2477,74 +2508,6 @@ def _collect_keys(keys, key: str, max_keys: int) -> list:
     return [v for v in keys if v is not None]
 
 
-def _window_survivors(manifest: dict, key: str, vals: list,
-                      dirs: list[str]) -> dict[str, list]:
-    """Per dir, the subset of ``vals`` inside its recorded [min, max]
-    window for ``key`` — an empty list is a RANGE PROOF the dir holds
-    none. Unknown/NaN stats degrade to "all values possible". Pure
-    manifest arithmetic (no Spark), shared by the CoW classifiers and
-    the ``mr4ver`` DataSource's planning-time pruning."""
-    stats = manifest.get("col_stats") or {}
-    windowed: dict[str, list] = {}
-    for d in dirs:
-        ent = (stats.get(d) or {}).get(key)
-        if not ent or ent[0] is None or ent[1] is None:
-            windowed[d] = vals  # unknown range: every value is possible
-            continue
-        mn, mx = ent[0], ent[1]
-        if (isinstance(mn, float) and mn != mn) \
-                or (isinstance(mx, float) and mx != mx):
-            windowed[d] = vals  # NaN stats mean unknown
-            continue
-        cand = []
-        for v in vals:
-            # date/timestamp stats serialize as canonical strings whose
-            # lexicographic order is time order (the _range_relation
-            # normalization)
-            vv = (str(v) if isinstance(mn, str)
-                  and not isinstance(v, str) else v)
-            try:
-                if mn <= vv <= mx:
-                    cand.append(v)
-            except TypeError:
-                cand.append(v)  # incomparable: conservative
-        windowed[d] = cand
-    return windowed
-
-
-def _classify_key_dirs(manifest: dict, key: str, vals: list,
-                       dirs: list[str], positions) -> dict[str, bool]:
-    """Classify each chain dir as True (may hold one of ``vals`` in
-    ``key``) or False (PROVABLY holds none), from the manifest alone:
-    first the recorded [min, max] window discards values outside the
-    dir's range, then the dir's bloom filter (when recorded) must hit
-    at least one survivor. Unknown stats/bloom degrade to True —
-    conservative, never wrong. Nulls in the dir never matter: a null
-    key equals no value.
-
-    ``positions`` hashes values to bloom bit positions (see
-    ``_bloom_hits``): the JVM job of ``_jvm_bloom_positions`` for the
-    copy-on-write classifiers, the pure-Python ``xxh64`` twin for the
-    ``mr4ver`` DataSource's planning-time pruning — one rule for both
-    read surfaces."""
-    # each dir is probed ONLY against its own window survivors — a
-    # value provably outside dir d's [min, max] must not be able to
-    # bloom-hit d and force an unnecessary rewrite
-    need = {d: w for d, w in _window_survivors(manifest, key, vals,
-                                               dirs).items() if w}
-    hits = _bloom_hits(manifest, key, need, positions)
-    return {d: d in need and hits[d] is not False for d in dirs}
-
-
-def _dirs_maybe_holding_keys(spark: SparkSession, manifest: dict,
-                             key: str, vals: list,
-                             dirs: list[str]) -> dict:
-    """``_classify_key_dirs`` with bloom positions from the JVM hash —
-    the copy-on-write classifiers' form."""
-    return _classify_key_dirs(manifest, key, vals, dirs,
-                              _jvm_bloom_positions(spark, manifest, key))
-
-
 def _cow_publish(spark: SparkSession, table_dir: str, pm: dict,
                  keep_dirs: list[str], new_df: DataFrame | None,
                  manifest_extra: dict | None = None,
@@ -2647,11 +2610,11 @@ def _cow_dml(spark: SparkSession, table_dir: str, verb: str, joined: bool,
        and the key/column checks.
     2. Classify the chain dirs into untouched (carried by reference),
        rewritten, and — for a range delete only — dropped whole.
-       ``pruned`` classifies from the manifest: keys by
-       ``_dirs_maybe_holding_keys`` (driver-bounded by ``max_keys``),
-       ``where`` ranges by ``_range_relation``. ``joined`` classifies
-       by ``_dirs_holding_keys_joined``'s one-scan LeftSemi (exact,
-       keys never collected).
+       ``pruned`` classifies from the manifest in one ``_plan_dirs``
+       call: keys as a point-lookup conjunct (driver-bounded by
+       ``max_keys``), ``where`` as ranges; miss dirs are untouched.
+       ``joined`` classifies by ``_dirs_holding_keys_joined``'s
+       one-scan LeftSemi (exact, keys never collected).
     3. Scan the rewrite dirs live (deletion vectors honored) and apply
        the verb: delete drops matching rows, update rewrites
        ``assignments`` on them (evaluated against the OLD row, cast
@@ -2690,29 +2653,26 @@ def _cow_dml(spark: SparkSession, table_dir: str, verb: str, joined: bool,
         )
     dirs = _chain_dirs(pm)
     key_src = updates if updates is not None else keys
-    dropped: list[str] = []  # keys can never prove a WHOLE dir gone
+    dropped: list[str] = []
     if joined:
         keyset = key_src.select(key).dropna().distinct()
         rewrite = _dirs_holding_keys_joined(
             spark, pm, table_dir, keyset, key, dirs)
-    elif key is not None:
-        vals = _collect_keys(key_src, key, max_keys)
-        holding = _dirs_maybe_holding_keys(spark, pm, key, vals, dirs)
-        rewrite = [d for d in dirs if holding[d]]
-        cond = _delete_cond(key, vals, None, None)
     else:
-        stats = pm.get("col_stats") or {}
-        dir_rows = pm.get("dir_rows") or {}
-        rels = {d: _range_relation(stats.get(d), dir_rows.get(d), where)
-                for d in dirs}
-        # every row of a "full" dir provably matches: a delete drops it
-        # whole with zero data movement (the retention shape), an
-        # update must still rewrite it
+        vals = (_collect_keys(key_src, key, max_keys)
+                if key is not None else None)
+        plan = _plan_dirs(
+            pm, where=where, probes={key: [vals]} if vals is not None
+            else None,
+            positions=lambda c: _jvm_bloom_positions(spark, pm, c))
+        # every row of a "full" dir provably matches (only a range can
+        # prove that): a delete drops it whole with zero data movement
+        # (the retention shape), an update must still rewrite it
         drop_full = verb == "delete"
-        dropped = [d for d in dirs if drop_full and rels[d] == "full"]
-        rewrite = [d for d in dirs if rels[d] == "partial"
-                   or (rels[d] == "full" and not drop_full)]
-        cond = _delete_cond(None, None, None, where)
+        dropped = [d for d in dirs if drop_full and plan[d] == "full"]
+        rewrite = [d for d in dirs if plan[d] == "partial"
+                   or (plan[d] == "full" and not drop_full)]
+        cond = _delete_cond(key, vals, None, where)
     moved = set(rewrite) | set(dropped)
     untouched = [d for d in dirs if d not in moved]
     new_df = None
@@ -2845,8 +2805,8 @@ def _dirs_holding_keys_joined(spark: SparkSession, pm: dict,
                               table_dir: str, keys_df: DataFrame,
                               key: str, dirs: list[str]) -> list[str]:
     """The chain dirs holding at least one LIVE row whose ``key``
-    appears in ``keys_df`` — the join-based twin of
-    ``_dirs_maybe_holding_keys`` for key sets too wide to collect:
+    appears in ``keys_df`` — the join-based twin of the planner's
+    point-lookup verdict for key sets too wide to collect:
     one chain scan with the (file, row-index) metadata pair attached,
     a LeftSemi join against the key set, and a distinct over the
     derived dir names. The only driver-side materialization is the
@@ -2866,24 +2826,10 @@ def _dirs_holding_keys_joined(spark: SparkSession, pm: dict,
 
     env = keys_df.agg(F.min(key), F.max(key)).first()
     if env[0] is not None:
-        survivors = _window_survivors(pm, key, [env[0], env[1]], dirs)
-        # a dir is scannable iff its window intersects [kmin, kmax]:
-        # both envelope ends outside AND no overlap <=> neither end
-        # windowed AND the window is not strictly inside the envelope
-        stats = pm.get("col_stats") or {}
-
-        def _may_hold(d):
-            if survivors[d]:
-                return True  # an envelope end lands in the window
-            ent = (stats.get(d) or {}).get(key)
-            if not ent or ent[0] is None or ent[1] is None:
-                return True  # unknown stats: conservative
-            try:
-                # window strictly inside the envelope still intersects
-                return env[0] <= ent[0] and ent[1] <= env[1]
-            except TypeError:
-                return True
-        dirs = [d for d in dirs if _may_hold(d)]
+        # a dir whose window misses [kmin, kmax] (or that is empty or
+        # all-null for the key) provably holds none of the keys
+        plan = _plan_dirs(pm, where={key: (env[0], env[1])})
+        dirs = [d for d in dirs if plan[d] != "miss"]
         if not dirs:
             return []
     dirs_abs = [os.path.join(table_dir, d) for d in dirs]
@@ -3349,7 +3295,7 @@ def vacuum(table_dir: str, keep_last: int = 1,
     live_dv = set()
     for v in kept:
         m = read_manifest(table_dir, v)
-        for d in m.get("data_dirs") or [f"v={v:06d}"]:
+        for d in _chain_dirs(m):
             live_dirs.add(d)
         if m.get("dv"):
             live_dv.add(m["dv"]["path"])

@@ -20,6 +20,17 @@ from mapreduce_4_spark.sources.versioned import (
 )
 
 
+def _classify_key_dirs(m, col, vals, dirs, positions):
+    """The read planner's verdict on one point-lookup conjunct: True
+    when a dir may hold one of ``vals`` in ``col``, False when the
+    window-then-bloom rule proves it holds none."""
+    from mapreduce_4_spark.sources.versioned import _plan_dirs
+
+    plan = _plan_dirs(m, probes={col: [vals]},
+                      positions=lambda _col: positions)
+    return {d: plan[d] != "miss" for d in dirs}
+
+
 def _ks(spark, start, n):
     return spark.range(start, start + n).withColumnRenamed("id", "k")
 
@@ -915,7 +926,7 @@ def test_cow_bloom_probe_is_per_dir_window(spark, tmp_path):
     hit the OTHER dir's key — the window restriction must still prove
     dir 1 out."""
     from mapreduce_4_spark.sources.versioned import (
-        _dirs_maybe_holding_keys,
+        _jvm_bloom_positions,
         read_manifest,
         write_version,
     )
@@ -932,7 +943,8 @@ def test_cow_bloom_probe_is_per_dir_window(spark, tmp_path):
     # contains exactly dir 2's keys (so the union probe would hit it
     # on 1005) while its recorded window stays [0, 9]
     m["bloom"][d1] = m["bloom"][d2]
-    out = _dirs_maybe_holding_keys(spark, m, "k", [5, 1005], [d1, d2])
+    out = _classify_key_dirs(m, "k", [5, 1005], [d1, d2],
+                             _jvm_bloom_positions(spark, m, "k"))
     # 5 is in dir 1's window but misses its (swapped) bloom; 1005 is
     # outside dir 1's window and MUST NOT be probed against it
     assert out == {d1: False, d2: True}
@@ -947,7 +959,6 @@ def test_key_dir_classifier_agrees_across_hash_twins(spark, tmp_path):
     (never a false skip)."""
     from mapreduce_4_spark.sources import xxh64
     from mapreduce_4_spark.sources.versioned import (
-        _classify_key_dirs,
         _jvm_bloom_positions,
         read_manifest,
         write_version,
@@ -1069,3 +1080,87 @@ def test_compact_tail_reapplies_zorder_discipline(spark, tmp_path):
             ranges.append((min(vs), max(vs)))
     ranges.sort()
     assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
+
+
+def test_every_read_surface_plans_the_same_dirs(spark, tmp_path):
+    """One read planner decides which chain dirs every surface touches.
+    A schema-evolved chain read on the evolved column (its first dir is
+    provably all-null there) and a chain whose first dir carries stats
+    but no bloom, probed with values outside that dir's window: the
+    stats-/bloom-pruned reads scan, ``count_version`` leaves unmissed
+    and the mr4ver reader plans exactly the same dirs."""
+    import os
+
+    from mapreduce_4_spark.sources.pyds import Mr4VersionedReader
+    from mapreduce_4_spark.sources.versioned import (
+        _scan_schema,
+        count_version,
+        latest_version,
+        read_version_bloom_pruned,
+    )
+
+    def scanned(df):
+        return {os.path.basename(os.path.dirname(p))
+                for p in df.inputFiles()}
+
+    def planned(tdir, opts):
+        m = read_manifest(tdir, latest_version(tdir))
+        parts = Mr4VersionedReader(tdir, m, _scan_schema(m),
+                                   opts).partitions()
+        return {os.path.basename(os.path.dirname(p.path)) for p in parts}
+
+    evolved = str(tmp_path / "evolved")
+    write_version(_ks(spark, 0, 10), evolved, append=True, stats_for=["k"])
+    write_version(_ks(spark, 100, 10).withColumn("c", F.col("k")), evolved,
+                  append=True, stats_for=["k", "c"])
+    where = {"c": (100, 120)}
+    n, info = count_version(spark, evolved, where=where, detail=True)
+    assert n == 10
+    by_read = scanned(read_version_stats_pruned(spark, evolved, where=where))
+    assert by_read == planned(evolved, {"where": "c:100:120"}) \
+        == {"v=000002"}
+    assert info["counted"] + info["scanned"] == len(by_read)
+
+    bloomed = str(tmp_path / "bloomed")
+    write_version(_ks(spark, 0, 10), bloomed, append=True, stats_for=["k"])
+    write_version(_ks(spark, 10, 10), bloomed, append=True,
+                  stats_for=["k"], bloom_for=["k"], bloom_bits=512)
+    write_version(_ks(spark, 20, 10), bloomed, append=True)
+    df, info = read_version_bloom_pruned(spark, bloomed, "k",
+                                         [15, 25, 1000], detail=True)
+    assert sorted(r["k"] for r in df.collect()) == [15, 25]
+    assert scanned(df) == planned(bloomed, {"probe": "k:15,25,1000"}) \
+        == {"v=000002", "v=000003"}
+    assert info == {"missed": 1, "scanned": 2, "unknown": 0}
+
+
+def test_every_reader_refuses_an_unpublished_version(spark, tmp_path):
+    """One resolve-and-read prologue: an explicit version with no
+    manifest raises read_version's "not published" error from every
+    reader, aggregate and the mr4ver front door, never a raw errno."""
+    from mapreduce_4_spark.sources.pyds import Mr4VersionedDataSource
+    from mapreduce_4_spark.sources.versioned import (
+        count_version,
+        minmax_version,
+        read_version_bloom_pruned,
+        read_version_pruned,
+        sum_version,
+    )
+
+    tdir = str(tmp_path / "t")
+    _chain(spark, tdir)
+    for read in (
+            lambda: read_version(spark, tdir, version=9),
+            lambda: read_version_pruned(spark, tdir, {"p": [1]}, version=9),
+            lambda: read_version_stats_pruned(spark, tdir, "k", lower=1,
+                                              version=9),
+            lambda: read_version_bloom_pruned(spark, tdir, "k", [1],
+                                              version=9),
+            lambda: count_version(None, tdir, version=9),
+            lambda: sum_version(None, tdir, "k", version=9),
+            lambda: minmax_version(None, tdir, "k", version=9),
+            lambda: Mr4VersionedDataSource(
+                options={"path": tdir, "version": "9"}).schema()):
+        with pytest.raises(FileNotFoundError,
+                           match="version 9 not published"):
+            read()
