@@ -642,14 +642,7 @@ class Mr4VersionedReader(DataSourceReader):
         type the twin does not cover."""
         from mapreduce_4_spark.sources import xxh64
 
-        ctype = self.col_types.get(col)
-
-        def positions(vals, bits, k):
-            if ctype not in xxh64.SUPPORTED_TYPES:
-                return None
-            return [xxh64.bloom_positions(v, ctype, bits, k) for v in vals]
-
-        return positions
+        return xxh64.positions_for(self.col_types.get(col))
 
     # planning-time ceiling on inlined deletion-vector positions: the
     # per-file position tuples ride inside the pickled partitions, so a

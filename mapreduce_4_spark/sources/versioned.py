@@ -29,6 +29,20 @@ under the contract it can only mean the contract was broken;
 optimistic CAS retry loop (``_commit_staged``) over staged data, the
 same commit protocol Iceberg/Delta run on an object store.
 
+A commit is ONE Spark job for its data: the write. The new dir's
+``col_stats`` (min, max, null count, integer sum) ride that job as a
+``DataFrame.observe`` attached to the exact frame handed to the writer,
+after any repartition or sort (``_write_observed``), with the row
+count observed beside them. That places the observation in the write
+job's result stage, whose accumulator updates Spark merges once per
+partition however many task attempts ran, so it counts each written
+row exactly once; and the publish still checks the observed count
+against the footer row count, scanning the written dir (never the
+input lineage) if they differ (``_new_dir_meta``). Bloom filters scan
+the written dir. No commit re-runs its input's lineage, and every
+scan reads with the schema the manifest records, so no footer
+inference job runs either.
+
 Read planner: every read path decides which chain dirs it touches
 through one function. ``_open_version`` resolves the addressed version
 (number, tag, ``as_of`` or latest) and reads its manifest.
@@ -164,23 +178,16 @@ _STATS_TYPES = {"tinyint", "smallint", "int", "bigint", "float", "double",
 _SUMMABLE_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
-def _column_stats(df: DataFrame, cols: list[str]) -> dict:
-    """{col: [min, max, null_count(, sum)]} for ``cols``, from ONE
-    aggregate job over ``df`` — the O(batch) metadata cost a
-    stats-carrying publish pays. All-null/empty input yields
-    [None, None, n(, None)], which range readers treat as 'unknown'
-    (scan, never skip). The null count is what lets ``count_version``
-    answer a range COUNT from metadata alone (min/max ignore nulls, so
-    a dir whose recorded range sits fully inside the requested bounds
-    still is not fully COUNTABLE unless it provably holds zero nulls);
-    the sum — recorded for integral columns only, where re-association
-    is exact — is ``sum_version``'s source the same way. Manifests
-    written before these fields carry 2-element entries; readers treat
-    the missing fields as unknown (never fully countable/summable,
-    still skippable/scannable as before)."""
+def _stats_exprs(dtypes: dict, cols: list[str]) -> list:
+    """The aggregate expressions of a dir's ``col_stats`` entries for
+    ``cols`` (``dtypes``: the frame's column -> type name). The ONE
+    builder both evaluation sites use: the observation a publish
+    attaches to its write job (``_write_observed``) and the scanning
+    ``_column_stats`` (``analyze_table``, ``fsck_table``, and a publish
+    whose observation could not be trusted). ``_stats_from_row`` reads
+    the result back."""
     from pyspark.sql import functions as F
 
-    dtypes = dict(df.dtypes)
     exprs = []
     for c in cols:
         t = dtypes.get(c)
@@ -198,7 +205,12 @@ def _column_stats(df: DataFrame, cols: list[str]) -> dict:
                   nulls.alias(f"nu_{c}")]
         if t in _SUMMABLE_TYPES:
             exprs.append(F.sum(F.col(c).cast("bigint")).alias(f"su_{c}"))
-    row = df.agg(*exprs).first()
+    return exprs
+
+
+def _stats_from_row(row, dtypes: dict, cols: list[str]) -> dict:
+    """{col: [min, max, null_count(, sum)]} from one evaluated row (or
+    observed-metrics dict) of ``_stats_exprs``."""
     out = {}
     for c in cols:
         ent = [row[f"mn_{c}"], row[f"mx_{c}"], int(row[f"nu_{c}"] or 0)]
@@ -207,6 +219,105 @@ def _column_stats(df: DataFrame, cols: list[str]) -> dict:
             ent.append(int(s) if s is not None else None)
         out[c] = ent
     return out
+
+
+def _column_stats(df: DataFrame, cols: list[str]) -> dict:
+    """{col: [min, max, null_count(, sum)]} for ``cols``, from ONE
+    aggregate over ``df`` — a scan of an existing dir (``analyze_table``
+    backfills, ``fsck_table``'s deep check, a publish's fallback when
+    its write-job observation is unusable). A publish normally records
+    the same entries without any scan: ``_write_observed`` evaluates
+    the same ``_stats_exprs`` on the write job itself. All-null/empty
+    input yields
+    [None, None, n(, None)], which range readers treat as 'unknown'
+    (scan, never skip). The null count is what lets ``count_version``
+    answer a range COUNT from metadata alone (min/max ignore nulls, so
+    a dir whose recorded range sits fully inside the requested bounds
+    still is not fully COUNTABLE unless it provably holds zero nulls);
+    the sum — recorded for integral columns only, where re-association
+    is exact — is ``sum_version``'s source the same way. Manifests
+    written before these fields carry 2-element entries; readers treat
+    the missing fields as unknown (never fully countable/summable,
+    still skippable/scannable as before)."""
+    dtypes = dict(df.dtypes)
+    return _stats_from_row(df.agg(*_stats_exprs(dtypes, cols)).first(),
+                           dtypes, cols)
+
+
+#: the observed row count's name in a write job's observation
+_OBS_ROWS = "__mr4_rows"
+
+
+def _write_observed(df: DataFrame, cols: list[str] | None, write):
+    """Run ``write(frame)`` with ``frame`` = ``df`` observing its row
+    count and ``cols``' stats expressions (``_stats_exprs``) — the dir's
+    stats come from the write job itself, with no second pass over
+    ``df``'s lineage and no read-back of the written files. Returns
+    ``(observed_rows, {col: entry})``, or None when nothing was observed
+    (no ``cols``, or Spark reported no metrics).
+
+    ``df`` must be the exact frame handed to the writer, after any
+    repartition or sort: the observation then sits in the write job's
+    RESULT stage. Spark merges a result task's accumulator updates
+    once per partition, whatever retries or speculative copies ran, so
+    the observed aggregates count every written row exactly once (an
+    observation placed before a shuffle would sit in a map stage,
+    which a fetch failure can re-run and count twice). The caller
+    still compares ``observed_rows`` with the footer row count and
+    scans the written dir when they differ (``_new_dir_meta``)."""
+    if not cols:
+        write(df)
+        return None
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    dtypes = dict(df.dtypes)
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias(_OBS_ROWS),
+                     *_stats_exprs(dtypes, cols)))
+    # the metrics are set when the write action returns; never block
+    # on them (Observation.get waits forever if a plan dropped them)
+    if obs._jo.getRowOrEmpty().isEmpty():
+        return None
+    got = obs.get
+    return got[_OBS_ROWS], _stats_from_row(got, dtypes, cols)
+
+
+def _parquet_write(path: str, partition_by: list[str] | None):
+    """``_write_observed``'s ``write`` for a plain or hive-partitioned
+    chain dir at ``path`` (refusing to write over an existing one)."""
+    def write(frame):
+        writer = frame.write.mode("errorifexists")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+
+    return write
+
+
+def _new_dir_meta(spark: SparkSession, m: dict, data_dir: str, rows: int,
+                  observed) -> tuple:
+    """The ``(col_stats, bloom)`` entries of the dir a commit just wrote
+    at ``data_dir`` (``rows``: its footer row count) for the derived
+    manifest ``m``'s column sets; None for a set ``m`` does not carry.
+    Stats are the write job's observation (``_write_observed``) when
+    it counted exactly the footer rows and covers ``m["stats_for"]``.
+    Otherwise, and for blooms, the written dir is scanned through the
+    manifest-pinned ``_scan_dirs``: no commit re-executes its input
+    lineage."""
+    stats_for, bloom_for = m["stats_for"], m["bloom_for"]
+    stats = bloom = None
+    if stats_for:
+        if (observed is not None and observed[0] == rows
+                and set(stats_for) <= set(observed[1])):
+            stats = {c: observed[1][c] for c in stats_for}
+        else:
+            stats = _column_stats(_scan_dirs(spark, m, [data_dir]),
+                                  stats_for)
+    if bloom_for:
+        bloom = _dir_bloom(_scan_dirs(spark, m, [data_dir]), bloom_for,
+                           m["bloom_bits"])
+    return stats, bloom
 
 
 #: bloom hash functions per value (positions = pmod(xxhash64(seed, col),
@@ -715,8 +826,10 @@ def write_version(df: DataFrame, table_dir: str,
     probe that touches only the batch's partitions of the whole chain.
 
     With ``stats_for=[cols]``, the manifest records per-data-dir
-    min/max for those columns (ONE extra aggregate job over ``df`` —
-    O(batch) on appends) and ``read_version_stats_pruned`` skips whole
+    min/max/null count (and integer sums) for those columns — observed
+    on the write job itself (``_write_observed``), so collecting them
+    costs no extra Spark job and never re-runs ``df``'s lineage — and
+    ``read_version_stats_pruned`` skips whole
     chain dirs whose range provably misses a predicate — the
     Iceberg-style metadata-skipping layer above parquet's own
     row-group stats. Appends INHERIT the chain's stats columns when
@@ -762,14 +875,14 @@ def write_version(df: DataFrame, table_dir: str,
     nonce = uuid.uuid4().hex[:12]
     if bucket_by:
         sort_cols = sort_by or bucket_by
-        (
-            df.write.mode("errorifexists")
+        observed = _write_observed(
+            df, m["stats_for"],
+            lambda frame: frame.write.mode("errorifexists")
             .bucketBy(n_buckets, *bucket_by)
             .sortBy(*sort_cols)
             .option("path", data_dir)
             .format("parquet")
-            .saveAsTable(_catalog_name(table_dir, version, nonce))
-        )
+            .saveAsTable(_catalog_name(table_dir, version, nonce)))
     else:
         if sort_by:
             n = n_files or df.sparkSession.conf.get(
@@ -789,20 +902,14 @@ def write_version(df: DataFrame, table_dir: str,
                 .sortWithinPartitions("__mr4_zval")
                 .drop("__mr4_zval")
             )
-        writer = df.write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        observed = _write_observed(df, m["stats_for"],
+                                   _parquet_write(data_dir, partition_by))
     # exact count from the footers just written — no second data scan
     # (append: parent's manifest count + the new dir's footers)
     new_rows = fsio.parquet_row_count(data_dir)
-    _add_dir(
-        m, f"v={version:06d}", new_rows,
-        _column_stats(df, m["stats_for"]) if m["stats_for"] else None,
-        (_dir_bloom(df, m["bloom_for"], m["bloom_bits"])
-         if m["bloom_for"] else None),
-        _hive_parts(data_dir) if partition_by else None,
-    )
+    _add_dir(m, f"v={version:06d}", new_rows,
+             *_new_dir_meta(df.sparkSession, m, data_dir, new_rows, observed),
+             _hive_parts(data_dir) if partition_by else None)
     if not append:
         m["data_dirs"] = None  # a full snapshot reads its own dir
     m.update(version=version, parent=parent,
@@ -867,24 +974,30 @@ def write_version_concurrent(df: DataFrame, table_dir: str,
     nonce = uuid.uuid4().hex[:12]
     staged_rel = _staged_rel(nonce)
     staged_dir = os.path.join(table_dir, staged_rel)
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staged_dir)
-    mine: dict = {}  # this writer's aggregates, computed at most once
+    # observe the stats columns the commit will most likely need: the
+    # explicit ones, else (appends) the current head's — a commit that
+    # lands on a head asking for others scans the staged dir instead
+    want = stats_for
+    head = latest_version(table_dir)
+    if want is None and append and head is not None:
+        want = read_manifest(table_dir, head).get("stats_for")
+    dtypes = dict(df.dtypes)
+    observed = _write_observed(
+        df, [c for c in want or () if dtypes.get(c) in _STATS_TYPES],
+        _parquet_write(staged_dir, partition_by))
+    new_rows = fsio.parquet_row_count(staged_dir)
+    mine: dict = {}  # this writer's entries per column set, made once
 
     def dir_meta(m):
-        stats_for, bloom_for = m["stats_for"], m["bloom_for"]
-        if stats_for and set(mine.get("stats", ())) != set(stats_for):
-            mine["stats"] = _column_stats(df, stats_for)
-        if bloom_for and set(mine.get("bloom", ())) != set(bloom_for):
-            mine["bloom"] = _dir_bloom(df, bloom_for, m["bloom_bits"])
-        return (mine["stats"] if stats_for else None,
-                mine["bloom"] if bloom_for else None)
+        sets = (tuple(m["stats_for"] or ()), tuple(m["bloom_for"] or ()),
+                m["bloom_bits"])
+        if sets not in mine:
+            mine[sets] = _new_dir_meta(df.sparkSession, m, staged_dir,
+                                       new_rows, observed)
+        return mine[sets]
 
     return _commit_staged(
-        table_dir, staged_rel, df.schema,
-        fsio.parquet_row_count(staged_dir), append,
+        table_dir, staged_rel, df.schema, new_rows, append,
         "append-concurrent" if append else "replace-concurrent",
         batch_id=batch_id, max_retries=max_retries,
         partition_by=partition_by,
@@ -1022,10 +1135,11 @@ def _nullable_deep(dt):
 def _scan_schema(manifest: dict):
     """The manifest schema as a SCAN sees it: every field nullable at
     every nesting level (a parquet read never guarantees non-null),
-    manifest-declared types. Every read path (``_scan_dirs``, which
-    ``read_version`` and the pruned readers share, and
-    ``read_version_pruned``) pins its output to this, so they can never
-    disagree with each other or with an empty result's schema."""
+    manifest-declared types. ``_scan_dirs`` (which ``read_version``,
+    the pruned readers, the aggregates and the commits share) hands it
+    to the parquet reader, and ``read_version_pruned`` pins its output
+    to it, so no read path infers a schema from footers and none can
+    disagree with another or with an empty result's schema."""
     from pyspark.sql.types import StructType
 
     return _nullable_deep(StructType.fromJson(manifest["schema"]))
@@ -1083,6 +1197,10 @@ def _conform_to_schema(df: DataFrame, manifest: dict,
 
 _DV_COLS = ("__mr4_dv_file", "__mr4_dv_pos")
 
+#: a deletion-vector sidecar's schema: table-relative file path and the
+#: parquet row index within it
+_DV_SCHEMA = "file string, pos long"
+
 # broadcast the DV side of the anti-join below this many deleted rows
 # (two slim columns — well under Spark's 8 GB broadcast ceiling); bigger
 # DVs fall back to a shuffled anti-join, and SHOULD be compacted away
@@ -1125,11 +1243,13 @@ def _dv_frame(spark: SparkSession, table_dir: str, manifest: dict):
     """The manifest's deletion-vector sidecar as a (file, pos)
     DataFrame, broadcast-hinted while it is provably small (the
     manifest records its exact cardinality, so the decision is
-    metadata, not an estimate)."""
+    metadata, not an estimate). Read with the sidecar's fixed schema,
+    so opening it runs no footer-inference job."""
     from pyspark.sql import functions as F
 
     dv = manifest["dv"]
-    df = spark.read.parquet(os.path.join(table_dir, dv["path"]))
+    df = spark.read.schema(_DV_SCHEMA).parquet(
+        os.path.join(table_dir, dv["path"]))
     return F.broadcast(df) if dv["count"] <= _DV_BROADCAST_MAX else df
 
 
@@ -1156,17 +1276,20 @@ def _scan_partitioned_chain(spark: SparkSession, dirs: list[str],
     DISCOVERY needs each dir read from its own root (a multi-path read
     with a shared basePath would infer the v=NNNNNN level as a bogus
     partition column), and a zero-row partitioned append writes no
-    parquet file at all, so empty dirs are skipped (scanning one raises
-    UNABLE_TO_INFER_SCHEMA); manifest-schema conformance also null-pads
-    pre-evolution dirs. ``dirs`` are absolute paths. ``with_pos``
+    parquet file at all, so empty dirs are skipped. Each dir is read
+    with the manifest schema (partition columns typed from it, no
+    footer inference); the conformance projection only restores the
+    manifest's column order, which the scan changes by listing
+    partition columns last. ``dirs`` are absolute paths. ``with_pos``
     attaches the per-row file/position helper pair (``_DV_COLS``) each
     scan branch can still resolve from its own ``_metadata`` — the
     hook the deletion-vector filter joins on."""
     out = None
+    schema = _scan_schema(manifest)
     for d in dirs:
         if not fsio.has_parquet(d):
             continue
-        part = spark.read.parquet(d)
+        part = spark.read.schema(schema).parquet(d)
         if with_pos:
             part = _with_pos(part)
         out = part if out is None else out.unionByName(
@@ -1483,11 +1606,13 @@ def read_version_pruned(spark: SparkSession, table_dir: str,
     # partition level, so the scanner can't discover the column; its
     # value is restored from the file path (the `col=value` segment the
     # glob above matched), url-decoded per hive's partition-path
-    # escaping and cast to the manifest's declared type.
-    reader = spark.read
-    if manifest.get("schema_evolved"):
-        reader = reader.option("mergeSchema", "true")
-    scan = reader.parquet(*paths)
+    # escaping and cast to the manifest's declared type. The leaves are
+    # read with the manifest's data columns (no footer inference;
+    # pre-evolution files read the columns they lack as nulls).
+    from pyspark.sql.types import StructType
+
+    scan = spark.read.schema(StructType(
+        [f for f in schema.fields if f.name != col])).parquet(*paths)
     if manifest.get("dv"):
         scan = _with_pos(scan)
     scan = scan.withColumn(
@@ -1632,7 +1757,8 @@ def _jvm_bloom_positions(spark: SparkSession, manifest: dict, col: str):
     runs ONE tiny JVM job per call with the SAME hash expression the
     writer used (``_bloom_positions_col`` — xxhash64 on the
     manifest-declared column type), so writer and reader can never
-    disagree on hashing."""
+    disagree on hashing. ``_bloom_positions``' fallback for the column
+    types the pure-Python twin does not cover."""
     from pyspark.sql.types import StructType
 
     def positions(vals: list, bits: int, _k: int) -> list[list[int]]:
@@ -1640,6 +1766,31 @@ def _jvm_bloom_positions(spark: SparkSession, manifest: dict, col: str):
             [(v,) for v in vals], StructType([_scan_schema(manifest)[col]])
         ).select(_bloom_positions_col(col, bits).alias("ps")).collect()
         return [list(map(int, r["ps"])) for r in rows]
+
+    return positions
+
+
+def _bloom_positions(spark: SparkSession, manifest: dict, col: str):
+    """The bloom hash a Spark-side probe uses (``_plan_dirs``'
+    ``positions``): the pure-Python ``xxh64`` twin — no Spark job, and
+    pinned bit-equal to the writer's JVM expression
+    (``tests/test_pyds_versioned.py``,
+    ``test_key_dir_classifier_agrees_across_hash_twins``) — for the
+    column types it covers and values of the column's own Python type;
+    anything else hashes with the JVM job of ``_jvm_bloom_positions``,
+    which converts the values exactly as before."""
+    from mapreduce_4_spark.sources import xxh64
+
+    ctype = _scan_schema(manifest)[col].dataType.simpleString()
+    native = str if ctype == "string" else int
+    twin = xxh64.positions_for(ctype)
+    jvm = _jvm_bloom_positions(spark, manifest, col)
+
+    def positions(vals: list, bits: int, k: int) -> list[list[int]]:
+        if ctype in xxh64.SUPPORTED_TYPES and all(
+                type(v) is native for v in vals):
+            return twin(vals, bits, k)
+        return jvm(vals, bits, k)
 
     return positions
 
@@ -1698,9 +1849,11 @@ def _plan_dirs(manifest: dict, where: dict | None = None,
       survivor absent; each dir is probed only against its OWN window
       survivors. A point lookup never proves every row matches, so a
       probed dir that survives is partial. ``positions(col)`` returns
-      the column's ``positions(vals, bits, k)`` bloom hash (the JVM job
-      of ``_jvm_bloom_positions``, or the pure-Python ``xxh64`` twin in
-      the DataSource planning worker, where no SparkSession exists).
+      the column's ``positions(vals, bits, k)`` bloom hash: the
+      pure-Python ``xxh64`` twin, in both the Spark-side callers
+      (``_bloom_positions``, which falls back to a JVM job for types
+      the twin does not cover) and the DataSource planning worker,
+      where no SparkSession exists.
     - ``meta=(col, width)``: the caller folds full dirs from metadata,
       so a full dir lacking what the fold reads is demoted to partial.
       ``col=None`` folds live row counts (``dir_rows`` minus the dir's
@@ -1817,26 +1970,26 @@ def read_version_bloom_pruned(spark: SparkSession, table_dir: str,
     means conservative, never wrong. Null probe values are dropped (SQL
     ``col IN (...)`` never matches null).
 
-    The probe positions are computed by ONE tiny JVM job over the
-    probe values with the SAME hash expression the writer used
-    (``_bloom_positions_col`` — xxhash64 on the manifest-declared
-    column type), so writer and reader can never disagree on hashing.
+    The probe positions come from the pure-Python ``xxh64`` twin of
+    the writer's hash expression (``_bloom_positions_col`` — xxhash64
+    on the manifest-declared column type), pinned bit-equal to it by
+    the tests, so planning the read runs no Spark job; column types
+    the twin does not cover hash with one tiny JVM job instead
+    (``_bloom_positions``).
     With ``detail=True`` returns ``(df, {"missed", "scanned",
     "unknown"})`` dir tallies (the plan-visible proof of the skip;
     ``unknown`` counts the scanned dirs that carry no bloom for
     ``col``).
     """
-    from pyspark.sql import functions as F
-
     manifest = _open_version(table_dir, version, as_of)
     if col not in _scan_schema(manifest).fieldNames():
         raise ValueError(f"{col!r} is not a column of {table_dir}")
     vals = [v for v in values if v is not None]
     plan = _plan_dirs(
         manifest, probes={col: [vals]},
-        positions=lambda c: _jvm_bloom_positions(spark, manifest, c))
+        positions=lambda c: _bloom_positions(spark, manifest, c))
     out = _scan_dirs(spark, manifest, _kept(table_dir, plan),
-                     table_dir).filter(F.col(col).isin(vals))
+                     table_dir).filter(_in_list(col, vals))
     if not detail:
         return out
     blooms = manifest.get("bloom") or {}
@@ -1864,8 +2017,11 @@ def _scan_dirs(spark: SparkSession, manifest: dict,
                dirs_abs: list[str], table_dir: str | None = None,
                keep_pos: bool = False) -> DataFrame:
     """One manifest-pinned-schema scan over the given chain dirs
-    (possibly none -> empty DataFrame); partition columns restored for
-    partitioned chains, pre-evolution dirs null-padded. The one scan
+    (possibly none -> empty DataFrame): the parquet reader gets
+    ``_scan_schema(manifest)`` up front, so building the scan runs no
+    footer-inference job, pre-evolution dirs read the columns they lack
+    as typed nulls, and partitioned chains type their partition columns
+    from the manifest. The one scan
     every read path shares: ``read_version`` (all chain dirs), the
     pruned reads (the planner's non-miss dirs), the metadata
     aggregates' residual scan and the copy-on-write rewrites. When the
@@ -1889,10 +2045,7 @@ def _scan_dirs(spark: SparkSession, manifest: dict,
         paths = [p for p in dirs_abs if fsio.has_parquet(p)]
         if not paths:
             return spark.createDataFrame([], schema)
-        reader = spark.read
-        if manifest.get("schema_evolved"):
-            reader = reader.option("mergeSchema", "true")
-        out = reader.parquet(*paths)
+        out = spark.read.schema(schema).parquet(*paths)
         if want_pos:
             out = _with_pos(out)
         out = _conform_to_schema(out, manifest,
@@ -1906,11 +2059,14 @@ def _scan_dirs(spark: SparkSession, manifest: dict,
 
 def _scan_partial(spark: SparkSession | None, table_dir: str,
                   manifest: dict, plan: dict, where: dict | None,
-                  what: str, why: str) -> DataFrame | None:
+                  what: str, why: str,
+                  keep_pos: bool = False) -> DataFrame | None:
     """The one residual scan of the metadata aggregates: the live rows
     of the planner's PARTIAL dirs under the exact range filter, or None
     when every dir was answered from metadata. ``spark=None`` asserts
-    the metadata-only path: a partial dir raises instead of scanning."""
+    the metadata-only path: a partial dir raises instead of scanning.
+    ``keep_pos`` keeps ``_scan_dirs``' (file, row-index) pair, from
+    which ``avg_version`` tells its components' dirs apart."""
     partial = [d for d, r in plan.items() if r == "partial"]
     if not partial:
         return None
@@ -1920,7 +2076,7 @@ def _scan_partial(spark: SparkSession | None, table_dir: str,
             "pass a SparkSession to scan them"
         )
     scan = _scan_dirs(spark, manifest, _kept(table_dir, plan, ("partial",)),
-                      table_dir)
+                      table_dir, keep_pos=keep_pos)
     return _apply_range_filter(scan, where or {})
 
 
@@ -1996,15 +2152,7 @@ def count_version(spark: SparkSession | None, table_dir: str,
         info = {"missed": 0, "counted": len(_chain_dirs(manifest)),
                 "scanned": 0}
         return (manifest["row_count"], info) if detail else manifest["row_count"]
-    plan = _plan_dirs(manifest, where=where, meta=(count_col, 3))
-    stats = manifest.get("col_stats") or {}
-    dir_rows = manifest.get("dir_rows") or {}
-    dvc = (manifest.get("dv") or {}).get("dir_counts") or {}
-    total = sum(
-        dir_rows[d] - (stats[d][count_col][2] if count_col is not None
-                       else dvc.get(d, 0))
-        for d, r in plan.items() if r == "full"
-    )
+    plan, total = _count_meta(manifest, where, count_col)
     scan = _scan_partial(
         spark, table_dir, manifest, plan, where, "count_version",
         "cannot be answered from manifest metadata (partial range "
@@ -2015,6 +2163,32 @@ def count_version(spark: SparkSession | None, table_dir: str,
         total += (scan.agg(F.count(count_col).alias("n")).first()["n"]
                   if count_col is not None else scan.count())
     return (total, _tally(plan, "counted")) if detail else total
+
+
+def _count_meta(manifest: dict, where: dict | None,
+                count_col: str | None) -> tuple[dict, int]:
+    """``count_version``'s metadata half: the plan and the count its
+    full dirs contribute from the manifest (``dir_rows`` minus the
+    dir's deletion-vector rows, or minus ``count_col``'s null count)."""
+    plan = _plan_dirs(manifest, where=where, meta=(count_col, 3))
+    stats = manifest.get("col_stats") or {}
+    dir_rows = manifest.get("dir_rows") or {}
+    dvc = (manifest.get("dv") or {}).get("dir_counts") or {}
+    return plan, sum(
+        dir_rows[d] - (stats[d][count_col][2] if count_col is not None
+                       else dvc.get(d, 0))
+        for d, r in plan.items() if r == "full"
+    )
+
+
+def _sum_meta(manifest: dict, col: str,
+              where: dict | None) -> tuple[dict, list]:
+    """``sum_version``'s metadata half: the plan and the recorded
+    non-null sums of its full dirs."""
+    plan = _plan_dirs(manifest, where=where, meta=(col, 4))
+    stats = manifest.get("col_stats") or {}
+    known = [stats[d][col][3] for d, r in plan.items() if r == "full"]
+    return plan, [v for v in known if v is not None]
 
 
 def avg_version(spark: SparkSession | None, table_dir: str, col: str,
@@ -2032,26 +2206,53 @@ def avg_version(spark: SparkSession | None, table_dir: str, col: str,
     division happens at the very end, bit-identical to DuckDB/Spark
     computing AVG over the same rows via their decimal/int paths for
     the magnitudes at play. ``spark=None`` asserts the metadata-only
-    path through both components; boundary-straddling dirs cost each
-    component its own residual scan job (two jobs — callers needing
-    one-pass semantics over hot partials should scan explicitly).
-    Returns None when no non-null in-range values exist, matching SQL
-    AVG; ``detail=True`` returns ``(avg, {"sum": ..., "count": ...})``
-    with each component's dir tallies.
+    path through both components. Each component folds its full dirs
+    from the manifest; the dirs either component must scan are read
+    by ONE residual aggregate over the union of their partial dirs,
+    each component summing or counting only the rows of its own
+    partial dirs. Returns None when no non-null in-range values exist,
+    matching SQL AVG; ``detail=True`` returns ``(avg, {"sum": ...,
+    "count": ...})`` with each component's dir tallies, exactly as
+    ``sum_version`` and ``count_version`` report them.
     """
-    if as_of is not None:
-        version = _resolve_version(table_dir, version, as_of)
-    s, s_info = sum_version(spark, table_dir, col, version=version,
-                            lower=lower, upper=upper, where=where,
-                            detail=True)
-    n, n_info = count_version(spark, table_dir, col=None, version=version,
-                              where=(where if where is not None else
-                                     ({col: (lower, upper)}
-                                      if (lower is not None
-                                          or upper is not None) else None)),
-                              count_col=col, detail=True)
+    from pyspark.sql import functions as F
+
+    if where is not None and (lower is not None or upper is not None):
+        raise ValueError(
+            "avg_version takes either lower/upper (bounds on col) or "
+            "where={col: (lower, upper)}, not both"
+        )
+    where = _bounded(where if where is not None else {col: (lower, upper)})
+    manifest = _open_version(table_dir, version, as_of)
+    s_plan, known = _sum_meta(manifest, col, where)
+    n_plan, n = _count_meta(manifest, where, col)
+    s_dirs = [d for d, r in s_plan.items() if r == "partial"]
+    n_dirs = [d for d, r in n_plan.items() if r == "partial"]
+    plan = {d: "partial" if d in s_dirs or d in n_dirs else "full"
+            for d in s_plan}
+    apart = set(s_dirs) != set(n_dirs)
+    scan = _scan_partial(
+        spark, table_dir, manifest, plan, where, "avg_version",
+        "cannot be answered from manifest metadata (partial range "
+        "overlap, missing stats/null counts/sums, or a pre-dir_rows "
+        "manifest)", keep_pos=apart)
+    if scan is not None and (not apart or _DV_COLS[0] in scan.columns):
+        def only(dirs):  # col on the rows of ``dirs`` only
+            if not apart:
+                return F.col(col)
+            d = F.regexp_extract(F.col(_DV_COLS[0]), _DV_DIR_RE, 1)
+            return F.when(d.isin(dirs), F.col(col))
+
+        row = scan.agg(F.sum(only(s_dirs)).alias("s"),
+                       F.count(only(n_dirs)).alias("n")).first()
+        if row["s"] is not None:
+            known.append(row["s"])
+        n += row["n"]
+    s = sum(known) if known else None
     avg = (s / n) if (s is not None and n) else None
-    return (avg, {"sum": s_info, "count": n_info}) if detail else avg
+    info = {"sum": _tally(s_plan, "summed"),
+            "count": _tally(n_plan, "counted")}
+    return (avg, info) if detail else avg
 
 
 def sum_version(spark: SparkSession | None, table_dir: str, col: str,
@@ -2089,10 +2290,7 @@ def sum_version(spark: SparkSession | None, table_dir: str, col: str,
         where = {col: (lower, upper)}
     where = _bounded(where)
     manifest = _open_version(table_dir, version, as_of)
-    plan = _plan_dirs(manifest, where=where, meta=(col, 4))
-    stats = manifest.get("col_stats") or {}
-    known = [stats[d][col][3] for d, r in plan.items() if r == "full"]
-    known = [v for v in known if v is not None]
+    plan, known = _sum_meta(manifest, col, where)
     scan = _scan_partial(
         spark, table_dir, manifest, plan, where, "sum_version",
         "cannot be answered from manifest metadata (partial range "
@@ -2511,8 +2709,7 @@ def _collect_keys(keys, key: str, max_keys: int) -> list:
 def _cow_publish(spark: SparkSession, table_dir: str, pm: dict,
                  keep_dirs: list[str], new_df: DataFrame | None,
                  manifest_extra: dict | None = None,
-                 operation: str = "cow",
-                 stats_from: DataFrame | None = None) -> int:
+                 operation: str = "cow") -> int:
     """Publish a copy-on-write commit: ``keep_dirs`` (relative chain
     dirs of the parent) carry into the new version BY REFERENCE — no
     data movement, stats/blooms/row counts/partition indexes carried
@@ -2525,10 +2722,11 @@ def _cow_publish(spark: SparkSession, table_dir: str, pm: dict,
     any dir a retained manifest references, so shared dirs outlive
     their original version exactly as appended dirs do.
 
-    The new dir's stats/blooms come from ``stats_from`` when given (the
-    fold's own rows), else from a read-back of the files just written
-    — exactly what landed, one bounded aggregate per contract, the
-    same cost class as write_version's."""
+    The new dir's stats are observed on its write job
+    (``_write_observed``), so a rewrite is one Spark job: the survivors'
+    scan, filter and write, with no read-back of the files just
+    written. Blooms, and stats whose observation did not count exactly
+    the footer rows, scan the written dir (``_new_dir_meta``)."""
     version = pm["version"] + 1
     data_dir = _data_dir(table_dir, version)
     _reclaim_torn_write(table_dir, version)
@@ -2540,25 +2738,17 @@ def _cow_publish(spark: SparkSession, table_dir: str, pm: dict,
         new_df = spark.createDataFrame([], _scan_schema(pm))
     new_rows = 0
     if new_df is not None:
-        writer = (_conform_to_schema(new_df, pm)
-                  .write.mode("errorifexists"))
-        if m["partition_by"]:
-            writer = writer.partitionBy(*m["partition_by"])
-        writer.parquet(data_dir)
+        observed = _write_observed(_conform_to_schema(new_df, pm),
+                                   m["stats_for"],
+                                   _parquet_write(data_dir, m["partition_by"]))
         new_rows = fsio.parquet_row_count(data_dir)
         if new_rows == 0 and keep_dirs:
             # an all-dropped rewrite adds nothing: don't grow the chain
             fsio.delete(data_dir, recursive=True)
         else:
-            stats = bloom = None
-            if new_rows:
-                src = (stats_from if stats_from is not None
-                       else spark.read.parquet(data_dir))
-                if m["stats_for"]:
-                    stats = _column_stats(src, m["stats_for"])
-                if m["bloom_for"]:
-                    bloom = _dir_bloom(src, m["bloom_for"], m["bloom_bits"])
-            _add_dir(m, f"v={version:06d}", new_rows, stats, bloom,
+            _add_dir(m, f"v={version:06d}", new_rows,
+                     *(_new_dir_meta(spark, m, data_dir, new_rows, observed)
+                       if new_rows else (None, None)),
                      _hive_parts(data_dir) if m["partition_by"] else None)
     kept_rows = sum(
         (m["dir_rows"][d] if d in m["dir_rows"]
@@ -2573,6 +2763,77 @@ def _cow_publish(spark: SparkSession, table_dir: str, pm: dict,
                     "recompute the commit from the new chain head")
 
 
+def _sql_literal(v, ntz: bool = False) -> str | None:
+    """``v`` as a SQL literal of the type ``F.lit(v)`` would give it, or
+    None when there is no such rendering (the caller falls back to
+    ``isin``). Strings go through their UTF-8 bytes, so no quote,
+    backslash or parser escaping setting can change them; doubles and
+    decimals through an exact cast from their repr; timestamps through
+    the epoch microseconds PySpark's own converter computes. ``ntz``:
+    the session prefers TIMESTAMP_NTZ, under which ``F.lit`` types a
+    naive datetime differently (not rendered)."""
+    import calendar
+    import datetime as dt
+    import decimal
+
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        if -(1 << 31) <= v < (1 << 31):
+            return str(v)
+        return f"{v}L" if -(1 << 63) <= v < (1 << 63) else None
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, str):
+        try:
+            return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+        except UnicodeEncodeError:
+            return None
+    if isinstance(v, decimal.Decimal):
+        _, digits, exp = v.as_tuple()
+        if not isinstance(exp, int) or exp > 0:
+            return None  # NaN/Infinity, or a negative-scale decimal
+        prec = max(len(digits), -exp)
+        return (f"CAST('{v}' AS DECIMAL({prec},{-exp}))" if prec <= 38
+                else None)
+    if isinstance(v, dt.datetime):
+        if v.tzinfo is None:
+            if ntz:
+                return None
+            secs = time.mktime(v.timetuple())
+        else:
+            secs = calendar.timegm(v.utctimetuple())
+        return f"TIMESTAMP_MICROS({int(secs) * 1_000_000 + v.microsecond}L)"
+    if isinstance(v, dt.date):
+        return f"DATE'{v.isoformat()}'"
+    return None
+
+
+def _in_list(col: str, vals: list):
+    """``col IN (vals)`` as ONE Column built in one py4j call, whatever
+    the key count: the values are rendered as typed SQL literals
+    (``_sql_literal``) into a single ``F.expr``. ``F.col(col).isin(vals)``
+    makes two py4j round trips per value — 0.3 s for a 600-key merge.
+    Row for row it is the same predicate: every literal carries the
+    type ``isin``'s ``F.lit`` would give it, so Spark coerces the
+    comparison identically and the optimizer still plans ``In`` /
+    ``InSet``; null semantics are SQL ``IN``'s. An empty list, or a
+    value with no rendering, falls back to ``isin``."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+    ntz = any(isinstance(v, dt.datetime) and v.tzinfo is None
+              for v in vals) and is_timestamp_ntz_preferred()
+    lits = [_sql_literal(v, ntz) for v in vals]
+    if not lits or None in lits:
+        return F.col(col).isin(vals)
+    return F.expr(f"`{col.replace('`', '``')}` IN ({', '.join(lits)})")
+
+
 def _delete_cond(key: str | None, vals: list | None, predicate,
                  where: dict | None):
     """The DELETE predicate as a definitely-TRUE Column (SQL DELETE
@@ -2580,7 +2841,7 @@ def _delete_cond(key: str | None, vals: list | None, predicate,
     from pyspark.sql import functions as F
 
     if key is not None:
-        cond = F.col(key).isin(vals)
+        cond = _in_list(key, vals)
     elif predicate is not None:
         cond = predicate
     else:
@@ -2664,7 +2925,7 @@ def _cow_dml(spark: SparkSession, table_dir: str, verb: str, joined: bool,
         plan = _plan_dirs(
             pm, where=where, probes={key: [vals]} if vals is not None
             else None,
-            positions=lambda c: _jvm_bloom_positions(spark, pm, c))
+            positions=lambda c: _bloom_positions(spark, pm, c))
         # every row of a "full" dir provably matches (only a range can
         # prove that): a delete drops it whole with zero data movement
         # (the retention shape), an update must still rewrite it
@@ -2958,9 +3219,8 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
             # out of the chain (harmless to reads, but they'd inflate
             # the per-dir counts the row_count arithmetic trusts)
             new_deletes = new_deletes.unionByName(
-                spark.read.parquet(
-                    os.path.join(table_dir, old_dv["path"])
-                ).select("file", "pos")
+                spark.read.schema(_DV_SCHEMA).parquet(
+                    os.path.join(table_dir, old_dv["path"]))
                 .filter(_dv_dir_col().isin(_chain_dirs(pm)))
             )
         nonce = uuid.uuid4().hex[:12]
@@ -2970,7 +3230,7 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
         # exact per-dir cardinalities from the sidecar just written —
         # the numbers count_version's metadata arithmetic subtracts
         counts = (
-            spark.read.parquet(dv_abs)
+            spark.read.schema(_DV_SCHEMA).parquet(dv_abs)
             .groupBy(_dv_dir_col().alias("d"))
             .count().collect()
         )
@@ -3244,13 +3504,13 @@ def compact_tail(spark: SparkSession, table_dir: str,
         return None  # keep_base=0 over an all-empty chain: nothing real
     # a keep-these-dirs-plus-one-new-dir commit: base dirs carry their
     # stats/blooms/counts/DV entries by reference; the folded dir gets
-    # stats recomputed from the fold (same content as the tail it
+    # stats observed on the fold's write (same content as the tail it
     # replaced, but recomputed rather than min/max-merged so the fold
     # can only tighten after deletes ever land in a chain) and an exact
     # footer count. Tail DV entries folded away above; an emptied DV
     # releases its sidecar to vacuum.
     return _cow_publish(spark, table_dir, manifest, base, rows,
-                        operation="compact-tail", stats_from=rows)
+                        operation="compact-tail")
 
 
 def vacuum(table_dir: str, keep_last: int = 1,

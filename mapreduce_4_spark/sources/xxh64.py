@@ -1,5 +1,8 @@
-"""Pure-Python twin of Spark's XxHash64 expression — ONLY for the
-planning-time bloom probes of the ``mr4ver`` DataSource front door.
+"""Pure-Python twin of Spark's XxHash64 expression — for the bloom
+probes that pick chain dirs: the ``mr4ver`` DataSource front door's
+planning, and the Spark-side bloom-pruned reads and copy-on-write
+classification (``versioned._bloom_positions``), where hashing in
+Python saves a Spark job per probe.
 
 Why this exists: a Python DataSource's ``pushFilters``/``partitions()``
 run in a planning worker with NO SparkSession, so the dir-skipping
@@ -138,3 +141,16 @@ def bloom_positions(value, sql_type: str, bits: int, k: int) -> list[int]:
         signed = h - (1 << 64) if h >= (1 << 63) else h
         out.append(signed % bits)            # == Spark pmod for bits>0
     return out
+
+
+def positions_for(sql_type: str | None):
+    """The ``positions(vals, bits, k)`` bloom hash the dir planner
+    (``versioned._plan_dirs``) takes, for a column of ``sql_type``:
+    each value's bit positions, or None — no bloom proof — for a type
+    without a pinned twin."""
+    def positions(vals: list, bits: int, k: int) -> list[list[int]] | None:
+        if sql_type not in SUPPORTED_TYPES:
+            return None
+        return [bloom_positions(v, sql_type, bits, k) for v in vals]
+
+    return positions
