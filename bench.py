@@ -230,25 +230,24 @@ def refresh_reference(bench_json_path: str) -> None:
 
 
 def _ab_experiments(spark, timings: dict[str, float]) -> None:
-    """A/B measurements beyond the registered queries.
+    """A/B measurements beyond the registered queries, each pair timed
+    in the same session on the same data:
 
-    1. ANN crossover: brute-force vs hyperplane-LSH top-k at a 200-query
-       load (vs the 5-query headline entry) — the point where bucketed
-       candidate generation starts paying for its recall loss.
-    2. Skew join with OUTPUT amplification: a 95%-hot key meeting a dim
-       with 128 rows per key, auto-broadcast off so both sides shuffle.
-       AQE is blind to this skew — splitting and coalescing both reason
-       on shuffle INPUT bytes, and the hot partition's input is tiny —
-       so the plain join serializes 0.95 x |fact| x 128 output rows in
-       one task, and salting only pays when partition coalescing is
-       disabled for the job (else the salt buckets get merged right
-       back). Expected reading at sf0.1: plain_aqe ~2x slower than
-       salted_hotkeys; salted_coalesce_on WORSE than plain (the trap).
-       Measuring, not guessing, is the point.
+    1. ANN crossover (``ab_bruteforce_topk_q200`` / ``ab_lsh_topk_q200``):
+       brute-force vs hyperplane-LSH top-k at a 200-query load (vs the
+       5-query headline entry), where bucketed candidate generation
+       starts paying for its recall loss.
+    2. Bucketed vs plain fact join (``ab_fact_join_*``): the same
+       lineitem x orders equi-join with and without an exchange.
+    3. Clustered vs plain selective scan (``ab_scan_*``): footer min/max
+       skipping on a range-partitioned, sorted snapshot.
+    4. Versioned-chain reads (``ab_chain_*``): full scan vs manifest
+       stats pruning, and a metadata COUNT vs the pruned scan's count.
+    5. SimHash banding at 10x docs (``ab_simhash_*``): chunk4 vs blocks6
+       candidate volume.
     """
     from pyspark.sql import functions as F
 
-    from mapreduce_4_spark.operators.partitioning import salted_join
     from mapreduce_4_spark.operators.similarity import brute_force_topk, lsh_topk
     from mapreduce_4_spark.sources import load_table
 
@@ -260,13 +259,6 @@ def _ab_experiments(spark, timings: dict[str, float]) -> None:
            brute_force_topk(emb, queries, k=10))
     _timed(timings, "ab_lsh_topk_q200",
            lsh_topk(emb, queries, k=10, n_planes=8, dim=64))
-
-    # decimal-exact vs double q1: the registered q1 pays 128-bit decimal
-    # accumulation for bit-identical money parity; this measures what the
-    # documented double fast path buys when that isn't required
-    from mapreduce_4_spark.plans.aggregates import q1_pricing_summary_double
-
-    _timed(timings, "ab_q1_double", q1_pricing_summary_double(spark, SF_DIR))
 
     # bucketed-vs-plain fact join: the same lineitem x orders equi-join,
     # once over plain parquet (two exchanges) and once over snapshots
@@ -380,93 +372,6 @@ def _ab_experiments(spark, timings: dict[str, float]) -> None:
     finally:
         shutil.rmtree(tmp2b, ignore_errors=True)
 
-    # z-order vs single-column sort for a TWO-dimension predicate: the
-    # same events snapshot written sorted on user_id only and sorted on
-    # the 16-bit Morton interleave of (user_id & 255, props.k). The
-    # single-column sort's parquet min/max stats are selective on
-    # user_id but blind on k; the z-sorted layout bounds BOTH columns
-    # per file, so the conjunctive predicate can skip on either. At 32
-    # files x sf0.1 the absolute deltas are small (same caveat as
-    # ab_scan_clustered) — the arm pins the mechanics; the win grows
-    # with file count.
-    from mapreduce_4_spark.plans.maintenance import zorder_interleave_events
-
-    zev = zorder_interleave_events(spark, SF_DIR).select(
-        "event_id", "u8", "k8", "zval"
-    )
-    tmp3 = tempfile.mkdtemp(prefix="bench_zorder_")
-    try:
-        write_version(zev, f"{tmp3}/bycol", sort_by=["u8"], n_files=32)
-        write_version(zev, f"{tmp3}/byz", sort_by=["zval"], n_files=32)
-        bycol = read_version(spark, f"{tmp3}/bycol")
-        byz = read_version(spark, f"{tmp3}/byz")
-        pred = (
-            (F.col("u8") >= 16) & (F.col("u8") < 32)
-            & (F.col("k8") >= 16) & (F.col("k8") < 32)
-        )
-        _timed(timings, "ab_scan2d_colsort", bycol.filter(pred))
-        _timed(timings, "ab_scan2d_zorder", byz.filter(pred))
-    finally:
-        shutil.rmtree(tmp3, ignore_errors=True)
-
-    # skewed fact: 95% of lineitem lands on hot_key=5, and the dim has
-    # 128 rows per key, so the hot partition of a plain shuffle join must
-    # EMIT 0.95 x |fact| x 128 rows from one task. This is the regime
-    # AQE cannot fix by itself: both skew-join splitting and partition
-    # coalescing reason on shuffle INPUT bytes (tiny here) and are blind
-    # to join OUTPUT amplification — measured below, AQE leaves the plain
-    # join serial, and with coalescing ON it merges the salt buckets
-    # back into one task (ab_skewamp_salted_coalesce_on). The winning
-    # combination is salting the hot key + disabling coalescing for the
-    # job; hot_keys= (from table stats) beats auto= by the sampling pass.
-    fact = load_table(spark, SF_DIR, "lineitem").select(
-        F.when(F.col("l_orderkey") % 100 < 95, F.lit(5))
-        .otherwise(F.col("l_orderkey") % 100).alias("k"),
-        "l_quantity",
-    )
-    dim = spark.range(100 * 128).select(
-        (F.col("id") % 100).alias("k"), (F.col("id") * 10).alias("payload")
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        _timed(timings, "ab_skewamp_plain_aqe",
-               fact.join(dim, "k").select("k", "l_quantity", "payload"))
-        _timed(timings, "ab_skewamp_salted_coalesce_on",
-               salted_join(fact, dim, "k", n_salts=16, hot_keys=[5])
-               .select("k", "l_quantity", "payload"))
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-                       "false")
-        _timed(timings, "ab_skewamp_salted_hotkeys",
-               salted_join(fact, dim, "k", n_salts=16, hot_keys=[5])
-               .select("k", "l_quantity", "payload"))
-        _timed(timings, "ab_skewamp_salted_auto",
-               salted_join(fact, dim, "k", n_salts=16, auto=True,
-                           hot_threshold=0.2)
-               .select("k", "l_quantity", "payload"))
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-                       "true")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-    # F) InferFiltersFromGenerate: the rule's inferred size/isnotnull
-    # guards get predicate-pushed through projections, re-evaluating the
-    # tokenize+gram pipeline 2-3x per row on explode-heavy plans. The
-    # session excludes it (session.py); this arm re-enables it on the
-    # gram-join family to keep the cost measured, not folklore.
-    from mapreduce_4_spark.plans import REGISTRY as _R
-
-    rule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-    prev_excl = spark.conf.get("spark.sql.optimizer.excludedRules", "")
-    try:
-        _timed(timings, "ab_generate_infer_excluded",
-               _R["tokenize_to_ids_docs"].builder(spark, SF_DIR))
-        spark.conf.set("spark.sql.optimizer.excludedRules", "")
-        _timed(timings, "ab_generate_infer_default",
-               _R["tokenize_to_ids_docs"].builder(spark, SF_DIR))
-    finally:
-        spark.conf.set("spark.sql.optimizer.excludedRules", prev_excl)
-
     # G) SimHash banding dial at 10x docs: chunk4 (4 bands, 16-bit keys)
     # vs blocks6 (Manku 3-of-6: 20 bands, ~32-bit keys). Both lossless at
     # hamming<=3 and pinned to the same oracle; what differs is the
@@ -491,64 +396,6 @@ def _ab_experiments(spark, timings: dict[str, float]) -> None:
            simhash_near_pairs(docs10, max_hamming=3, banding="chunk4"))
     _timed(timings, "ab_simhash_blocks6_10x",
            simhash_near_pairs(docs10, max_hamming=3, banding="blocks6"))
-
-    # I) semantic-decontam routing at 14x bench size: the registered
-    # query's bench slice is <=50 vectors by contract (broadcast-NLJ
-    # argmax is the right plan there); a REAL benchmark suite is
-    # 10^4-10^5 vectors, where the exact mode's |bench|-multiplier on
-    # the corpus scan explodes. Both arms run the same mod-7 slice
-    # (~286 bench vectors at sf0.1 vs the contract 20): exact broadcast
-    # vs 4-plane+multiprobe LSH routing. Expected reading: the exact
-    # arm scales ~linearly with |bench| while the LSH arm holds near
-    # the small-slice cost (each corpus row scores only its bucket's
-    # collisions); recall of the flag is pinned separately in
-    # tests/test_similarity.py and lsh_recall_at_k.
-    from mapreduce_4_spark.functions.vectors import as_double
-    from mapreduce_4_spark.operators.similarity import decontam_max_cosine
-
-    embv = load_table(spark, SF_DIR, "embeddings").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    bench_b = embv.filter(F.col("vec_id") % 7 == 0).select(
-        F.col("vec_id").alias("bench_id"), F.col("v").alias("bv")
-    )
-    corpus_b = embv.filter(F.col("vec_id") % 7 != 0)
-    _timed(timings, "ab_decontam_exact_benchx",
-           decontam_max_cosine(corpus_b, bench_b, tau=0.25))
-    _timed(timings, "ab_decontam_lsh_benchx",
-           decontam_max_cosine(corpus_b, bench_b, tau=0.25,
-                               n_planes=4, dim=64, multiprobe=True))
-    # OR-amplification cost curve (recall curve lives in BASELINE.md +
-    # tests/test_similarity.py: 0.38 / 0.79 / 0.87 at t=1/2/4 on the
-    # near-uniform fixture): t independent plane tables union-routed on
-    # the combined key — expected reading is ~t x the single-table arm,
-    # still far under the exact arm at this bench size, and the gap vs
-    # exact widens with |bench| while the amplified cost doesn't.
-    _timed(timings, "ab_decontam_lsh_benchx_t2",
-           decontam_max_cosine(corpus_b, bench_b, tau=0.25,
-                               n_planes=4, dim=64, multiprobe=True,
-                               n_tables=2))
-    _timed(timings, "ab_decontam_lsh_benchx_t4",
-           decontam_max_cosine(corpus_b, bench_b, tau=0.25,
-                               n_planes=4, dim=64, multiprobe=True,
-                               n_tables=4))
-
-    # H) iterative vs single-pass chain grouping: the SAME order-streak
-    # result (test-pinned equal) computed by Spark 4's native recursive
-    # CTE (depth iterations of frontier-joins against the cached edge
-    # list) and by one window pass (gap flag + running sum — the
-    # sessionization shape). The delta is the measured price of the
-    # iterative-execution surface when a closed-form window exists; the
-    # recursive path's value is reachability where no closed form does.
-    from mapreduce_4_spark.plans.spark4_surface import (
-        order_streaks_recursive,
-        order_streaks_window,
-    )
-
-    _timed(timings, "ab_streaks_recursive",
-           order_streaks_recursive(spark, SF_DIR))
-    _timed(timings, "ab_streaks_window",
-           order_streaks_window(spark, SF_DIR))
 
 
 def _calibration(spark, timings: dict[str, float]) -> None:

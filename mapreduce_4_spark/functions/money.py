@@ -1,28 +1,47 @@
-"""Deterministic numeric aggregation discipline.
+"""Deterministic money aggregation: one exact discipline, long cents.
 
 Double-typed measures (prices, quantities) must aggregate identically in
 Spark and the DuckDB oracle, but floating sums are order-dependent and a
 32-way partial aggregate will not reduce in the oracle's order. The fix is
-exactness, not tolerance (SURVEY.md §7.4 "oracle mismatch traps"):
+exactness, not tolerance (SURVEY.md §7.4 "oracle mismatch traps"): every
+money aggregate sums the measure's exact unscaled integer and converts
+the exact result to double once.
 
-1. cast the 2-dp measure to DECIMAL(18,2) (exact — the synthetic data is
-   2-dp), 2. aggregate in decimal (exact, order-independent), 3. cast the
-   result to double (correctly-rounded in both engines while the unscaled
-   value fits in 2^53 — true through sf0.1 and far beyond).
+1. ``cents(col)`` = round(col * 100) cast long. For a double that
+   represents a 2-dp value v (the fixture/money contract, FIXTURES.md)
+   |col*100 - 100v| << 0.5, so round() recovers the integer 100v
+   exactly: the unscaled value DECIMAL(18,2) stores. Pinned per column
+   over the fixtures by tests/test_money_fastpath.py.
+2. Sums and products run on longs (long-backed aggregate buffers,
+   codegen integer ops). Per-row products stay tiny (price cents ~1e7 x
+   100 x 100 = 1e11 << 2^63). ``csum``/``cavg`` sum in a long, so each
+   call site documents its 100 TB bound; product sums and sums whose
+   group may be a whole table use ``dsum_longs`` (DECIMAL(38,0)
+   accumulator, overflow-free at any scale). Under ANSI (Spark 4
+   default) a violated long bound fails loud, never silently wraps.
+3. ``unscale(col, pow)`` rescales the exact integer sum through DECIMAL
+   division (DECIMAL(38,0) / 10^k, k <= 6, yields DECIMAL(38,6): exact
+   for our <= 6 fractional digits) and casts to double: ONE
+   correctly-rounded conversion of the exact rational, the value the
+   oracle's ``CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE)`` produces
+   (``sql_dsum``). Averages divide that double by the count in double,
+   the same single IEEE operation on both sides (``sql_davg``).
 
-Averages divide the exact decimal sum by the count *in double*, the same
-single IEEE operation both sides.
+Why not sum in DECIMAL(18,2) directly: its DECIMAL(28,2) accumulator
+exceeds Spark's 18-digit long-backed Decimal, so every partial-aggregate
+update goes through BigDecimal (q1 at sf0.1: 1.49 s decimal vs 0.32 s in
+plain doubles, the arithmetic floor; OPTIMIZATION_r14.md). Old-vs-new equality for every migrated
+expression shape is pinned in tests/test_money_fastpath.py; a plan guard
+(tests/test_plan_properties.py) keeps decimal(18,2)/(18,4) accumulators
+out of the migrated queries.
+
+``dec`` has one caller, ``windowed_decay_sum_events``: it multiplies each
+value by decimal weights row by row and sums the products in decimal,
+and that decimal arithmetic is the query's rounding contract.
 
 The same discipline applies at 100 TB on a real cluster: exact partial
 aggregation is order-independent, so results are reproducible
-run-to-run — floats would not be.
-
-Since round 14 the HOT aggregate paths use the long-cents twin below
-(``cents``/``csum``/``cavg``/``revenue_sum``/``dsum_longs``/``unscale``)
-— same exact rationals, same correctly-rounded doubles, ~2x cheaper per
-row; ``dec``/``dsum``/``davg`` remain for derived-double measures where
-the decimal cast defines the rounding contract (see the fast-path block
-comment for the full argument).
+run-to-run; floats would not be.
 """
 
 from __future__ import annotations
@@ -36,53 +55,6 @@ def dec(col: Column | str, scale: int = 2) -> Column:
     return c.cast(f"decimal(18,{scale})")
 
 
-def dsum(col: Column | str, scale: int = 2) -> Column:
-    """Exact decimal sum surfaced as double."""
-    return F.sum(dec(col, scale)).cast("double")
-
-
-def davg(col: Column | str, scale: int = 2) -> Column:
-    """Exact decimal sum / count, divided in double."""
-    return F.sum(dec(col, scale)).cast("double") / F.count(F.lit(1))
-
-
-# ---------------------------------------------------------------------
-# Long-cents fast path (round-14 optimization, guide §2.3 "narrower
-# types" / §1.2 "per-task work").
-#
-# The decimal discipline above is exact but slow in the aggregate hot
-# loop: a SUM over DECIMAL(18,2) carries a DECIMAL(28,2) accumulator,
-# which exceeds Spark's 18-digit long-backed Decimal fast path, so every
-# partial-aggregate update serializes through BigDecimal. Measured on
-# q1 at sf0.1: 1.49 s decimal vs 0.32 s double (the arithmetic floor).
-#
-# The fast path keeps EXACTNESS while restoring long arithmetic:
-#
-# 1. ``cents(col)``   = round(col * 100) cast long. For a double that
-#    represents a 2-dp value v (the fixture/money contract — FIXTURES.md,
-#    and the same assumption ``dec`` already makes when it rounds the
-#    double's decimal expansion at scale 2), |col*100 - 100v| << 0.5, so
-#    round() recovers the integer 100v exactly — the same unscaled value
-#    DECIMAL(18,2) stores. Pinned per-column over the fixtures by
-#    tests/test_money_fastpath.py.
-# 2. sums/products run on longs (Tungsten long-backed buffers, codegen
-#    integer ops). Per-row product bounds are tiny (price-cents ~1e7 x
-#    100 x 100 = 1e11 << 2^63); SUM bounds are call-site obligations —
-#    each ``csum`` call site documents its 100 TB bound, and product
-#    sums use ``dsum_longs`` (DECIMAL(38,0) accumulator: overflow-free
-#    at any scale, still skipping the per-row BigDecimal multiplies
-#    that dominate the pure-decimal plan). Under ANSI (Spark 4 default)
-#    a violated long bound fails loud, never silently wraps.
-# 3. ``unscale(col, pow)`` rescales the exact integer sum through
-#    DECIMAL division — scale analysis: DECIMAL(38,0) / 10^k (k <= 6)
-#    yields DECIMAL(38,6), exact for our <= 6 fractional digits — then
-#    casts to double: ONE correctly-rounded conversion of the same
-#    exact rational the decimal path produces. Bit-identical outputs
-#    (verified row-for-row vs the decimal path and the DuckDB oracle at
-#    sf0.001/0.01/0.1).
-# ---------------------------------------------------------------------
-
-
 def cents(col: Column | str, pow10: int = 2) -> Column:
     """Exact integer (value * 10^pow10) of a pow10-dp double measure.
 
@@ -93,7 +65,7 @@ def cents(col: Column | str, pow10: int = 2) -> Column:
     one cent). Every column routed through here must be pinned in
     MEASURES of tests/test_money_fastpath.py — add any new call-site
     column there, or prove the 2-dp provenance in a comment the way
-    q9/q11's derived ps_supplycost analysis does (OPTIMIZATION_r15.md).
+    q9/q11's derived ps_supplycost analysis does (OPTIMIZATION_r15.md §8).
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c * (10 ** pow10)).cast("long")
@@ -111,8 +83,8 @@ def csum(col: Column | str, pow10: int = 2) -> Column:
 
 
 def cavg(col: Column | str, pow10: int = 2) -> Column:
-    """Exact long-cents sum / count, divided in double (same single
-    IEEE division as ``davg``)."""
+    """Exact long-cents sum / count, divided in double (the single IEEE
+    division ``sql_davg`` does)."""
     return unscale(F.sum(cents(col, pow10)), pow10) / F.count(F.lit(1))
 
 
@@ -136,7 +108,7 @@ def revenue_sum(price_col: Column | str, disc_col: Column | str) -> Column:
 
 def unscale(int_sum: Column, pow10: int) -> Column:
     """Exact integer sum -> value double: one correctly-rounded
-    conversion via exact DECIMAL division (see block comment, step 3)."""
+    conversion via exact DECIMAL division (module docstring, step 3)."""
     return (int_sum.cast("decimal(38,0)") / F.lit(10 ** pow10)).cast("double")
 
 

@@ -93,8 +93,8 @@ def salted_join(left: DataFrame, right: DataFrame, key: str,
     defeating the salt. When salting for an amplified join, disable
     ``spark.sql.adaptive.coalescePartitions.enabled`` for the job (or
     set ``minPartitionSize`` below the per-salt input size). Measured
-    in bench.py (``ab_skewamp_*``): with coalescing left on, the salted
-    join collapses back to the plain join's serial hot task.
+    (``ab_skewamp_*`` in BASELINE.md): with coalescing left on, the
+    salted join collapses back to the plain join's serial hot task.
     """
     if how not in ("inner", "left", "left_outer", "left_semi"):
         raise ValueError(

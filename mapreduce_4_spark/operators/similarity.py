@@ -169,8 +169,8 @@ def decontam_max_cosine(corpus: DataFrame, bench: DataFrame, tau: float,
       members in its own bucket, so per-row cost is O(colliding bench)
       instead of O(|bench|); rows with no collision return NULL
       max_cos / contaminated=false (routed clear). Recall < 1.0 by
-      construction — measured against the exact mode by the
-      ab_decontam_* bench arms and tests/test_similarity.py.
+      construction — measured against the exact mode in BASELINE.md
+      (``ab_decontam_*``) and tests/test_similarity.py.
 
     ``n_tables`` is the OR-amplification recall dial for the LSH mode
     (r9 verdict ask #2): t independent seeded plane sets (seed 42+t, so

@@ -81,38 +81,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q1_pricing_summary_double(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Double-precision fast path of q1 — same plan shape, no 128-bit
-    decimal accumulation, so the partial aggregates are plain double
-    adds inside codegen.
-
-    NOT registered: float accumulation order makes the last ulp
-    engine-dependent, so only the decimal path above is the correctness
-    surface (hash-green vs DuckDB). This variant exists for the
-    throughput A/B (``ab_q1_double`` in bench.py) and is pinned to the
-    decimal result within 1e-9 relative error by
-    tests/test_operator_contracts.py — the documented trade at 100 TB
-    when bit-exact money semantics aren't required.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2000-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.sum("l_extendedprice").alias("sum_base_price"),
-            F.sum(disc_price).alias("sum_disc_price"),
-            F.sum(charge).alias("sum_charge"),
-            F.avg("l_quantity").alias("avg_qty"),
-            F.avg("l_extendedprice").alias("avg_price"),
-            F.avg("l_discount").alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
 @register(
     "agg_orders_stats",
     oracle=f"""

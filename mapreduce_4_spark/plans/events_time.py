@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_4_spark.functions.money import csum, dsum, sql_dsum
+from mapreduce_4_spark.functions.money import csum, sql_dsum
 from mapreduce_4_spark.registry import register
 from mapreduce_4_spark.sources import load_table
 
@@ -243,6 +243,8 @@ def events_resample_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_grid"),
             F.count("locf").alias("n_filled"),
-            dsum("locf").alias("sum_locf"),
+            # long-cents sum; 100 TB bound: value cents ~1e4 per grid
+            # point x span/cadence points per user (~1e5) << 2^63
+            csum("locf").alias("sum_locf"),
         )
     )

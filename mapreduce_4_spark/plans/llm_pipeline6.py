@@ -397,7 +397,7 @@ def source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = ct.agg(
         F.sum("ct").alias("n"), F.count(F.lit(1)).alias("vocab_total")
     )
-    dec = lambda col: F.col(col).cast("decimal(38,0)")  # noqa: E731
+    d38 = lambda col: F.col(col).cast("decimal(38,0)")  # noqa: E731
     # vocab_total rides the FIRST broadcast and survives the groupBy as
     # a grouping column — a second crossJoin(tot) would re-run the whole
     # tokenize+vocab lineage (different projection defeats ReuseExchange)
@@ -408,7 +408,7 @@ def source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "ns", "n", "vocab_total")
         .agg(
             F.count(F.lit(1)).alias("vocab_used"),
-            F.sum(F.abs(dec("c") * dec("n") - dec("ct") * dec("ns")))
+            F.sum(F.abs(d38("c") * d38("n") - d38("ct") * d38("ns")))
             .alias("s_term"),
             F.sum("ct").cast("decimal(38,0)").alias("t_s"),
         )
@@ -423,7 +423,7 @@ def source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 (
                     F.col("s_term")
-                    + (dec("n") - F.col("t_s")) * dec("ns")
+                    + (d38("n") - F.col("t_s")) * d38("ns")
                 ).cast("double")
                 / (
                     F.lit(2.0)
@@ -884,9 +884,11 @@ def domain_affinity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("n2t") > 0, F.col("n2t") / F.col("n1t"))
         .alias("prob_t"),
     )
-    dec = lambda c: F.col(c).cast("decimal(18,15)")  # noqa: E731
-    t_score = F.sum(dec("prob_t")).cast("double") / F.count(F.lit(1))
-    c_score = F.sum(dec("prob")).cast("double") / F.count(F.lit(1))
+    # probabilities, not money: DECIMAL(18,15) is this query's rounding
+    # contract with the oracle (its SQL twin casts the same way)
+    p15 = lambda c: F.col(c).cast("decimal(18,15)")  # noqa: E731
+    t_score = F.sum(p15("prob_t")).cast("double") / F.count(F.lit(1))
+    c_score = F.sum(p15("prob")).cast("double") / F.count(F.lit(1))
     return (
         e.join(probs, ["w1", "w2"])
         .groupBy("doc_id")

@@ -188,8 +188,8 @@ _DECON_MAXB = 50
 def semantic_decontam_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The exact mode of the shared decontam kernel (norms hoisted out
     # of the pair space, broadcast bench, one map-side argmax
-    # aggregate) — same kernel the LSH twin and the ab_decontam_*
-    # bench arms use, so a fix lands in every mode at once.
+    # aggregate) — same kernel the LSH twin uses, so a fix lands in
+    # every mode at once.
     from mapreduce_4_spark.operators.similarity import decontam_max_cosine
 
     emb = load_table(spark, sf_dir, "embeddings").select(

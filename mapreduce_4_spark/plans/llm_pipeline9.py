@@ -99,8 +99,8 @@ _DLSH_PROBE_SQL = " UNION ALL ".join(
                 "benchmark suite stops being a |bench|-multiplier on the "
                 "100 TB corpus scan. Unrouted vectors return NULL "
                 "max_cos / contaminated=false; recall vs the exact twin "
-                "is measured by the ab_decontam_* bench arms and pinned "
-                "in tests/test_similarity.py. Fully oracled: the seeded "
+                "is pinned in tests/test_similarity.py (cost readings in "
+                "BASELINE.md). Fully oracled: the seeded "
                 "plane literals bake into the SQL (similarity_lsh_topk "
                 "discipline)",
 )

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_4_spark.functions.money import sql_dsum
+from mapreduce_4_spark.functions.money import cents, csum, sql_dsum, unscale
 from mapreduce_4_spark.operators.maintenance import upsert, validate
 from mapreduce_4_spark.registry import register
 from mapreduce_4_spark.sources import load_table
@@ -152,19 +152,19 @@ def scd2_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("maintenance", "aggregate", "incremental"),
     description="incremental materialized-rollup refresh: merge the frozen "
                 "pre-cutoff partial aggregate with the increment's partial "
-                "instead of rescanning history — exact because decimal "
+                "instead of rescanning history — exact because integer-cents "
                 "partials re-aggregate associatively",
 )
 def incremental_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce_4_spark.functions.money import dec
-
     orders = load_table(spark, sf_dir, "orders").select("o_orderdate", "o_totalprice")
     cutoff = F.lit("1999-01-01 00:00:00").cast("timestamp_ntz")
     month = F.date_trunc("month", F.col("o_orderdate")).cast("timestamp_ntz")
 
+    # exact integer-cents partials (long; 100 TB bound ~1e17 cents per
+    # month < 2^63), rescaled once after the merge
     def partial(df: DataFrame) -> DataFrame:
         return df.groupBy(month.alias("month")).agg(
-            F.sum(dec("o_totalprice")).alias("rev_dec"),
+            F.sum(cents("o_totalprice")).alias("rev_cents"),
             F.count(F.lit(1)).alias("n_orders"),
         )
 
@@ -176,7 +176,7 @@ def incremental_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.unionByName(increment)
         .groupBy("month")
         .agg(
-            F.sum("rev_dec").cast("double").alias("revenue"),
+            unscale(F.sum("rev_cents"), 2).alias("revenue"),
             F.sum("n_orders").alias("n_orders"),
         )
     )
@@ -275,7 +275,6 @@ def gdpr_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join broadcasts and the base never shuffles — at 100 TB the
     delete costs one scan plus the rewrite of touched storage, never a
     repartition."""
-    from mapreduce_4_spark.functions.money import dsum
     from mapreduce_4_spark.operators.maintenance import delete_rows
 
     orders = load_table(spark, sf_dir, "orders")
@@ -290,7 +289,8 @@ def gdpr_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.countDistinct("o_custkey").alias("n_customers"),
-            dsum("o_totalprice").alias("sum_price"),
+            # long-cents sum; 100 TB bound ~2e18 cents per group < 2^63
+            csum("o_totalprice").alias("sum_price"),
         )
     )
 
@@ -313,7 +313,6 @@ def gdpr_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "order year",
 )
 def retention_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce_4_spark.functions.money import dsum
     from mapreduce_4_spark.operators.maintenance import delete_rows
 
     orders = load_table(spark, sf_dir, "orders")
@@ -324,7 +323,8 @@ def retention_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept.groupBy(F.year("o_orderdate").cast("long").alias("order_year"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("sum_price"),
+            # long-cents sum; 100 TB bound ~2e18 cents per group < 2^63
+            csum("o_totalprice").alias("sum_price"),
         )
     )
 
@@ -349,14 +349,12 @@ _JMV_MOD = 10  # o_orderkey % 10 == 0 -> today's delta batch; rest = base
                 "JOIN nation is refreshed as merge(frozen base partials, "
                 "delta-join partials) — the delta joins the BROADCAST "
                 "dimensions, history is never rescanned or re-joined, "
-                "and decimal partials re-aggregate associatively so the "
+                "and integer-cents partials re-aggregate associatively so the "
                 "merged view is bit-identical to the full recompute the "
                 "oracle runs. The star-join complement of "
                 "incremental_revenue_rollup's single-table refresh",
 )
 def incremental_join_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce_4_spark.functions.money import dec
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -372,12 +370,14 @@ def incremental_join_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "n_name")
     )
 
+    # exact integer-cents partials (long; 100 TB bound ~3e17 cents per
+    # nation < 2^63), rescaled once after the merge
     def partial(df: DataFrame) -> DataFrame:
         return (
             df.join(dims, df.o_custkey == dims.c_custkey)
             .groupBy(F.col("n_name").alias("nation"))
             .agg(
-                F.sum(dec("o_totalprice")).alias("rev_dec"),
+                F.sum(cents("o_totalprice")).alias("rev_cents"),
                 F.count(F.lit(1)).alias("n_orders"),
             )
         )
@@ -391,7 +391,7 @@ def incremental_join_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.unionByName(delta)
         .groupBy("nation")
         .agg(
-            F.sum("rev_dec").cast("double").alias("revenue"),
+            unscale(F.sum("rev_cents"), 2).alias("revenue"),
             F.sum("n_orders").alias("n_orders"),
         )
     )
@@ -710,7 +710,6 @@ def cow_delete_orders_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from mapreduce_4_spark.functions.money import dsum
     from mapreduce_4_spark.sources.versioned import (
         count_version,
         delete_version_pruned,
@@ -751,7 +750,8 @@ def cow_delete_orders_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = live.groupBy("o_orderstatus").agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.min("o_orderkey").cast("bigint").alias("min_key"),
-            dsum("o_totalprice").alias("sum_price"),
+            # long-cents sum; 100 TB bound ~2e18 cents per group < 2^63
+            csum("o_totalprice").alias("sum_price"),
         )
         rows = out.collect()
         # the metadata count must agree with the rows just read
@@ -805,7 +805,6 @@ def dv_delete_orders_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from mapreduce_4_spark.functions.money import dsum
     from mapreduce_4_spark.sources.versioned import (
         count_version,
         delete_version_dv,
@@ -839,7 +838,8 @@ def dv_delete_orders_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         live = read_version(spark, tdir)
         out = live.groupBy("o_orderstatus").agg(
             F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("sum_price"),
+            # long-cents sum; 100 TB bound ~2e18 cents per group < 2^63
+            csum("o_totalprice").alias("sum_price"),
         )
         rows = out.collect()
         assert count_version(None, tdir) == sum(r["n_orders"] for r in rows)
@@ -902,7 +902,6 @@ def cow_update_orders_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from mapreduce_4_spark.functions.money import dsum
     from mapreduce_4_spark.sources.versioned import (
         count_version,
         read_version,
@@ -942,7 +941,8 @@ def cow_update_orders_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_version(spark, tdir)
             .groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_orders"),
-                 dsum("o_totalprice").alias("sum_price"))
+                 # long-cents sum; 100 TB bound ~2e18 cents per group < 2^63
+                 csum("o_totalprice").alias("sum_price"))
             .collect()
         )
     finally:
@@ -981,7 +981,7 @@ def cow_update_orders_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "table_changes(v_base, latest) — each I adds its new_ "
                 "row, each D retracts its old_ row, each U does both, "
                 "via ONE inline array-explode aggregate — and merging "
-                "the delta with the frozen decimal partials. The "
+                "the delta with the frozen integer-cents partials. The "
                 "refreshed MV must equal DuckDB recomputing the final "
                 "state from raw parquet; the builder also asserts it "
                 "equals the direct recompute over the final snapshot",
@@ -994,7 +994,7 @@ def incremental_mv_cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_changes' snapshot diff, O(two snapshots); a stored change
     feed replaces that term without touching the refresh plan — the
     CDC feed in streaming/cdc.py is exactly that producer.) Retraction
-    arithmetic is exact because the measures aggregate in DECIMAL.
+    arithmetic is exact because the measures aggregate as integer cents.
 
     Timing caveat (the metadata_agg_orders shape): the chain publish
     and the two mutation commits run at BUILD time.
@@ -1006,7 +1006,6 @@ def incremental_mv_cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from mapreduce_4_spark.functions.money import dec
     from mapreduce_4_spark.sources.versioned import (
         delete_version_dv,
         merge_version_pruned,
@@ -1029,12 +1028,13 @@ def incremental_mv_cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             write_version(part.coalesce(2), tdir, append=True,
                           stats_for=["o_orderkey"] if lo == 0 else None)
         v_base = 2
-        # the frozen MV: decimal partials so retraction is exact
+        # the frozen MV: integer-cents partials so retraction is exact
+        # (long; 100 TB bound ~2e18 cents per status < 2^63)
         mv0 = (
             read_version(spark, tdir, version=v_base)
             .groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(dec("o_totalprice")).alias("rev_dec"))
+                 F.sum(cents("o_totalprice")).alias("rev_cents"))
         )
         # mutation 1: CoW merge — +1000 on every 10th key, 3 inserts
         ups = orders.filter(F.col("o_orderkey") % 10 == 0).withColumn(
@@ -1063,7 +1063,7 @@ def incremental_mv_cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct(
                 F.col("old_o_orderstatus").alias("o_orderstatus"),
                 F.lit(-1).cast("long").alias("dn"),
-                (-dec("old_o_totalprice")).alias("drev"),
+                (-cents("old_o_totalprice")).alias("drev"),
             ),
         )
         new_c = F.when(
@@ -1071,7 +1071,7 @@ def incremental_mv_cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct(
                 F.col("new_o_orderstatus").alias("o_orderstatus"),
                 F.lit(1).cast("long").alias("dn"),
-                dec("new_o_totalprice").alias("drev"),
+                cents("new_o_totalprice").alias("drev"),
             ),
         )
         delta = (
@@ -1080,16 +1080,16 @@ def incremental_mv_cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             )).alias("c"))
             .groupBy(F.col("c.o_orderstatus").alias("o_orderstatus"))
             .agg(F.sum("c.dn").alias("n"),
-                 F.sum("c.drev").alias("rev_dec"))
+                 F.sum("c.drev").alias("rev_cents"))
         )
         refreshed = (
             mv0.unionByName(delta)
             .groupBy("o_orderstatus")
             .agg(F.sum("n").alias("n_orders"),
-                 F.sum("rev_dec").alias("rev_dec"))
+                 F.sum("rev_cents").alias("rev_cents"))
             .filter(F.col("n_orders") > 0)
             .select("o_orderstatus", "n_orders",
-                    F.col("rev_dec").cast("double").alias("revenue"))
+                    unscale(F.col("rev_cents"), 2).alias("revenue"))
         )
         rows = refreshed.collect()
         # the incremental path must equal the direct recompute
@@ -1098,7 +1098,7 @@ def incremental_mv_cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in read_version(spark, tdir)
             .groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.sum(dec("o_totalprice")).cast("double").alias("revenue"))
+                 csum("o_totalprice").alias("revenue"))
             .collect()
         }
         assert {(r["o_orderstatus"], r["n_orders"], r["revenue"])
@@ -1324,7 +1324,6 @@ def clustered_chain_fold_orders(spark: SparkSession,
     import shutil
     import tempfile
 
-    from mapreduce_4_spark.functions.money import dsum
     from mapreduce_4_spark.sources.versioned import (
         compact_tail,
         delete_version_pruned,
@@ -1374,7 +1373,8 @@ def clustered_chain_fold_orders(spark: SparkSession,
             boxed.groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_orders"),
                  F.min("o_orderkey").alias("min_key"),
-                 dsum("o_totalprice").alias("sum_price"))
+                 # long-cents sum; 100 TB bound ~2e18 cents per group < 2^63
+                 csum("o_totalprice").alias("sum_price"))
             .select("o_orderstatus", "n_orders", "min_key", "sum_price")
         )
         rows = out.collect()
@@ -1433,7 +1433,6 @@ def wide_delete_orders_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from mapreduce_4_spark.functions.money import dsum
     from mapreduce_4_spark.sources.versioned import (
         delete_version_joined,
         read_version,
@@ -1461,7 +1460,8 @@ def wide_delete_orders_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             live.groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_orders"),
                  F.min("o_orderkey").alias("min_key"),
-                 dsum("o_totalprice").alias("sum_price"))
+                 # long-cents sum; 100 TB bound ~2e18 cents per group < 2^63
+                 csum("o_totalprice").alias("sum_price"))
             .select("o_orderstatus", "n_orders", "min_key", "sum_price")
         )
         rows = out.collect()

@@ -283,48 +283,6 @@ def sql_udf_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-def order_streaks_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The closed-form twin of :func:`order_streaks_recursive`: one
-    window pass (30-day gap flag + running sum = streak id) instead of
-    depth iterations — the sessionization shape. Not registered (it
-    would duplicate the registered query's result); it exists as the
-    measured comparison arm (``ab_streaks_window`` in bench.py) and the
-    algorithm-independence cross-check in tests. Same output schema and
-    values as the recursive query (pinned in
-    tests/test_spark4_surface.py via a third inline implementation)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate"
-    )
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    flagged = orders.withColumn(
-        "new_streak",
-        F.when(
-            F.col("o_orderdate")
-            <= F.lag("o_orderdate").over(w) + F.expr("INTERVAL 30 DAY"),
-            0,
-        ).otherwise(1),
-    ).withColumn("sid", F.sum("new_streak").over(w))
-    return (
-        flagged.groupBy("o_custkey", "sid")
-        .agg(
-            F.min(F.struct("o_orderdate", "o_orderkey")).alias("_root"),
-            F.count(F.lit(1)).alias("streak_len"),
-            F.min("o_orderdate").alias("first_date"),
-            F.max("o_orderdate").alias("last_date"),
-        )
-        .select(
-            "o_custkey",
-            F.col("_root.o_orderkey").alias("root_orderkey"),
-            "streak_len",
-            "first_date",
-            "last_date",
-        )
-    )
-
-
 @register(
     "versioned_datasource_orders",
     requires=("mr4ver-read",),
@@ -458,7 +416,7 @@ def versioned_pushdown_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from mapreduce_4_spark.functions.money import dsum
+    from mapreduce_4_spark.functions.money import csum
     from mapreduce_4_spark.sources.pyds import register_versioned_source
     from mapreduce_4_spark.sources.versioned import write_version
 
@@ -485,7 +443,8 @@ def versioned_pushdown_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.min("o_orderkey").alias("min_key"),
                  F.max("o_orderkey").alias("max_key"),
-                 dsum("o_totalprice").alias("sum_price"))
+                 # long-cents sum; 100 TB bound ~2e18 cents per group < 2^63
+                 csum("o_totalprice").alias("sum_price"))
             .select("o_orderstatus", "n_rows", "min_key", "max_key",
                     "sum_price")
         )
@@ -868,7 +827,7 @@ def cdc_change_feed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from mapreduce_4_spark.functions.money import dsum
+    from mapreduce_4_spark.functions.money import cents, dsum_longs
     from mapreduce_4_spark.sources.pyds import register_versioned_source
     from mapreduce_4_spark.sources.versioned import (
         delete_version_dv,
@@ -915,8 +874,11 @@ def cdc_change_feed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "op")
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.sum("o_orderkey").alias("sum_key"),
-                 dsum("old_o_totalprice").alias("sum_old_price"),
-                 dsum("new_o_totalprice").alias("sum_new_price"))
+                 # a version's inserts may be a whole-table append
+                 dsum_longs(cents("old_o_totalprice"), 2)
+                 .alias("sum_old_price"),
+                 dsum_longs(cents("new_o_totalprice"), 2)
+                 .alias("sum_new_price"))
         )
         rows = agg.collect()
     finally:
@@ -985,7 +947,7 @@ def cdc_batch_window_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from mapreduce_4_spark.functions.money import dsum
+    from mapreduce_4_spark.functions.money import cents, dsum_longs
     from mapreduce_4_spark.sources.pyds import register_versioned_source
     from mapreduce_4_spark.sources.versioned import (
         delete_version_dv,
@@ -1028,8 +990,11 @@ def cdc_batch_window_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "op")
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.sum("o_orderkey").alias("sum_key"),
-                 dsum("old_o_totalprice").alias("sum_old_price"),
-                 dsum("new_o_totalprice").alias("sum_new_price"))
+                 # a version's inserts may be a whole-table append
+                 dsum_longs(cents("old_o_totalprice"), 2)
+                 .alias("sum_old_price"),
+                 dsum_longs(cents("new_o_totalprice"), 2)
+                 .alias("sum_new_price"))
         )
         rows = agg.collect()
     finally:
@@ -1108,7 +1073,7 @@ def cdc_delta_shape_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from mapreduce_4_spark.functions.money import dsum
+    from mapreduce_4_spark.functions.money import cents, dsum_longs
     from mapreduce_4_spark.sources.pyds import register_versioned_source
     from mapreduce_4_spark.sources.versioned import (
         delete_version_dv,
@@ -1151,7 +1116,8 @@ def cdc_delta_shape_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("_change_type").alias("change_type"))
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.sum("o_orderkey").alias("sum_key"),
-                 dsum("o_totalprice").alias("sum_price"))
+                 # a version's inserts may be a whole-table append
+                 dsum_longs(cents("o_totalprice"), 2).alias("sum_price"))
         )
         rows = agg.collect()
     finally:
@@ -1203,7 +1169,7 @@ def stream_write_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from mapreduce_4_spark.functions.money import dsum
+    from mapreduce_4_spark.functions.money import csum
     from mapreduce_4_spark.sources.pyds import register_versioned_source
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1240,7 +1206,8 @@ def stream_write_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_orders"),
                  F.sum("o_orderkey").alias("sum_key"),
-                 dsum("o_totalprice").alias("sum_price"))
+                 # long-cents sum; 100 TB bound ~2e18 cents per group < 2^63
+                 csum("o_totalprice").alias("sum_price"))
         )
         rows = agg.collect()
     finally:

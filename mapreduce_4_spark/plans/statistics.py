@@ -277,8 +277,9 @@ def _skew_arm_sql(table: str, col: str) -> str:
     description="join-key skew report: rows, distinct keys, hottest-key "
                 "row count and share for each fact join column — the "
                 "number an operator reads BEFORE choosing plain vs "
-                "salted vs broadcast join at scale (the ab_skewamp "
-                "bench arms quantify what happens when this is ignored)",
+                "salted vs broadcast join at scale (BASELINE.md's "
+                "ab_skewamp readings quantify what happens when this is "
+                "ignored)",
 )
 def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One partial-aggregated groupBy per key column (map-side combine,

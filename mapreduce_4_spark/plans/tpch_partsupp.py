@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_4_spark.functions.money import csum, dsum, sql_dsum
+from mapreduce_4_spark.functions.money import cents, csum, dsum_longs, sql_dsum
 from mapreduce_4_spark.registry import register
 from mapreduce_4_spark.sources import load_table
 
@@ -180,7 +180,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "join", "aggregate"),
     description="TPC-H Q9 shape: per-nation per-year profit on 'gear' "
                 "parts — fact joins partsupp on its own composite key, all "
-                "dimensions broadcast, decimal-exact profit sum",
+                "dimensions broadcast, exact long-cents profit sum",
 )
 def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -197,9 +197,11 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     geo = _supplier_geo(spark, sf_dir).select("s_suppkey", "n_name")
     ps = derived_partsupp(spark, sf_dir)
+    # exact 1e4-scaled profit on longs; ps_supplycost is a true 2-dp
+    # value (k * 0.01, k an integer <= 100099: OPTIMIZATION_r15.md §8)
     profit = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("ps_supplycost") * F.col("l_quantity")
+        cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
+        - cents("ps_supplycost") * cents("l_quantity")
     )
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -214,7 +216,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("long").alias("o_year"),
         )
-        .agg(dsum(profit, 4).alias("profit"))
+        .agg(dsum_longs(profit, 4).alias("profit"))
     )
 
 
@@ -249,11 +251,13 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     national = derived_partsupp(spark, sf_dir).join(
         F.broadcast(nat_supp), F.col("ps_suppkey") == F.col("s_suppkey")
     )
-    value = F.col("ps_supplycost") * F.col("ps_availqty")
+    # exact cents of cost x stock (2-dp ps_supplycost, OPTIMIZATION_r15.md
+    # §8; ps_availqty an integer <= 9999)
+    value = cents("ps_supplycost") * F.col("ps_availqty")
     by_part = national.groupBy("ps_partkey").agg(
-        dsum(value).alias("part_value")
+        dsum_longs(value, 2).alias("part_value")
     )
-    total = national.agg((dsum(value) * 0.001).alias("threshold"))
+    total = national.agg((dsum_longs(value, 2) * 0.001).alias("threshold"))
     return (
         by_part.join(F.broadcast(total))
         .filter(F.col("part_value") > F.col("threshold"))
@@ -408,11 +412,9 @@ def q20_restock_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="TPC-H Q8 shape (completes the 22-query set): NATION_7's "
                 "share of AMERICA-market ECONOMY-part revenue per year — "
                 "7-relation star, every dimension broadcast, share = one "
-                "IEEE division of two exact decimal sums",
+                "IEEE division of two exact long-cents sums",
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce_4_spark.functions.money import dec
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
@@ -458,8 +460,9 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("s_suppkey", "supp_nation")
     )
-    vol = dec(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
-    zero = F.lit(0).cast("decimal(18,4)")
+    # exact 1e4-scaled volume: the unscaled value of the oracle's
+    # CAST(p * (1 - d) AS DECIMAL(18,4))
+    vol = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     return (
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -474,11 +477,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
             (
-                F.sum(
+                dsum_longs(
                     F.when(F.col("supp_nation") == "NATION_7", vol)
-                    .otherwise(zero)
-                ).cast("double")
-                / F.sum(vol).cast("double")
+                    .otherwise(F.lit(0).cast("long")), 4)
+                / dsum_longs(vol, 4)
             ).alias("mkt_share")
         )
     )

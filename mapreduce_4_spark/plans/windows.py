@@ -275,6 +275,8 @@ _DECAY_WEIGHTS = ["1"] + [f"0.{9**i}" for i in range(1, 8)]
 def windowed_decay_sum_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    # decimal, not long cents: the per-row products with the decimal
+    # weights and their decimal sum are this query's rounding contract
     base = dec("value")
     zero = F.lit("0").cast("decimal(18,2)")
     terms = [

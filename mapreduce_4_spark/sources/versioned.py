@@ -268,19 +268,28 @@ def _write_observed(df: DataFrame, cols: list[str] | None, write):
     if not cols:
         write(df)
         return None
+    dtypes = dict(df.dtypes)
+    got = _observe_write(df, _stats_exprs(dtypes, cols), write)
+    if got is None:
+        return None
+    return got[_OBS_ROWS], _stats_from_row(got, dtypes, cols)
+
+
+def _observe_write(df: DataFrame, exprs: list, write):
+    """Run ``write(frame)`` with ``frame`` = ``df`` observing its row
+    count (``_OBS_ROWS``) and the aggregate ``exprs``; the observed Row,
+    or None when Spark reported no metrics. ``df`` must be the exact
+    frame handed to the writer (``_write_observed``)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    dtypes = dict(df.dtypes)
     obs = Observation()
-    write(df.observe(obs, F.count(F.lit(1)).alias(_OBS_ROWS),
-                     *_stats_exprs(dtypes, cols)))
+    write(df.observe(obs, F.count(F.lit(1)).alias(_OBS_ROWS), *exprs))
     # the metrics are set when the write action returns; never block
     # on them (Observation.get waits forever if a plan dropped them)
     if obs._jo.getRowOrEmpty().isEmpty():
         return None
-    got = obs.get
-    return got[_OBS_ROWS], _stats_from_row(got, dtypes, cols)
+    return obs.get
 
 
 def _parquet_write(path: str, partition_by: list[str] | None):
@@ -3210,7 +3219,6 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
         ).select(F.col(_DV_COLS[0]).alias("file"),
                  F.col(_DV_COLS[1]).alias("pos"))
     dv = None
-    dir_counts: dict[str, int] = {}
     total = 0
     if new_deletes is not None:
         if old_dv:
@@ -3226,15 +3234,31 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
         nonce = uuid.uuid4().hex[:12]
         dv_rel = os.path.join("_dv", f"{nonce}.parquet")
         dv_abs = os.path.join(table_dir, dv_rel)
-        new_deletes.coalesce(1).write.mode("errorifexists").parquet(dv_abs)
-        # exact per-dir cardinalities from the sidecar just written —
-        # the numbers count_version's metadata arithmetic subtracts
-        counts = (
-            spark.read.schema(_DV_SCHEMA).parquet(dv_abs)
-            .groupBy(_dv_dir_col().alias("d"))
-            .count().collect()
-        )
-        dir_counts = {r["d"]: int(r["count"]) for r in counts}
+        # exact per-dir cardinalities (the numbers count_version's
+        # metadata arithmetic subtracts), observed on the sidecar's own
+        # write: one prefix test per chain dir and sidecar row. Every
+        # entry names a chain dir, so the counts must add up to the
+        # footer rows; the sidecar is read back otherwise.
+        dirs = _chain_dirs(pm)
+        got = _observe_write(
+            new_deletes.coalesce(1),
+            [F.count_if(F.col("file").startswith(f"{d}/")).alias(f"d{i}")
+             for i, d in enumerate(dirs)],
+            lambda frame: frame.write.mode("errorifexists").parquet(dv_abs))
+        observed = None
+        if got is not None and got[_OBS_ROWS] == fsio.parquet_row_count(
+                dv_abs):
+            observed = {d: got[f"d{i}"] for i, d in enumerate(dirs)
+                        if got[f"d{i}"]}
+        if observed is not None and sum(observed.values()) == got[_OBS_ROWS]:
+            dir_counts = observed
+        else:
+            counts = (
+                spark.read.schema(_DV_SCHEMA).parquet(dv_abs)
+                .groupBy(_dv_dir_col().alias("d"))
+                .count().collect()
+            )
+            dir_counts = {r["d"]: int(r["count"]) for r in counts}
         total = sum(dir_counts.values())
         if total:
             dv = {"path": dv_rel, "count": total, "dir_counts": dir_counts}

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_4_spark.functions.money import dec
+from mapreduce_4_spark.functions.money import csum
 
 
 def events_stream(spark: SparkSession, sf_dir: str,
@@ -63,7 +63,9 @@ def stream_tumbling_counts(stream: DataFrame,
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec("value")).cast("double").alias("sum_value"),
+            # long-cents sum; 100 TB bound: value cents ~1e4/row x the
+            # events of one hour and type << 2^63
+            csum("value").alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),

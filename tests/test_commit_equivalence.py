@@ -188,6 +188,27 @@ def test_miscounted_observation_falls_back_to_the_written_dir(
         == [0, 9, 0, 45]
 
 
+def test_miscounted_dv_observation_falls_back_to_the_sidecar(
+        spark, tmp_path, monkeypatch):
+    """The same rule for a deletion-vector commit: per-dir counts whose
+    observed total disagrees with the sidecar's footers are never
+    recorded; the commit reads them back from the sidecar."""
+    tdir = str(tmp_path / "t")
+    for lo in (0, 10):
+        V.write_version(spark.range(lo, lo + 10).withColumnRenamed("id", "k"),
+                        tdir, append=True)
+    real = V._observe_write
+
+    def miscounted(df, exprs, write):
+        got = real(df, exprs, write)
+        return {**got, V._OBS_ROWS: got[V._OBS_ROWS] + 1, "d0": 0}
+
+    monkeypatch.setattr(V, "_observe_write", miscounted)
+    V.delete_version_dv(spark, tdir, keys=[3, 12, 14], key="k")
+    assert V.read_manifest(tdir, 3)["dv"]["dir_counts"] \
+        == {"v=000001": 1, "v=000002": 2}
+
+
 # -- the IN builder ------------------------------------------------------------
 
 _IN_CASES = [

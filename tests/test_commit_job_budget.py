@@ -105,3 +105,15 @@ def test_bounded_avg_is_one_aggregate(spark, chain):
     assert _jobs(spark, lambda: got.append(V.avg_version(
         spark, tdir, "k", lower=25, upper=125))) == 2
     assert got == [(sum(range(25, 50)) + sum(range(100, 126))) / 51]
+
+
+def test_dv_delete_is_one_job(spark, chain):
+    """A 2-key deletion-vector delete over two chain dirs: the sidecar
+    write is the only job, its per-dir counts observed on it."""
+    tdir = chain()
+    assert _jobs(spark, lambda: V.delete_version_dv(
+        spark, tdir, keys=[5, 105], key="k")) == 1
+    m = V.read_manifest(tdir, 4)
+    assert m["dv"]["count"] == 2
+    assert m["dv"]["dir_counts"] == {"v=000001": 1, "v=000002": 1}
+    assert V.count_version(None, tdir) == 148

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_4_spark.functions.money import (
-    cents, csum, dec, dsum, dsum_longs, unscale,
+    cents, csum, dec, dsum_longs, unscale,
 )
 from mapreduce_4_spark.functions.text import CLEAN_CHARS, CLEAN_CLASS, ngrams_join
 from mapreduce_4_spark.sources import load_table
@@ -31,6 +31,9 @@ MEASURES = [
     ("orders", "o_totalprice"),
     ("customer", "c_acctbal"),
     ("events", "value"),
+    # derived (plans/tpch_partsupp.derived_partsupp); 2-dp provenance
+    # proved in OPTIMIZATION_r15.md §8
+    ("partsupp", "ps_supplycost"),
 ]
 
 
@@ -39,7 +42,13 @@ def test_cents_equals_decimal_unscaled(spark, table, col):
     """cents(x) must equal the unscaled value DECIMAL(18,2) stores, for
     every row of every 2-dp fixture measure — the premise of the whole
     fast path (functions/money.py step 1)."""
-    df = load_table(spark, SF, table).select(F.col(col).alias("x"))
+    if table == "partsupp":
+        from mapreduce_4_spark.plans.tpch_partsupp import derived_partsupp
+
+        df = derived_partsupp(spark, SF, cached=False)
+    else:
+        df = load_table(spark, SF, table)
+    df = df.select(F.col(col).alias("x"))
     # dec(x) * 100 is an exact integer-valued decimal; compare as long
     bad = df.filter(
         (dec("x") * 100).cast("long") != cents("x")
@@ -49,7 +58,8 @@ def test_cents_equals_decimal_unscaled(spark, table, col):
 
 def test_csum_equals_dsum_per_group(spark):
     li = load_table(spark, SF, "lineitem")
-    old = li.groupBy("l_returnflag").agg(dsum("l_quantity").alias("s")).collect()
+    old = li.groupBy("l_returnflag").agg(
+        F.sum(dec("l_quantity")).cast("double").alias("s")).collect()
     new = li.groupBy("l_returnflag").agg(csum("l_quantity").alias("s")).collect()
     assert {r["l_returnflag"]: r["s"] for r in old} == \
            {r["l_returnflag"]: r["s"] for r in new}
@@ -121,3 +131,143 @@ def test_translate_clean_equals_regexp_clean(spark):
             != F.regexp_replace("text", CLEAN_CLASS, "")
         ).count()
         assert bad == 0
+
+
+# ---------------------------------------------------------------------
+# Old-vs-new equality for every expression shape moved off the decimal
+# accumulators: the pre-migration decimal form is written inline here,
+# the new long-cents form is the one the queries use, and both must
+# agree bit for bit (None included) on the fixtures.
+# ---------------------------------------------------------------------
+
+
+def _agg(df, keys, expr):
+    rows = (df.groupBy(*keys) if keys else df).agg(expr.alias("v"))
+    return {tuple(r[k] for k in keys): r["v"] for r in rows.collect()}
+
+
+def _same(df, keys, old, new):
+    got_old, got_new = _agg(df, keys, old), _agg(df, keys, new)
+    assert got_old == got_new
+    return got_new
+
+
+def _old_sum(col, scale=2):
+    return F.sum(dec(col, scale)).cast("double")
+
+
+@pytest.mark.parametrize("keys", [[], ["o_orderstatus"],
+                                  ["o_orderpriority"]])
+def test_totalprice_sums_equal_decimal(spark, keys):
+    """gdpr/retention/CoW/DV/pushdown/stream-write/CDC sums: csum and
+    dsum_longs(cents(x), 2) both equal the decimal sum, grouped and
+    ungrouped."""
+    od = load_table(spark, SF, "orders")
+    _same(od, keys, _old_sum("o_totalprice"), csum("o_totalprice"))
+    _same(od, keys, _old_sum("o_totalprice"),
+          dsum_longs(cents("o_totalprice"), 2))
+
+
+def _lineitem_partsupp(spark):
+    from mapreduce_4_spark.plans.tpch_partsupp import derived_partsupp
+
+    li = load_table(spark, SF, "lineitem")
+    ps = derived_partsupp(spark, SF, cached=False)
+    return li.join(ps, (F.col("l_partkey") == F.col("ps_partkey"))
+                   & (F.col("l_suppkey") == F.col("ps_suppkey")))
+
+
+def test_q9_profit_equals_decimal(spark):
+    p, d = F.col("l_extendedprice"), F.col("l_discount")
+    sc, q = F.col("ps_supplycost"), F.col("l_quantity")
+    old = F.sum(dec(p * (1 - d) - sc * q, 4)).cast("double")
+    new = dsum_longs(
+        cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
+        - cents("ps_supplycost") * cents("l_quantity"), 4)
+    got = _same(_lineitem_partsupp(spark), ["l_returnflag", "l_linestatus"],
+                old, new)
+    assert len(got) > 1
+
+
+def test_q11_value_and_threshold_equal_decimal(spark):
+    """Per-part value, the 0.001 threshold and the parts it keeps."""
+    from mapreduce_4_spark.plans.tpch_partsupp import derived_partsupp
+
+    ps = derived_partsupp(spark, SF, cached=False).filter(
+        F.col("ps_suppkey") % 7 == 0)
+    old_v = _old_sum(F.col("ps_supplycost") * F.col("ps_availqty"))
+    new_v = dsum_longs(cents("ps_supplycost") * F.col("ps_availqty"), 2)
+    by_part = _same(ps, ["ps_partkey"], old_v, new_v)
+    total = _same(ps, [], old_v * 0.001, new_v * 0.001)[()]
+    kept = {k for k, v in by_part.items() if v > total}
+    assert 0 < len(kept) < len(by_part)
+
+
+def test_q8_share_ratio_equals_decimal(spark):
+    li = load_table(spark, SF, "lineitem")
+    mine = F.col("l_suppkey") % 7 == 0
+    vol_dec = dec(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
+    old = (F.sum(F.when(mine, vol_dec)
+                 .otherwise(F.lit(0).cast("decimal(18,4)"))).cast("double")
+           / F.sum(vol_dec).cast("double"))
+    vol = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
+    new = (dsum_longs(F.when(mine, vol).otherwise(F.lit(0).cast("long")), 4)
+           / dsum_longs(vol, 4))
+    got = _same(li, ["l_returnflag"], old, new)
+    assert all(0 < v < 1 for v in got.values())
+
+
+def test_locf_sum_with_nulls_equals_decimal(spark):
+    """events_resample_hourly's sum over a LOCF column: nulls skipped,
+    an all-null group stays NULL."""
+    ev = load_table(spark, SF, "events").select(
+        (F.col("user_id") % 50).alias("g"),
+        F.when((F.col("event_id") % 4 == 0) | (F.col("user_id") % 50 == 7),
+               F.lit(None).cast("double"))
+        .otherwise(F.col("value")).alias("locf"))
+    got = _same(ev, ["g"], _old_sum("locf"), csum("locf"))
+    assert got[(7,)] is None and len(got) == 50
+
+
+def test_cdc_old_new_sums_with_nulls_equal_decimal(spark):
+    """CDC feeds carry NULL old_ (inserts) and new_ (deletes) images;
+    updates double the price or add 1000 to it."""
+    od = load_table(spark, SF, "orders")
+    k, price = F.col("o_orderkey"), F.col("o_totalprice")
+    feed = od.select(
+        (k % 3).alias("op"),
+        F.when(k % 3 == 0, F.lit(None).cast("double"))
+        .otherwise(price).alias("old_o_totalprice"),
+        F.when(k % 3 == 1, F.lit(None).cast("double"))
+        .when(k % 2 == 0, price * 2).otherwise(price + 1000)
+        .alias("new_o_totalprice"))
+    for col in ("old_o_totalprice", "new_o_totalprice"):
+        got = _same(feed, ["op"], _old_sum(col),
+                    dsum_longs(cents(col), 2))
+        assert sum(v is None for v in got.values()) == 1
+
+
+def test_mv_partials_and_retractions_equal_decimal(spark):
+    """incremental_mv_cdc_orders: frozen partials merged with retraction
+    (-old) and insertion (+new) rows, rescaled once at the end."""
+    od = load_table(spark, SF, "orders")
+    k, price = F.col("o_orderkey"), F.col("o_totalprice")
+    base = od.filter(k % 2 == 0)
+    changes = od.filter(k % 5 == 0).select(
+        "o_orderstatus", price.alias("old_p"),
+        (price + 1000).alias("new_p"))
+
+    def refreshed(measure, merged):
+        mv0 = base.groupBy("o_orderstatus").agg(
+            F.sum(measure(price)).alias("rev"))
+        delta = changes.select(
+            "o_orderstatus", (-measure(F.col("old_p"))).alias("rev")
+        ).unionByName(changes.select(
+            "o_orderstatus", measure(F.col("new_p")).alias("rev")))
+        rows = (mv0.unionByName(delta).groupBy("o_orderstatus")
+                .agg(merged(F.sum("rev")).alias("v")).collect())
+        return {r["o_orderstatus"]: r["v"] for r in rows}
+
+    old = refreshed(dec, lambda c: c.cast("double"))
+    new = refreshed(cents, lambda c: unscale(c, 2))
+    assert old == new and len(new) == 3

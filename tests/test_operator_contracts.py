@@ -107,31 +107,6 @@ def test_ivf_reuses_pretrained_centroids(spark):
         centroids.unpersist()
 
 
-def test_q1_double_fast_path_tracks_decimal_within_1e9(spark, sf_oracle):
-    """The unregistered double-precision q1 must agree with the
-    decimal-exact registered path to 1e-9 relative — the documented
-    accuracy of the fast path (bench key ab_q1_double)."""
-    from mapreduce_4_spark.plans import REGISTRY
-    from mapreduce_4_spark.plans.aggregates import q1_pricing_summary_double
-
-    exact = {
-        (r["l_returnflag"], r["l_linestatus"]): r
-        for r in REGISTRY["q1_pricing_summary"].builder(spark, sf_oracle).collect()
-    }
-    fast = {
-        (r["l_returnflag"], r["l_linestatus"]): r
-        for r in q1_pricing_summary_double(spark, sf_oracle).collect()
-    }
-    assert exact.keys() == fast.keys()
-    cols = ["sum_qty", "sum_base_price", "sum_disc_price", "sum_charge",
-            "avg_qty", "avg_price", "avg_disc"]
-    for key, e in exact.items():
-        f = fast[key]
-        assert f["count_order"] == e["count_order"]
-        for c in cols:
-            assert abs(f[c] - e[c]) <= 1e-9 * max(1.0, abs(e[c])), (key, c)
-
-
 def test_connected_components_rejects_nonpositive_max_iter(spark):
     from mapreduce_4_spark.operators.clustering import connected_components
 

@@ -538,3 +538,67 @@ def test_ann_routing_and_encode_are_map_only(spark, sf_oracle):
         # post-limit over Exchange SinglePartition
         assert "Exchange hashpartitioning" not in plan, (name, plan)
         assert "SortMergeJoin" not in plan, (name, plan)
+
+
+#: every query whose money aggregate moved from a DECIMAL(18,2)/(18,4)
+#: accumulator to long cents (functions/money.py)
+_MONEY_MIGRATED = (
+    "q8_market_share", "q9_product_type_profit", "q11_important_stock",
+    "gdpr_delete_orders", "retention_delete_orders",
+    "cow_delete_orders_chain", "dv_delete_orders_chain",
+    "cow_update_orders_chain", "clustered_chain_fold_orders",
+    "wide_delete_orders_chain", "events_resample_hourly",
+    "versioned_pushdown_orders", "cdc_change_feed_orders",
+    "cdc_batch_window_orders", "cdc_delta_shape_orders",
+    "stream_write_orders", "incremental_revenue_rollup",
+    "incremental_join_refresh", "incremental_mv_cdc_orders",
+)
+
+
+def _decimal_accumulators(plan: str) -> list[str]:
+    """The arguments of every ``sum(...)`` in ``plan`` that cast to
+    DECIMAL(18,2) or DECIMAL(18,4)."""
+    found = []
+    for m in re.finditer(r"\bsum\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        arg = plan[m.end():i - 1]
+        if re.search(r"decimal\(18,[24]\)", arg):
+            found.append(arg)
+    return found
+
+
+@pytest.mark.parametrize("name", _MONEY_MIGRATED + ("stream_tumbling_counts",))
+def test_money_aggregates_have_no_decimal_accumulator(spark, sf_smoke,
+                                                      monkeypatch, name):
+    """One money discipline: no migrated query sums over a DECIMAL(18,x)
+    cast. Queries that commit a versioned chain at build time collect
+    their aggregate inside the builder, so every DataFrame collected
+    during the build is checked along with the returned one."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_4_spark.sources import load_table
+    from mapreduce_4_spark.streaming.events_stream import (
+        stream_tumbling_counts,
+    )
+
+    plans = []
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame
+    collect = frame_cls.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", recording_collect)
+    if name == "stream_tumbling_counts":
+        ev = load_table(spark, sf_smoke, "events")
+        df = stream_tumbling_counts(
+            ev.withColumn("ts", F.col("ts").cast("timestamp")))
+    else:
+        df = REGISTRY[name].builder(spark, sf_smoke)
+    plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+    assert any("sum(" in p for p in plans), plans
+    assert [a for p in plans for a in _decimal_accumulators(p)] == []

@@ -86,7 +86,7 @@ def test_stream_static_enrichment_matches_batch(spark, sf_smoke):
         stream_enrich_customers,
     )
     from pyspark.sql import functions as F
-    from mapreduce_4_spark.functions.money import dsum
+    from mapreduce_4_spark.functions.money import dec
 
     stream = events_stream(spark, sf_smoke).select("user_id", "event_type", "value")
     cust = load_table(spark, sf_smoke, "customer").select("c_custkey", "c_mktsegment")
@@ -96,7 +96,8 @@ def test_stream_static_enrichment_matches_batch(spark, sf_smoke):
     got = (
         spark.table("t_enriched")
         .groupBy("c_mktsegment", "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"),
+             F.sum(dec("value")).cast("double").alias("sum_value"))
     )
     expected = REGISTRY["events_customer_enrichment"].builder(spark, sf_smoke)
     assert _rows(got) == _rows(expected)
