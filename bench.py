@@ -40,6 +40,25 @@ _LOAD1: dict[str, list[float]] = {}
 FAST_FLOOR_SEC = 1.0
 FAST_EXTRA_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_FAST_EXTRA", "2"))
 
+#: per-arm session.codegen_counters difference over the timed runs
+#: (full record only). Nonzero compilations mean the arm's timings
+#: include recompiles: the generated-class cache is thrashing.
+_CODEGEN: dict[str, dict] = {}
+
+
+def _codegen_reading(since: dict | None = None) -> dict | None:
+    """session.codegen_counters of the active session (the difference
+    from ``since`` when given); None without a session, as when the
+    unit tests drive _timed with a fake frame."""
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return None
+    from mapreduce_4_spark.session import codegen_counters
+
+    return codegen_counters(spark, since=since)
+
 
 def _proc_stat_cpu() -> list[int] | None:
     """The aggregate 'cpu' jiffies line from /proc/stat (user nice
@@ -155,6 +174,7 @@ def _timed(timings: dict[str, float], name: str, df,
     min-of-5 where the relative noise floor is worst (headline + calib
     arms pass FAST_EXTRA_RUNS; ab_* arms stay min-of-3)."""
     df.write.format("noop").mode("overwrite").save()
+    mark = _codegen_reading()
     runs: list[float] = []
     loads: list[float] = []
     while len(runs) < N_RUNS or (
@@ -167,6 +187,8 @@ def _timed(timings: dict[str, float], name: str, df,
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         runs.append(round(time.perf_counter() - t0, 3))
+    if mark:
+        _CODEGEN[name] = _codegen_reading(since=mark)
     _RAW[name] = runs
     _LOAD1[name] = loads
     timings[name] = min(runs)
@@ -179,6 +201,7 @@ def _timed_fn(timings: dict[str, float], name: str, fn) -> None:
     N_RUNS timed calls, min recorded, raws + per-run loadavg kept —
     same discipline (load1_runs stays keyed like raw_runs)."""
     fn()
+    mark = _codegen_reading()
     runs = []
     loads = []
     for _ in range(N_RUNS):
@@ -189,6 +212,8 @@ def _timed_fn(timings: dict[str, float], name: str, fn) -> None:
         t0 = time.perf_counter()
         fn()
         runs.append(round(time.perf_counter() - t0, 6))
+    if mark:
+        _CODEGEN[name] = _codegen_reading(since=mark)
     _RAW[name] = runs
     _LOAD1[name] = loads
     timings[name] = min(runs)
@@ -516,6 +541,7 @@ def main() -> None:
                    f"x {ncap:.2f}norm")
             print(f"# reference retry: {name} {why}", file=sys.stderr)
             first_raw, first_load = _RAW[name], _LOAD1[name]
+            first_codegen = _CODEGEN[name]
             retry: dict[str, float] = {}
             _timed(retry, name, REGISTRY[name].builder(spark, SF_DIR),
                    fast_extra=FAST_EXTRA_RUNS)
@@ -531,6 +557,8 @@ def main() -> None:
             _LOAD1[name + ":retry"] = _LOAD1[name]
             _RAW[name] = first_raw
             _LOAD1[name] = first_load
+            _CODEGEN[name + ":retry"] = _CODEGEN[name]
+            _CODEGEN[name] = first_codegen
             first_pass[name] = timings[name]
             timings[name] = min(timings[name], retry[name])
 
@@ -548,6 +576,10 @@ def main() -> None:
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": int(
             spark.conf.get("spark.sql.shuffle.partitions")),
+        # the generated-class cache size (session._BASE_CONFS): a
+        # headline measured below its working set includes recompiles
+        "codegen_cache_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")),
     }
     full, summary = build_records(timings, first_pass, sf, _RAW, host=host,
                                   engine=engine)
@@ -605,7 +637,9 @@ def build_records(timings: dict[str, float], first_pass: dict[str, float],
     artifact itself says whether its numbers were taken on a quiet
     host (round-13 verdict ask #1). The full record additionally
     carries load1_runs: the 1-min loadavg sampled before every timed
-    run, keyed like raw_runs."""
+    run, keyed like raw_runs, and codegen_runs: each arm's Janino
+    compilations, JIT ms and the other codegen counters over its timed
+    runs (_CODEGEN)."""
     calib = min(raw[CALIB]) if CALIB in raw else None
 
     def _total(pick) -> float:
@@ -641,7 +675,7 @@ def build_records(timings: dict[str, float], first_pass: dict[str, float],
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     full = dict(summary, queries=timings, raw_runs=raw,
-                load1_runs=dict(_LOAD1))
+                load1_runs=dict(_LOAD1), codegen_runs=dict(_CODEGEN))
     return full, summary
 
 

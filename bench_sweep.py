@@ -73,15 +73,23 @@ def refresh_budget(sweep_json_path: str, floor: float = 1.5,
 
 def main() -> None:
     from mapreduce_4_spark.plans import REGISTRY
-    from mapreduce_4_spark.session import get_spark
+    from mapreduce_4_spark.session import codegen_counters, get_spark
 
     spark = get_spark("mapreduce_4_spark-sweep")
     spark.read.parquet(f"{bench.SF_DIR}/region.parquet").count()
 
     snap0 = bench.host_snapshot()
+    codegen0 = codegen_counters(spark)
     timings: dict[str, float] = {}
     for name, spec in REGISTRY.items():
         bench._timed(timings, name, spec.builder(spark, bench.SF_DIR))
+    # the registry pass's Janino compilations, generated classes, JIT ms
+    # and Metaspace growth: the codegen working set of every query. The
+    # compilations inside timed runs should be 0; more means the timings
+    # include recompiles (bench._CODEGEN)
+    codegen = codegen_counters(spark, since=codegen0)
+    codegen["timed_compilations"] = sum(
+        bench._CODEGEN[n]["compilations"] for n in timings)
     # calibration arms into a SEPARATE dict: they ride raw_runs and
     # host.calib_scatter (the data-independent noise-floor ruler) but
     # must not enter the budget gate (r14 review finding: without
@@ -126,6 +134,8 @@ def main() -> None:
                 "host": bench.host_telemetry(
                     snap0, bench.host_snapshot(),
                     bench._RAW.get(bench.CALIB)),
+                "codegen": dict(codegen, cache_entries=int(spark.conf.get(
+                    "spark.sql.codegen.cache.maxEntries"))),
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             }
         )

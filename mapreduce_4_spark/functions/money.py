@@ -7,10 +7,14 @@ exactness, not tolerance (SURVEY.md §7.4 "oracle mismatch traps"): every
 money aggregate sums the measure's exact unscaled integer and converts
 the exact result to double once.
 
-1. ``cents(col)`` = round(col * 100) cast long. For a double that
+1. ``cents(col)`` = rint(col * 100) cast long. For a double that
    represents a 2-dp value v (the fixture/money contract, FIXTURES.md)
-   |col*100 - 100v| << 0.5, so round() recovers the integer 100v
-   exactly: the unscaled value DECIMAL(18,2) stores. Pinned per column
+   |col*100 - 100v| << 0.5, so rint() recovers the integer 100v
+   exactly: the unscaled value DECIMAL(18,2) stores. rint rounds
+   half-even in plain double arithmetic; Spark's round() rounds half-up
+   through a per-row java.math.BigDecimal (q1 at sf0.1, same session:
+   min 0.69 s with round, 0.38 s with rint). The two differ only at an
+   exact .5, which col*100 never is for a 2-dp value. Pinned per column
    over the fixtures by tests/test_money_fastpath.py.
 2. Sums and products run on longs (long-backed aggregate buffers,
    codegen integer ops). Per-row products stay tiny (price cents ~1e7 x
@@ -58,17 +62,18 @@ def dec(col: Column | str, scale: int = 2) -> Column:
 def cents(col: Column | str, pow10: int = 2) -> Column:
     """Exact integer (value * 10^pow10) of a pow10-dp double measure.
 
-    Premise obligation: round(x * 10^pow10) recovers the unscaled
+    Premise obligation: rint(x * 10^pow10) recovers the unscaled
     integer only when the column truly holds pow10-dp values (for an
-    arbitrary double the IEEE product can land on the other side of a
-    .5 boundary and differ from ``dec``'s decimal-expansion HALF_UP by
-    one cent). Every column routed through here must be pinned in
-    MEASURES of tests/test_money_fastpath.py — add any new call-site
-    column there, or prove the 2-dp provenance in a comment the way
-    q9/q11's derived ps_supplycost analysis does (OPTIMIZATION_r15.md §8).
+    arbitrary double the IEEE product can land on or across a .5
+    boundary, where rint's half-even and ``dec``'s decimal-expansion
+    HALF_UP can differ by one cent). Every column routed through here
+    must be pinned in MEASURES of tests/test_money_fastpath.py — add any
+    new call-site column there, or prove the 2-dp provenance in a
+    comment the way q9/q11's derived ps_supplycost analysis does
+    (OPTIMIZATION_r15.md §8).
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * (10 ** pow10)).cast("long")
+    return F.rint(c * (10 ** pow10)).cast("long")
 
 
 def csum(col: Column | str, pow10: int = 2) -> Column:

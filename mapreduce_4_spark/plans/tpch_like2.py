@@ -280,7 +280,8 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey", "c_acctbal"
     )
     # long-cents average balance (round-14; acctbal may be negative —
-    # round() and the decimal cast agree half-up away from zero)
+    # cents' rint and the decimal cast agree away from an exact .5,
+    # which a 2-dp balance times 100 never is)
     avg_bal = (
         cust.filter(F.col("c_acctbal") > 0.0)
         .agg((unscale(F.sum(cents("c_acctbal")), 2) / F.count(F.lit(1)))

@@ -52,6 +52,23 @@ _BASE_CONFS: dict[str, str] = {
     # only ever REMOVES provably-empty input partitions.
     "spark.sql.python.filterPushdown.enabled": "true",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+    # Spark's generated-class cache (one LRU per JVM) defaults to 100
+    # entries. A perfbench ``tables`` job cycles ~126 distinct classes
+    # (110 from its eight TPC-H queries, 16 from the versioned round) and
+    # bench.py's headline set over 100, so the LRU missed on every stage
+    # and each repeated query paid Janino and the JIT again (the TPC-H
+    # eight, three passes in one session: 119, 81, 78 compilations at
+    # 100 entries; 119, 4, 0 at 1000). Spark sizes the cache from the
+    # session active at the JVM's first codegen, which get_spark is for
+    # perfbench, bench.py, bench_sweep.py and the tests. Bounded because
+    # the whole registry at sf0.01 generates 3010 distinct classes:
+    # keeping them all grew Metaspace 84 -> 243 MB (~53 KB a class) and
+    # the JIT code heaps 11 -> 145 MB, near the 240 MB reserved code
+    # cache; 1000 entries hold the working sets above for ~50 MB of
+    # Metaspace. A session built with plain SparkSession.builder (the
+    # stock session of scripts/full_oracle_drive.py) keeps 100 on
+    # purpose: it checks the registry under Spark's stock settings.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # local[N] runs the whole engine inside the driver JVM, whose default
     # 1g heap starves 32 concurrent tasks' execution memory (observed:
     # UNABLE_TO_ACQUIRE_MEMORY during the full-registry sweep). Size it
@@ -88,3 +105,30 @@ def get_spark(app_name: str = "mapreduce_4_spark", master: str | None = None,
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_counters(spark: SparkSession, since: dict | None = None) -> dict:
+    """The driver JVM's code-generation counters, cumulative since JVM
+    start (the difference from ``since``, an earlier reading, when
+    given): Janino ``compilations`` (one per codegen cache miss), the
+    ``classes`` they generated (inner classes included), ``janino_ms``,
+    HotSpot ``jit_ms`` and ``metaspace_mb`` (a level, so its
+    difference is the growth). In local mode this JVM runs the tasks
+    too, so the counts cover every stage."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    mgmt = jvm.java.lang.management.ManagementFactory
+    metaspace = next(p for p in mgmt.getMemoryPoolMXBeans()
+                     if p.getName() == "Metaspace")
+    now = {
+        "compilations": metrics.METRIC_COMPILATION_TIME().getCount(),
+        "classes": metrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE().getCount(),
+        "janino_ms": jvm.org.apache.spark.sql.catalyst.expressions.codegen
+        .CodeGenerator.compileTime() / 1e6,
+        "jit_ms": mgmt.getCompilationMXBean().getTotalCompilationTime(),
+        "metaspace_mb": metaspace.getUsage().getUsed() / 2**20,
+    }
+    if since:
+        now = {k: v - since[k] for k, v in now.items()}
+    return {k: round(v, 1) if isinstance(v, float) else v
+            for k, v in now.items()}
