@@ -6,6 +6,12 @@ sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 Each query is materialized through the noop sink so the full plan
 (scan -> compute -> all columns) executes without collect() driver
 pressure — the same shape a cluster job has.
+
+One warm pass runs every headline query once before any is timed; then
+one timer (``_timed``) takes each arm's min of N warm runs. Every
+reported number — ``value``, ``value_median``, ``value_first_run`` — is
+a warm-pass number, and each arm's ``codegen_runs`` entry in the full
+record says whether its timed runs compiled or JIT-compiled anything.
 """
 
 from __future__ import annotations
@@ -49,7 +55,7 @@ _CODEGEN: dict[str, dict] = {}
 def _codegen_reading(since: dict | None = None) -> dict | None:
     """session.codegen_counters of the active session (the difference
     from ``since`` when given); None without a session, as when the
-    unit tests drive _timed with a fake frame."""
+    unit tests drive _timed with a fake arm."""
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
@@ -125,25 +131,6 @@ def host_telemetry(start: dict, end: dict,
         out["calib_runs"] = len(r)
     return out
 
-#: known-good per-query reference times (best confirmed round, min-of-3
-#: on a quiet sandbox). A headline query whose min-of-N lands above
-#: RETRY_FACTOR x its reference gets ONE more timed pass at the END of
-#: the run — the sweep's breach-retry discipline (bench_sweep.py):
-#: a contention burst that outlives one min-of-N window self-heals,
-#: while a real regression breaches both passes and still shows. The
-#: first-pass value is preserved under `first_pass` so nothing is
-#: hidden, and a genuine improvement should be followed by refreshing
-#: this file (refresh_reference below).
-REFERENCE_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "BENCH_REFERENCE.json")
-RETRY_FACTOR = 1.3
-
-#: breach factor for the MACHINE-NORMALIZED comparison (per-query min /
-#: calib_jvm_hash min, vs the reference's normalized values). Tighter
-#: than RETRY_FACTOR because normalization removes the host-speed term
-#: that the raw bound must tolerate (the round-9 drift lesson).
-NORM_RETRY_FACTOR = 1.25
-
 #: the calibration arm used as the machine-speed ruler
 CALIB = "calib_jvm_hash"
 
@@ -166,14 +153,23 @@ HEADLINE = [
 ]
 
 
-def _timed(timings: dict[str, float], name: str, df,
+def _noop(df):
+    """The zero-argument arm that materializes ``df`` through the noop
+    sink: the full plan executes with no collect() driver pressure."""
+    return lambda: df.write.format("noop").mode("overwrite").save()
+
+
+def _timed(timings: dict[str, float], name: str, run,
            fast_extra: int = 0) -> None:
-    """Warm-up + N_RUNS timed noop-sink materializations; records the
-    min (see N_RUNS note) and keeps the raws in _RAW. ``fast_extra``:
-    up to that many EXTRA runs when the min is under FAST_FLOOR_SEC —
-    min-of-5 where the relative noise floor is worst (headline + calib
-    arms pass FAST_EXTRA_RUNS; ab_* arms stay min-of-3)."""
-    df.write.format("noop").mode("overwrite").save()
+    """Warm-up + N_RUNS timed calls of the zero-argument ``run`` (a
+    DataFrame arm passes ``_noop(df)``; a driver-side arm such as a
+    metadata-only aggregate passes its own callable). Records the min
+    (see N_RUNS note), keeps the raws in _RAW and the per-run loadavg in
+    _LOAD1 under the same key. ``fast_extra``: up to that many EXTRA
+    runs when the min is under FAST_FLOOR_SEC — min-of-5 where the
+    relative noise floor is worst (headline + calib arms pass
+    FAST_EXTRA_RUNS; ab_* arms stay min-of-3)."""
+    run()
     mark = _codegen_reading()
     runs: list[float] = []
     loads: list[float] = []
@@ -185,32 +181,7 @@ def _timed(timings: dict[str, float], name: str, df,
         except OSError:
             loads.append(-1.0)
         t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        runs.append(round(time.perf_counter() - t0, 3))
-    if mark:
-        _CODEGEN[name] = _codegen_reading(since=mark)
-    _RAW[name] = runs
-    _LOAD1[name] = loads
-    timings[name] = min(runs)
-    print(f"# {name}: {timings[name]:.3f}s (runs: {runs})", file=sys.stderr)
-
-
-def _timed_fn(timings: dict[str, float], name: str, fn) -> None:
-    """_timed for a driver-side callable (e.g. a metadata-only
-    aggregate with no DataFrame to noop-sink): one warm-up call, then
-    N_RUNS timed calls, min recorded, raws + per-run loadavg kept —
-    same discipline (load1_runs stays keyed like raw_runs)."""
-    fn()
-    mark = _codegen_reading()
-    runs = []
-    loads = []
-    for _ in range(N_RUNS):
-        try:
-            loads.append(round(os.getloadavg()[0], 2))
-        except OSError:
-            loads.append(-1.0)
-        t0 = time.perf_counter()
-        fn()
+        run()
         runs.append(round(time.perf_counter() - t0, 6))
     if mark:
         _CODEGEN[name] = _codegen_reading(since=mark)
@@ -218,40 +189,6 @@ def _timed_fn(timings: dict[str, float], name: str, fn) -> None:
     _LOAD1[name] = loads
     timings[name] = min(runs)
     print(f"# {name}: {timings[name]:.3f}s (runs: {runs})", file=sys.stderr)
-
-
-def refresh_reference(bench_json_path: str) -> None:
-    """Rewrite BENCH_REFERENCE.json from a confirmed-good bench run.
-
-    Takes the per-query headline numbers AND regenerates the source note
-    from the actual input file in the same step, so the provenance line
-    can never go stale against the values (the SWEEP_BUDGET lesson)."""
-    with open(bench_json_path) as f:
-        run = json.load(f)
-    if "queries" not in run and isinstance(run.get("parsed"), dict):
-        # driver-recorded BENCH_r{N}.json wraps the bench line under
-        # "parsed" — unwrap so rounds can refresh straight from the
-        # artifact of record
-        run = run["parsed"]
-    payload = {
-        "reference_sec": {n: run["queries"][n] for n in HEADLINE},
-        "reference_normalized": {
-            n: round(run["queries"][n] / run["queries"][CALIB], 4)
-            for n in HEADLINE
-        } if CALIB in run.get("queries", {}) else {},
-        "reference_calib_sec": run.get("queries", {}).get(CALIB),
-        "rule": "best confirmed min-of-3 per headline query on a quiet "
-                "sandbox; a run above RETRY_FACTOR x reference (raw) or "
-                "NORM_RETRY_FACTOR x reference_normalized (per-query min "
-                f"/ {CALIB} min — machine-speed-independent) gets one "
-                "end-of-run retry (bench.py). Refresh after intentional "
-                "perf improvements via bench.refresh_reference.",
-        "source": f"{os.path.basename(bench_json_path)} "
-                  f"(headline total {run.get('value')}s at sf{run.get('sf')})",
-    }
-    with open(REFERENCE_FILE, "w") as f:
-        json.dump(payload, f, indent=2)
-        f.write("\n")
 
 
 def _ab_experiments(spark, timings: dict[str, float]) -> None:
@@ -281,9 +218,9 @@ def _ab_experiments(spark, timings: dict[str, float]) -> None:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     _timed(timings, "ab_bruteforce_topk_q200",
-           brute_force_topk(emb, queries, k=10))
+           _noop(brute_force_topk(emb, queries, k=10)))
     _timed(timings, "ab_lsh_topk_q200",
-           lsh_topk(emb, queries, k=10, n_planes=8, dim=64))
+           _noop(lsh_topk(emb, queries, k=10, n_planes=8, dim=64)))
 
     # bucketed-vs-plain fact join: the same lineitem x orders equi-join,
     # once over plain parquet (two exchanges) and once over snapshots
@@ -310,9 +247,9 @@ def _ab_experiments(spark, timings: dict[str, float]) -> None:
         bo = read_version(spark, f"{tmp}/od")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         _timed(timings, "ab_fact_join_plain",
-               li.join(od, li.l_orderkey == od.o_orderkey))
+               _noop(li.join(od, li.l_orderkey == od.o_orderkey)))
         _timed(timings, "ab_fact_join_bucketed",
-               bl.join(bo, bl.l_orderkey == bo.o_orderkey))
+               _noop(bl.join(bo, bl.l_orderkey == bo.o_orderkey)))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         shutil.rmtree(tmp, ignore_errors=True)
@@ -330,10 +267,9 @@ def _ab_experiments(spark, timings: dict[str, float]) -> None:
         pl = read_version(spark, f"{tmp2}/plain")
         cl = read_version(spark, f"{tmp2}/sorted")
         lo = 1000
-        _timed(timings, "ab_scan_plain",
-               pl.filter((F.col("user_id") >= lo) & (F.col("user_id") < lo + 50)))
-        _timed(timings, "ab_scan_clustered",
-               cl.filter((F.col("user_id") >= lo) & (F.col("user_id") < lo + 50)))
+        in_range = (F.col("user_id") >= lo) & (F.col("user_id") < lo + 50)
+        _timed(timings, "ab_scan_plain", _noop(pl.filter(in_range)))
+        _timed(timings, "ab_scan_clustered", _noop(cl.filter(in_range)))
     finally:
         shutil.rmtree(tmp2, ignore_errors=True)
 
@@ -368,13 +304,13 @@ def _ab_experiments(spark, timings: dict[str, float]) -> None:
             )
         lo2 = 12 * step + 100
         _timed(timings, "ab_chain_scan_full",
-               read_version(spark, f"{tmp2b}/chain").filter(
+               _noop(read_version(spark, f"{tmp2b}/chain").filter(
                    (F.col("o_orderkey") >= lo2)
-                   & (F.col("o_orderkey") <= lo2 + 2000)))
+                   & (F.col("o_orderkey") <= lo2 + 2000))))
         _timed(timings, "ab_chain_stats_pruned",
-               read_version_stats_pruned(
+               _noop(read_version_stats_pruned(
                    spark, f"{tmp2b}/chain", "o_orderkey",
-                   lower=lo2, upper=lo2 + 2000))
+                   lower=lo2, upper=lo2 + 2000)))
         # the metadata-aggregate tier on the same chain: a dir-aligned
         # 2-dir range COUNT answered from the manifest alone (spark
         # deliberately None — zero jobs, zero listings) vs the same
@@ -387,13 +323,13 @@ def _ab_experiments(spark, timings: dict[str, float]) -> None:
         n_meta = count_version(None, f"{tmp2b}/chain", "o_orderkey",
                                lower=alo, upper=ahi, detail=True)
         assert n_meta[1]["scanned"] == 0, n_meta
-        _timed_fn(timings, "ab_chain_count_meta",
-                  lambda: count_version(None, f"{tmp2b}/chain",
-                                        "o_orderkey", lower=alo, upper=ahi))
-        _timed_fn(timings, "ab_chain_count_scan",
-                  lambda: read_version_stats_pruned(
-                      spark, f"{tmp2b}/chain", "o_orderkey",
-                      lower=alo, upper=ahi).count())
+        _timed(timings, "ab_chain_count_meta",
+               lambda: count_version(None, f"{tmp2b}/chain",
+                                     "o_orderkey", lower=alo, upper=ahi))
+        _timed(timings, "ab_chain_count_scan",
+               lambda: read_version_stats_pruned(
+                   spark, f"{tmp2b}/chain", "o_orderkey",
+                   lower=alo, upper=ahi).count())
     finally:
         shutil.rmtree(tmp2b, ignore_errors=True)
 
@@ -418,9 +354,9 @@ def _ab_experiments(spark, timings: dict[str, float]) -> None:
         )
         docs10 = c if docs10 is None else docs10.unionAll(c)
     _timed(timings, "ab_simhash_chunk4_10x",
-           simhash_near_pairs(docs10, max_hamming=3, banding="chunk4"))
+           _noop(simhash_near_pairs(docs10, max_hamming=3, banding="chunk4")))
     _timed(timings, "ab_simhash_blocks6_10x",
-           simhash_near_pairs(docs10, max_hamming=3, banding="blocks6"))
+           _noop(simhash_near_pairs(docs10, max_hamming=3, banding="blocks6")))
 
 
 def _calibration(spark, timings: dict[str, float]) -> None:
@@ -443,16 +379,16 @@ def _calibration(spark, timings: dict[str, float]) -> None:
     # Sized to ~1s so the signal clears min-of-3 timing noise (~±40 ms);
     # 200M ran in 0.1s — inside the noise floor, useless as a ruler.
     _timed(timings, "calib_jvm_hash",
-           spark.range(2_000_000_000).select(
+           _noop(spark.range(2_000_000_000).select(
                F.xxhash64("id").alias("h")
-           ).agg(F.expr("bit_xor(h)").alias("s")),
+           ).agg(F.expr("bit_xor(h)").alias("s"))),
            fast_extra=FAST_EXTRA_RUNS)
     # parquet scan + decode of the biggest fixture table, trivial agg
     from mapreduce_4_spark.sources import load_table
 
     _timed(timings, "calib_scan_lineitem",
-           load_table(spark, SF_DIR, "lineitem").agg(
-               F.sum("l_quantity").alias("s")),
+           _noop(load_table(spark, SF_DIR, "lineitem").agg(
+               F.sum("l_quantity").alias("s"))),
            fast_extra=FAST_EXTRA_RUNS)
     # DATA-HEAVY scaling arm (round-15, r14 verdict ask #2): the
     # registered headline queries are sub-second at sf0.1 and dominated
@@ -481,7 +417,7 @@ def _calibration(spark, timings: dict[str, float]) -> None:
         * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
     )
     _timed(timings, "calib_fact_scaleup",
-           fact.agg(F.sum(hv).alias("s")),
+           _noop(fact.agg(F.sum(hv).alias("s"))),
            fast_extra=FAST_EXTRA_RUNS)
 
 
@@ -494,73 +430,22 @@ def main() -> None:
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()
 
     snap0 = host_snapshot()
+    # warm pass over the WHOLE headline before any arm is timed: it pays
+    # plan compilation, whole-stage codegen, file-index costs AND the
+    # HotSpot JIT of every generated class, which a long-lived cluster
+    # session amortizes across thousands of queries. One warm-up per arm
+    # is not enough — HotSpot keeps compiling an arm's fresh classes
+    # through its first timed runs (seconds of JIT per arm, visible in
+    # codegen_runs), so the timed runs would read cold-JIT time.
+    arms = {name: _noop(REGISTRY[name].builder(spark, SF_DIR))
+            for name in HEADLINE}
+    for run in arms.values():
+        run()
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        builder = REGISTRY[name].builder
-        # warm-up run: pays one-time plan compilation + whole-stage
-        # codegen + file-index costs, which a long-lived cluster session
-        # amortizes across thousands of queries; the timed run is the
-        # steady-state cost of the physical plan itself.
-        _timed(timings, name, builder(spark, SF_DIR),
-               fast_extra=FAST_EXTRA_RUNS)
+    for name, run in arms.items():
+        _timed(timings, name, run, fast_extra=FAST_EXTRA_RUNS)
     _calibration(spark, timings)
     _ab_experiments(spark, timings)
-
-    # Breach retry against the known-good reference (see REFERENCE_FILE
-    # note). Headline queries only: the ab_* arms build on temp dirs torn
-    # down inside _ab_experiments and are excluded from the headline
-    # total anyway. Only applies at the reference's scale factor. Two
-    # triggers: the raw bound (RETRY_FACTOR x reference_sec) and the
-    # machine-normalized bound (NORM_RETRY_FACTOR x reference_normalized,
-    # where both sides divide by their run's calib_jvm_hash min) — the
-    # normalized one still fires when the host slowdown masks a real
-    # plan regression in the raw numbers.
-    first_pass: dict[str, float] = {}
-    try:
-        with open(REFERENCE_FILE) as f:
-            _ref_doc = json.load(f)
-        ref = _ref_doc["reference_sec"]
-        ref_norm = _ref_doc.get("reference_normalized", {})
-    except (OSError, ValueError, KeyError):
-        ref, ref_norm = {}, {}
-    calib = min(_RAW[CALIB]) if CALIB in _RAW else None
-    if SF_DIR.rstrip("/").endswith("sf0.1"):
-        for name in HEADLINE:
-            cap = ref.get(name)
-            ncap = ref_norm.get(name)
-            raw_breach = cap is not None and timings[name] > cap * RETRY_FACTOR
-            norm_breach = (
-                ncap is not None and calib
-                and timings[name] / calib > ncap * NORM_RETRY_FACTOR
-            )
-            if not raw_breach and not norm_breach:
-                continue
-            why = (f"{timings[name]:.3f}s > {RETRY_FACTOR} x {cap:.3f}s"
-                   if raw_breach else
-                   f"{timings[name] / calib:.2f}norm > {NORM_RETRY_FACTOR} "
-                   f"x {ncap:.2f}norm")
-            print(f"# reference retry: {name} {why}", file=sys.stderr)
-            first_raw, first_load = _RAW[name], _LOAD1[name]
-            first_codegen = _CODEGEN[name]
-            retry: dict[str, float] = {}
-            _timed(retry, name, REGISTRY[name].builder(spark, SF_DIR),
-                   fast_extra=FAST_EXTRA_RUNS)
-            # retry raws live under their own `<name>:retry` key so
-            # value_median (and any raw-run consumer) keeps the same
-            # N-sample first-pass shape for every query, retried or not.
-            # _LOAD1 moves IN LOCKSTEP: the per-run loadavg column must
-            # keep pairing with the raw timings it was sampled before —
-            # especially for retried (i.e. suspect) queries, whose
-            # first-pass contention evidence is the whole point
-            # (r14 review finding).
-            _RAW[name + ":retry"] = _RAW[name]
-            _LOAD1[name + ":retry"] = _LOAD1[name]
-            _RAW[name] = first_raw
-            _LOAD1[name] = first_load
-            _CODEGEN[name + ":retry"] = _CODEGEN[name]
-            _CODEGEN[name] = first_codegen
-            first_pass[name] = timings[name]
-            timings[name] = min(timings[name], retry[name])
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     host = host_telemetry(snap0, host_snapshot(), _RAW.get(CALIB))
@@ -581,7 +466,7 @@ def main() -> None:
         "codegen_cache_entries": int(
             spark.conf.get("spark.sql.codegen.cache.maxEntries")),
     }
-    full, summary = build_records(timings, first_pass, sf, _RAW, host=host,
+    full, summary = build_records(timings, sf, _RAW, host=host,
                                   engine=engine)
     # stdout layout contract (round-10 verdict ask #2): the driver keeps
     # only a ~2 KB stdout TAIL, and BENCH_r09/r10 both came back
@@ -590,7 +475,7 @@ def main() -> None:
     # running. So: the bulky full record (summary + every raw run) goes
     # FIRST on its own line and to a local side file; the LAST line is
     # the compact self-contained summary (per-query mins, normalized,
-    # value* totals, calib, first_pass — everything but raw_runs),
+    # value* totals, calib — everything but raw_runs),
     # compact separators, so the tail always parses. The contract is
     # unit-tested (tests/test_sweep_gate.py).
     side = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -605,8 +490,8 @@ def main() -> None:
     print(json.dumps(summary, separators=(",", ":")))
 
 
-def build_records(timings: dict[str, float], first_pass: dict[str, float],
-                  sf: str, raw: dict[str, list[float]],
+def build_records(timings: dict[str, float], sf: str,
+                  raw: dict[str, list[float]],
                   host: dict | None = None,
                   engine: dict | None = None) -> tuple[dict, dict]:
     """(full, summary) bench records. ``full`` carries every timed arm
@@ -617,7 +502,8 @@ def build_records(timings: dict[str, float], first_pass: dict[str, float],
     The headline total stays comparable round-over-round: ab_* entries
     are reported per-query but excluded from the total. Alongside the
     min-of-N total (the contention-free plan-cost estimate), the
-    first-run and median totals are reported so rounds benched under
+    first-timed-run and median totals (all after the warm pass) are
+    reported so rounds benched under
     different estimators can still be compared like-for-like — min-of-N
     is biased low vs a single-shot number under contention, and a round
     delta should never be an artifact of switching estimators. The
@@ -667,7 +553,6 @@ def build_records(timings: dict[str, float], first_pass: dict[str, float],
                                          "calib_fact_scaleup"]
                     if n in timings},
         "normalized": normalized,
-        "first_pass": first_pass,
         "runs": N_RUNS,
         "fast_extra": FAST_EXTRA_RUNS,
         "host": host,

@@ -82,7 +82,8 @@ def main() -> None:
     codegen0 = codegen_counters(spark)
     timings: dict[str, float] = {}
     for name, spec in REGISTRY.items():
-        bench._timed(timings, name, spec.builder(spark, bench.SF_DIR))
+        bench._timed(timings, name,
+                     bench._noop(spec.builder(spark, bench.SF_DIR)))
     # the registry pass's Janino compilations, generated classes, JIT ms
     # and Metaspace growth: the codegen working set of every query. The
     # compilations inside timed runs should be 0; more means the timings
@@ -114,7 +115,8 @@ def main() -> None:
             print(f"# breach retry: {name}", file=sys.stderr)
             first_raw = bench._RAW[name]
             retry: dict[str, float] = {}
-            bench._timed(retry, name, REGISTRY[name].builder(spark, bench.SF_DIR))
+            bench._timed(retry, name, bench._noop(
+                REGISTRY[name].builder(spark, bench.SF_DIR)))
             # raw_runs keeps BOTH passes (first three = the breaching
             # pass) so the spike stays visible in the published JSON.
             bench._RAW[name] = first_raw + bench._RAW[name]

@@ -16,21 +16,18 @@ collisions are verified exactly. The MinHash signature is one hash
 aggregate over the exploded shingles (k ``min`` slots, built from one
 SQL string) — compiled operators only; higher-order functions
 (``transform``/``array_min`` lambdas) are ``CodegenFallback`` in Spark
-4.1 and stay out of the signature path. SimHash uses an Arrow-batched
-pandas UDF deliberately, as the engine's showcase of the
-vectorized-UDF surface (the reference's dlopen plugin analogue, O11).
+4.1 and stay out of the signature path. SimHash is one md5-derived
+fingerprint family, also all-JVM and reproducible in DuckDB; the
+engine's vectorized-UDF showcase (the reference's dlopen plugin
+analogue, O11) is ``plans/udf_surface.py``.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
+import itertools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
 
 from mapreduce_4_spark.functions.text import ngrams_join, words
 
@@ -524,39 +521,6 @@ def minhash_incremental_neardup(base_docs: DataFrame, delta_docs: DataFrame,
     return _verified_pairs(cands, sh_d, sh_b, "delta_id", "base_id", threshold)
 
 
-@pandas_udf(LongType())
-def simhash64(words_series: pd.Series) -> pd.Series:
-    """64-bit SimHash of a token array (Arrow-batched pandas UDF).
-
-    Deterministic across processes (blake2b, not Python hash()).
-    Vectorized per batch with numpy bit-unpacking; the per-document loop
-    is over tokens only.
-    """
-    import numpy as np
-
-    out = np.zeros(len(words_series), dtype=np.int64)
-    for i, ws in enumerate(words_series):
-        if ws is None or len(ws) == 0:
-            continue
-        digests = np.frombuffer(
-            b"".join(hashlib.blake2b(w.encode(), digest_size=8).digest() for w in ws),
-            dtype=np.uint8,
-        ).reshape(len(ws), 8)
-        bits = np.unpackbits(digests, axis=1)          # (n_words, 64) in {0,1}
-        acc = (2 * bits.astype(np.int32) - 1).sum(axis=0)
-        sig_bits = (acc > 0).astype(np.uint8)
-        out[i] = int.from_bytes(np.packbits(sig_bits).tobytes(), "big", signed=True)
-    return pd.Series(out)
-
-
-def simhash_table(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    # repartition for the same small-file reason as minhash: the pandas
-    # UDF parallelizes per partition, and one input file = one partition.
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return docs.select(id_col, simhash64(words(text_col)).alias("simhash"))
-
-
 def simhash_chunks_portable(docs: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id") -> DataFrame:
     """Portable SimHash-64 as four 16-bit chunk columns — pure codegen.
@@ -566,11 +530,9 @@ def simhash_chunks_portable(docs: DataFrame, text_col: str = "text",
     Bit j's votes are accumulated as 32 packed two-lane long sums in
     ONE hash aggregate (map-side partial, single shuffle on doc_id —
     see the packed-lane block comment below); the chunk values are
-    then assembled from the vote signs. No Python anywhere — unlike the
-    blake2b pandas-UDF family (:func:`simhash64`, kept as the engine's
-    vectorized-UDF showcase), this variant is whole-stage-codegen'd AND
-    reproducible in ANSI SQL, which is what makes the registered query
-    oracle-checkable.
+    then assembled from the vote signs. No Python anywhere: it is
+    whole-stage-codegen'd AND reproducible in ANSI SQL, which is what
+    makes the registered queries oracle-checkable.
 
     Documents with zero tokens have no SimHash here (they vanish at the
     explode); near-dup semantics for empty docs belong to exact dedup.
@@ -636,24 +598,6 @@ def simhash_chunks_portable(docs: DataFrame, text_col: str = "text",
 _BLOCKS6 = [(0, 11), (11, 11), (22, 11), (33, 11), (44, 10), (54, 10)]
 
 
-def _simhash_sig4(docs: DataFrame, hash_family: str) -> DataFrame:
-    """(doc_id, c0..c3) 16-bit chunk table for either hash family."""
-    if hash_family == "portable":
-        return simhash_chunks_portable(docs)
-    if hash_family == "udf":
-        sh = simhash_table(docs)
-        return sh.select(
-            "doc_id",
-            *[
-                F.shiftrightunsigned("simhash", c * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias(f"c{c}")
-                for c in range(4)
-            ],
-        )
-    raise ValueError(f"unknown hash_family: {hash_family!r}")
-
-
 def _simhash_verify(banded_pairs: DataFrame, max_hamming: int) -> DataFrame:
     """Shared verify tail: exact hamming from the carried 64-bit
     signatures, dedup the multi-band candidates, apply the distance
@@ -678,8 +622,38 @@ def _sig64(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return sig.select(id_col, s.alias("sig"))
 
 
+def _simhash_band_keys(banding: str) -> tuple[Column, int]:
+    """(array of packed long band keys over the ``sig`` column, shift):
+    one key per band of the tier, and ``key >> shift`` is that band's
+    index. Each key is a BIJECTION of (band, band value) — not a hash —
+    so joining or grouping on it is joining or grouping on the band.
+
+    - ``"chunk4"``: key = chunk_index * 2^16 + chunk_value
+      (chunk_value < 2^16).
+    - ``"blocks6"``: blocks extracted by unsigned shifts so the high
+      bit never sign-pollutes; key = combo*2^33 + k0*2^22 + k1*2^11 + k2
+      (block values < 2^11, combo < 20 — 38 bits).
+    """
+    if banding == "chunk4":
+        return F.array(*[
+            (F.lit(j << 16)
+             + F.shiftrightunsigned("sig", 16 * j).bitwiseAND(F.lit(0xFFFF)))
+            for j in range(4)
+        ]), 16
+    if banding == "blocks6":
+        blocks = [
+            F.shiftrightunsigned("sig", start).bitwiseAND(F.lit((1 << ln) - 1))
+            for start, ln in _BLOCKS6
+        ]
+        return F.array(*[
+            (F.lit(ci << 33) + F.shiftleft(blocks[i], 22)
+             + F.shiftleft(blocks[j], 11) + blocks[k])
+            for ci, (i, j, k) in enumerate(itertools.combinations(range(6), 3))
+        ]), 33
+    raise ValueError(f"unknown banding: {banding!r}")
+
+
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
-                       hash_family: str = "portable",
                        banding: str = "chunk4") -> DataFrame:
     """Near-dup pairs by SimHash hamming distance, banded for scale.
 
@@ -688,76 +662,41 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3,
     (pinned by test):
 
     - ``"chunk4"``: pigeonhole over 4 disjoint 16-bit chunks — distance
-      <= 3 forces at least one identical chunk; join on the packed
-      ``chunk_idx * 2^16 + chunk_value`` long key. 4 band rows/doc,
+      <= 3 forces at least one identical chunk. 4 band rows/doc,
       16-bit bucket keys. Candidate volume is sum(df^2) over
       2^16-value buckets — fine to ~10^8 docs, the documented caveat
       beyond (SCALE.md).
     - ``"blocks6"``: Manku et al. (WWW'07) tighter tier — 6 blocks,
-      any 3 must match; join on each C(6,3)=20 packed 3-block (~33-bit
-      + combo tag) long key. 5x the band rows, but bucket keys carry
-      twice the bits, so bucket df collapses and sum(df^2) survives
-      10^9+ docs. The ``ab_simhash_*`` bench arms measure the
-      crossover at 10x docs; ``simhash_bucket_skew_report`` is the
-      pre-flight diagnostic.
+      any 3 must match, one band per C(6,3)=20 combo. 5x the band rows,
+      but bucket keys carry twice the bits, so bucket df collapses and
+      sum(df^2) survives 10^9+ docs. The ``ab_simhash_*`` bench arms
+      measure the crossover at 10x docs; ``simhash_bucket_skew_report``
+      is the pre-flight diagnostic.
 
-    Verify is identical either way: exact bit_count(xor) on the carried
-    64-bit signatures, DISTINCT across bands, filter to the bound.
-
-    ``hash_family``: "portable" (md5-derived bits, DuckDB-reproducible,
-    all-JVM) or "udf" (blake2b pandas-UDF fingerprint).
+    Both join on the packed long key of ``_simhash_band_keys``. Verify
+    is identical either way: exact bit_count(xor) on the carried 64-bit
+    signatures, DISTINCT across bands, filter to the bound. Documents
+    with no tokens (null or empty text) have no fingerprint and pair
+    with nothing.
     """
     # Round-15 (§2.3 shuffle fewer bytes): each banded row carries ONE
-    # packed long band key (a BIJECTION of the old multi-column key —
-    # not a hash, so join semantics are untouched) and ONE 64-bit
-    # signature long instead of the four chunk columns; the verify tail
-    # is one xor + bit_count. Banded-row width 9 cols -> 3 on both
-    # self-join sides.
-    sig = _sig64(_simhash_sig4(docs, hash_family))
-    if banding == "chunk4":
-        # key = chunk_index * 2^16 + chunk_value (chunk_value < 2^16)
-        keys = F.explode(F.array(*[
-            (F.lit(j << 16)
-             + F.shiftrightunsigned("sig", 16 * j).bitwiseAND(F.lit(0xFFFF)))
-            for j in range(4)
-        ]))
-        banded = sig.select("doc_id", "sig", keys.alias("key"))
-        left = banded.select(
-            F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"), "key"
-        )
-        right = banded.select(
-            F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"), "key"
-        )
-        return _simhash_verify(left.join(right, "key"), max_hamming)
-    if banding == "blocks6":
-        import itertools
-
-        # blocks extracted by unsigned shifts so c3's high bit never
-        # sign-pollutes; key = combo*2^33 + k0*2^22 + k1*2^11 + k2
-        # (block values < 2^11, combo < 20 — 38 bits, exact bijection)
-        blocks = [
-            F.shiftrightunsigned("sig", start).bitwiseAND(F.lit((1 << ln) - 1))
-            for start, ln in _BLOCKS6
-        ]
-        combos = list(itertools.combinations(range(6), 3))
-        keys = F.explode(F.array(*[
-            (F.lit(ci << 33) + F.shiftleft(blocks[i], 22)
-             + F.shiftleft(blocks[j], 11) + blocks[k])
-            for ci, (i, j, k) in enumerate(combos)
-        ]))
-        banded = sig.select("doc_id", "sig", keys.alias("key"))
-        left = banded.select(
-            F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"), "key"
-        )
-        right = banded.select(
-            F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"), "key"
-        )
-        return _simhash_verify(left.join(right, "key"), max_hamming)
-    raise ValueError(f"unknown banding: {banding!r}")
+    # packed long band key and ONE 64-bit signature long instead of the
+    # four chunk columns; the verify tail is one xor + bit_count.
+    # Banded-row width 9 cols -> 3 on both self-join sides.
+    keys, _ = _simhash_band_keys(banding)
+    banded = _sig64(simhash_chunks_portable(docs)).select(
+        "doc_id", "sig", F.explode(keys).alias("key"))
+    left = banded.select(
+        F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"), "key"
+    )
+    right = banded.select(
+        F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"), "key"
+    )
+    return _simhash_verify(left.join(right, "key"), max_hamming)
 
 
-def simhash_bucket_stats(docs: DataFrame, banding: str = "chunk4",
-                         hash_family: str = "portable") -> DataFrame:
+def simhash_bucket_stats(docs: DataFrame,
+                         banding: str = "chunk4") -> DataFrame:
     """Pre-flight candidate-volume diagnostic for the SimHash tiers —
     the near-dup analogue of ``join_key_skew_report``.
 
@@ -766,57 +705,18 @@ def simhash_bucket_stats(docs: DataFrame, banding: str = "chunk4",
     banded self-join would generate BEFORE verify/distinct. This is the
     number to read before turning the banding dial at 10^9 docs: if
     ``chunk4``'s candidate_pairs explodes, ``blocks6`` shows what the
-    tighter keys buy on the same corpus.
+    tighter keys buy on the same corpus. The buckets are exactly the
+    self-join's: the same packed keys (``_simhash_band_keys``).
     """
-    sig = _simhash_sig4(docs, hash_family)
-    if banding == "chunk4":
-        bands = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("long").alias("band"),
-                        F.col(f"c{j}").cast("string").alias("key"),
-                    )
-                    for j in range(4)
-                ]
-            )
-        )
-    elif banding == "blocks6":
-        import itertools
-
-        sig64 = sum(
-            F.shiftleft(F.col(f"c{c}").cast("long"), 16 * c) for c in range(4)
-        )
-        blocks = [
-            F.shiftrightunsigned(sig64, start).bitwiseAND(F.lit((1 << ln) - 1))
-            for start, ln in _BLOCKS6
-        ]
-        bands = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(ci).cast("long").alias("band"),
-                        F.concat_ws(
-                            ":", blocks[i].cast("string"),
-                            blocks[j].cast("string"), blocks[k].cast("string")
-                        ).alias("key"),
-                    )
-                    for ci, (i, j, k) in enumerate(
-                        itertools.combinations(range(6), 3)
-                    )
-                ]
-            )
-        )
-    else:
-        raise ValueError(f"unknown banding: {banding!r}")
+    keys, shift = _simhash_band_keys(banding)
     buckets = (
-        sig.select(bands.alias("b"))
-        .select("b.band", "b.key")
-        .groupBy("band", "key")
+        _sig64(simhash_chunks_portable(docs))
+        .select(F.explode(keys).alias("key"))
+        .groupBy("key")
         .agg(F.count(F.lit(1)).alias("df"))
     )
     return (
-        buckets.groupBy("band")
+        buckets.groupBy(F.shiftright("key", shift).alias("band"))
         .agg(
             F.count(F.lit(1)).alias("n_buckets"),
             F.max("df").alias("max_bucket_df"),
@@ -847,7 +747,7 @@ def exact_dedup(df: DataFrame, content_cols: list[str],
 SIMHASH_ROUTE_MAX_CANDS_PER_DOC = 64.0
 
 
-#: (applicationId, corpus-plan semanticHash, hash_family, threshold) ->
+#: (applicationId, corpus-plan semanticHash, threshold) ->
 #: chosen banding tier. The pre-flight is a full corpus-wide
 #: shingle+simhash pass; without this cache every plan REbuild over the
 #: same corpus pays it again at plan-construction time (the r9-advice
@@ -857,10 +757,10 @@ SIMHASH_ROUTE_MAX_CANDS_PER_DOC = 64.0
 #: answer — both tiers are lossless and oracle-pinned — so a bounded
 #: plan-keyed cache is safe where one keyed on data content would need
 #: invalidation machinery.
-_SIMHASH_ROUTE_CACHE: dict[tuple[str, int, str, float], str] = {}
+_SIMHASH_ROUTE_CACHE: dict[tuple[str, int, float], str] = {}
 
 
-def choose_simhash_banding(docs: DataFrame, hash_family: str = "portable",
+def choose_simhash_banding(docs: DataFrame,
                            max_cands_per_doc: float =
                            SIMHASH_ROUTE_MAX_CANDS_PER_DOC,
                            use_cache: bool = True) -> str:
@@ -890,7 +790,7 @@ def choose_simhash_banding(docs: DataFrame, hash_family: str = "portable",
     # and cached on the QueryExecution): collapses no-op projections so
     # re-built-but-equivalent corpus plans share one entry.
     key = (app_id, docs._jdf.queryExecution().optimizedPlan().semanticHash(),
-           hash_family, max_cands_per_doc)
+           max_cands_per_doc)
     if use_cache and key in _SIMHASH_ROUTE_CACHE:
         return _SIMHASH_ROUTE_CACHE[key]
     # drop dead-app entries so a long-lived process stays bounded
@@ -901,8 +801,7 @@ def choose_simhash_banding(docs: DataFrame, hash_family: str = "portable",
         banding = "chunk4"
     else:
         total = (
-            simhash_bucket_stats(docs, banding="chunk4",
-                                 hash_family=hash_family)
+            simhash_bucket_stats(docs, banding="chunk4")
             .agg(F.sum("candidate_pairs").alias("c"))
             .first()["c"]
         ) or 0
@@ -912,13 +811,12 @@ def choose_simhash_banding(docs: DataFrame, hash_family: str = "portable",
     return banding
 
 
-def simhash_near_pairs_routed(docs: DataFrame, max_hamming: int = 3,
-                              hash_family: str = "portable") -> DataFrame:
+def simhash_near_pairs_routed(docs: DataFrame,
+                              max_hamming: int = 3) -> DataFrame:
     """``simhash_near_pairs`` with the banding tier chosen by
     :func:`choose_simhash_banding`. Both tiers emit the identical
     lossless pair set at ``max_hamming <= 3`` (oracle-pinned), so
     routing changes the PLAN only — output is tier-invariant, which is
     what makes the auto-dial safe to leave unattended at 10^9 docs."""
-    banding = choose_simhash_banding(docs, hash_family=hash_family)
-    return simhash_near_pairs(docs, max_hamming=max_hamming,
-                              hash_family=hash_family, banding=banding)
+    banding = choose_simhash_banding(docs)
+    return simhash_near_pairs(docs, max_hamming=max_hamming, banding=banding)

@@ -166,9 +166,7 @@ def agg_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def argmax_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_type", "event_id",
                                                     "user_id", "value")
-    ord_col = (
-        F.round(F.col("value") * 100).cast("long") * 1_000_000 + F.col("event_id")
-    )
+    ord_col = cents("value") * 1_000_000 + F.col("event_id")
     t = ev.withColumn("ord", ord_col)
     return t.groupBy("event_type").agg(
         F.max_by("event_id", F.col("ord")).alias("top_event_id"),

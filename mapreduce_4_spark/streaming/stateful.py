@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mapreduce_4_spark.functions.money import cents
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -57,12 +59,8 @@ def _update_user_totals(
 
 def stream_user_totals(stream: DataFrame) -> DataFrame:
     """Running per-user totals with explicit state management."""
-    from pyspark.sql import functions as F
-
     prepared = stream.select(
-        "user_id",
-        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-    )
+        "user_id", cents("value").alias("value_cents"))
     return prepared.groupBy("user_id").applyInPandasWithState(
         _update_user_totals,
         outputStructType=OUTPUT_SCHEMA,
@@ -85,7 +83,6 @@ def stream_user_totals_tws(stream: DataFrame) -> DataFrame:
     server) — both standard on a real cluster image; the test skips
     where protobuf is absent.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -113,9 +110,7 @@ def stream_user_totals_tws(stream: DataFrame) -> DataFrame:
             pass
 
     prepared = stream.select(
-        "user_id",
-        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-    )
+        "user_id", cents("value").alias("value_cents"))
     return prepared.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=UserTotalsProcessor(),
         outputStructType=OUTPUT_SCHEMA,

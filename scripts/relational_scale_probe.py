@@ -99,7 +99,7 @@ def main() -> None:
             for f, arm in arms.items():
                 timings: dict = {}
                 bench._timed(timings, f"{name}@x{f}",
-                             spec.builder(spark, arm))
+                             bench._noop(spec.builder(spark, arm)))
                 times[str(f)] = timings[f"{name}@x{f}"]
             slope = round(times[str(factor)] / times["1"], 2)
             out["queries"][name] = {**times, "slope": slope}

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from mapreduce_4_spark.operators.dedup import (
     minhash_near_duplicates,
     shingle_sets,
+    simhash_chunks_portable,
     simhash_near_pairs,
-    simhash_table,
 )
 from mapreduce_4_spark.plans.dedup import ngram_jaccard_pairs
 
@@ -61,8 +61,8 @@ def test_minhash_identical_docs_always_collide(spark, docs):
 
 
 def test_simhash_deterministic_and_identity(spark, docs):
-    t1 = {r["doc_id"]: r["simhash"] for r in simhash_table(docs).collect()}
-    t2 = {r["doc_id"]: r["simhash"] for r in simhash_table(docs).collect()}
+    t1 = {r["doc_id"]: tuple(r) for r in simhash_chunks_portable(docs).collect()}
+    t2 = {r["doc_id"]: tuple(r) for r in simhash_chunks_portable(docs).collect()}
     assert t1 == t2, "simhash must be deterministic across runs"
     # identical text => identical fingerprint => hamming 0 pair found
     base = docs.limit(3).select("doc_id", "text")
@@ -337,6 +337,36 @@ def test_simhash_bucket_stats_counts_candidates_exactly(spark, docs):
     assert set(got) == {0, 1, 2, 3}
     for band in range(4):
         dfs = Counter(r[f"c{band}"] for r in sig)
+        assert got[band]["n_buckets"] == len(dfs)
+        assert got[band]["max_bucket_df"] == max(dfs.values())
+        assert got[band]["candidate_pairs"] == sum(
+            v * (v - 1) // 2 for v in dfs.values()
+        )
+
+
+def test_simhash_blocks6_bucket_stats_counts_candidates_exactly(spark, docs):
+    """The blocks6 twin of the chunk4 check: the packed band keys must
+    bucket documents exactly by their 3-block tuple, one band per
+    C(6,3) combo, checked against a brute-force count of the tuples."""
+    import itertools
+    from collections import Counter
+
+    from mapreduce_4_spark.operators.dedup import (
+        _BLOCKS6,
+        simhash_bucket_stats,
+        simhash_chunks_portable,
+    )
+
+    sigs = [sum(r[f"c{c}"] << (16 * c) for c in range(4))
+            for r in simhash_chunks_portable(docs).collect()]
+    blocks = [[(s >> start) & ((1 << ln) - 1) for start, ln in _BLOCKS6]
+              for s in sigs]
+    combos = list(itertools.combinations(range(6), 3))
+    got = {r["band"]: r
+           for r in simhash_bucket_stats(docs, banding="blocks6").collect()}
+    assert set(got) == set(range(len(combos)))
+    for band, (i, j, k) in enumerate(combos):
+        dfs = Counter((b[i], b[j], b[k]) for b in blocks)
         assert got[band]["n_buckets"] == len(dfs)
         assert got[band]["max_bucket_df"] == max(dfs.values())
         assert got[band]["candidate_pairs"] == sum(

@@ -20,7 +20,10 @@ def test_wordcount_tolerates_null_and_empty_text(spark):
 
 
 def test_dedup_tolerates_null_text(spark):
-    from mapreduce_4_spark.operators.dedup import minhash_near_duplicates, simhash_table
+    from mapreduce_4_spark.operators.dedup import (
+        minhash_near_duplicates,
+        simhash_near_pairs,
+    )
 
     df = spark.createDataFrame(
         [(1, "one two three four five six"), (2, None),
@@ -29,8 +32,10 @@ def test_dedup_tolerates_null_text(spark):
     )
     pairs = minhash_near_duplicates(df, threshold=0.9).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 3)}
-    hashes = {r["doc_id"]: r["simhash"] for r in simhash_table(df).collect()}
-    assert hashes[2] == hashes[4] == 0  # null/empty -> zero fingerprint
+    # null/empty text has no fingerprint, so it pairs with nothing —
+    # not even with another null/empty doc
+    pairs = simhash_near_pairs(df, max_hamming=3).collect()
+    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 3)}
 
 
 def test_similarity_tolerates_empty_corpus(spark):
