@@ -1220,10 +1220,11 @@ def bloom_point_lookup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans the keyspace); per-dir blooms bound the touched dirs by the
     keys' actual locations plus a fill^k false-positive tail — at
     100 TB, a K-id fetch over a 10^3-dir chain touches ~the dirs
-    holding those ids instead of all of them. Build cost is one
-    bounded distinct-positions aggregate per dir (never row-count-
-    sized collects); the probe hashes through the SAME JVM expression
-    the writer used, so membership can never drift.
+    holding those ids instead of all of them. Build cost is bounded
+    bitmap aggregates observed on each append's own write job (never
+    row-count-sized collects, no extra Spark job); the probe hashes
+    with the same xxhash64 positions the writer used, so membership
+    can never drift.
 
     Reference anchor: the reference addresses per-file aggregate state
     by exact path key (asio_deep/main.cpp:434-516); this generalizes

@@ -30,18 +30,20 @@ optimistic CAS retry loop (``_commit_staged``) over staged data, the
 same commit protocol Iceberg/Delta run on an object store.
 
 A commit is ONE Spark job for its data: the write. The new dir's
-``col_stats`` (min, max, null count, integer sum) ride that job as a
-``DataFrame.observe`` attached to the exact frame handed to the writer,
-after any repartition or sort (``_write_observed``), with the row
-count observed beside them. That places the observation in the write
-job's result stage, whose accumulator updates Spark merges once per
-partition however many task attempts ran, so it counts each written
-row exactly once; and the publish still checks the observed count
-against the footer row count, scanning the written dir (never the
-input lineage) if they differ (``_new_dir_meta``). Bloom filters scan
-the written dir. No commit re-runs its input's lineage, and every
-scan reads with the schema the manifest records, so no footer
-inference job runs either.
+metadata, its ``col_stats`` (min, max, null count, integer sum) and
+its bloom filters (fixed-size bitmap aggregates of the bit positions),
+ride that job as a ``DataFrame.observe`` attached to the exact frame
+handed to the writer, after any repartition or sort
+(``_write_observed``), with the row count observed beside them. One
+builder makes those aggregates (``_meta_exprs``). The observation sits
+in the write job's result stage, whose accumulator updates Spark
+merges once per partition however many task attempts ran, so it
+counts each written row exactly once; and the publish still checks the
+observed count against the footer row count, evaluating the same
+aggregates in one scan of the written dir (never the input lineage)
+if they differ (``_new_dir_meta``). No commit re-runs its input's
+lineage, and every scan reads with the schema the manifest records,
+so no footer inference job runs either.
 
 Read planner: every read path decides which chain dirs it touches
 through one function. ``_open_version`` resolves the addressed version
@@ -55,7 +57,8 @@ that fold full dirs from metadata, the metadata and deletion-vector
 demotion. Its callers: the stats- and bloom-pruned reads scan the
 non-miss dirs; ``count/sum/minmax_version`` answer full dirs from the
 manifest and scan only partial ones (``_scan_partial``); copy-on-write
-DML drops or rewrites dirs by the same verdicts; the ``mr4ver``
+DML drops or rewrites dirs by the same verdicts, and a
+deletion-vector delete scans only the non-miss dirs; the ``mr4ver``
 DataSource plans its input partitions from it with the pure-Python
 ``xxh64`` bloom hash. ``_scan_dirs`` is the one manifest-pinned scan
 they all read through, ``read_version`` included.
@@ -178,18 +181,64 @@ _STATS_TYPES = {"tinyint", "smallint", "int", "bigint", "float", "double",
 _SUMMABLE_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
-def _stats_exprs(dtypes: dict, cols: list[str]) -> list:
-    """The aggregate expressions of a dir's ``col_stats`` entries for
-    ``cols`` (``dtypes``: the frame's column -> type name). The ONE
-    builder both evaluation sites use: the observation a publish
-    attaches to its write job (``_write_observed``) and the scanning
-    ``_column_stats`` (``analyze_table``, ``fsck_table``, and a publish
-    whose observation could not be trusted). ``_stats_from_row`` reads
-    the result back."""
+#: bloom hash functions per value (positions = pmod(xxhash64(seed, col),
+#: bits) for seed in range(k)). 4 keeps the false-positive rate at
+#: fill^4 — e.g. ~4e-4 at 14% fill — while the build stays k bounded
+#: bitmap aggregates per 2^15 bits per column, observed on the write.
+_BLOOM_K = 4
+
+#: log2 of the bits one ``bitmap_construct_agg`` covers (Spark's fixed
+#: 4 KiB bitmap of positions [0, 32768)): a bloom's bitset is bits/2^15
+#: of them per seed, laid end to end and OR-ed over the seeds
+_BITMAP_SHIFT = 15
+
+
+def _bloom_positions_col(col: str, bits: int):
+    """Array column of the _BLOOM_K bit positions for ``col``'s value —
+    the ONE definition both the build and the probe evaluate (JVM-side
+    xxhash64 on the native column type), so membership can never drift
+    between writer and reader."""
     from pyspark.sql import functions as F
 
-    exprs = []
-    for c in cols:
+    return F.array(*[
+        F.pmod(F.xxhash64(F.lit(seed), F.col(col)), F.lit(bits))
+        for seed in range(_BLOOM_K)
+    ])
+
+
+def _meta_sets(m: dict) -> tuple:
+    """The metadata a manifest records per chain dir:
+    ``(stats_for, bloom_for, bloom_bits)``."""
+    bloom_for = tuple(m.get("bloom_for") or ())
+    return (tuple(m.get("stats_for") or ()), bloom_for,
+            m.get("bloom_bits") if bloom_for else None)
+
+
+def _meta_exprs(dtypes: dict, sets: tuple) -> tuple[dict, list]:
+    """The ONE builder of a chain dir's metadata for ``sets``
+    (``_meta_sets``; ``dtypes``: the frame's column -> type name):
+    ``(inputs, aggs)``, the named per-row columns the aggregates read
+    and the aggregate expressions. Both evaluation sites use it: the
+    observation on a commit's write job (``_write_observed``) and one
+    aggregate over an existing dir (``_scan_meta``); ``_meta_from_row``
+    reads the result back. The inputs are a projection (hashed once
+    per row and seed, codegen'd) because an aggregate evaluates its
+    own input interpreted: k * bits / 2^15 aggregates each re-hashing
+    the value made a 2^17-bit build 2.6x slower.
+
+    - ``col_stats``: min, max, null count and, for integer columns, the
+      sum. Only ``_STATS_TYPES`` have an order-preserving JSON form.
+    - ``bloom``: per column, one ``bitmap_construct_agg`` per seed and
+      2^15-bit slice of the bitset, fed the slice's bit of the value's
+      ``_bloom_positions_col`` position. Only non-null values are
+      inserted (a point lookup ``col = v`` can never match a null).
+      Buffers and result are bounded by ``bits`` (k * bits / 8 bytes
+      per column), never by the row count."""
+    from pyspark.sql import functions as F
+
+    stats_for, bloom_for, bits = sets
+    inputs, aggs = {}, []
+    for c in stats_for:
         t = dtypes.get(c)
         if t not in _STATS_TYPES:
             raise ValueError(
@@ -201,60 +250,90 @@ def _stats_exprs(dtypes: dict, cols: list[str]) -> list:
         if t in ("date", "timestamp", "timestamp_ntz"):
             mn, mx = mn.cast("string"), mx.cast("string")
         nulls = F.sum(F.col(c).isNull().cast("long"))
-        exprs += [mn.alias(f"mn_{c}"), mx.alias(f"mx_{c}"),
-                  nulls.alias(f"nu_{c}")]
+        aggs += [mn.alias(f"mn_{c}"), mx.alias(f"mx_{c}"),
+                 nulls.alias(f"nu_{c}")]
         if t in _SUMMABLE_TYPES:
-            exprs.append(F.sum(F.col(c).cast("bigint")).alias(f"su_{c}"))
-    return exprs
+            aggs.append(F.sum(F.col(c).cast("bigint")).alias(f"su_{c}"))
+    if bloom_for and bits % 8:
+        raise ValueError("bloom_bits must be a multiple of 8")
+    for i, c in enumerate(bloom_for):
+        ps = _bloom_positions_col(c, bits)
+        for seed in range(_BLOOM_K):
+            p = F.when(F.col(c).isNotNull(), ps[seed])
+            for b in range(-(-bits >> _BITMAP_SHIFT)):
+                name = f"__mr4_bm{i}_{seed}_{b}"
+                inputs[name] = F.when(F.shiftright(p, _BITMAP_SHIFT) == b,
+                                      p % (1 << _BITMAP_SHIFT))
+                aggs.append(F.bitmap_construct_agg(name).alias(name))
+    return inputs, aggs
 
 
-def _stats_from_row(row, dtypes: dict, cols: list[str]) -> dict:
-    """{col: [min, max, null_count(, sum)]} from one evaluated row (or
-    observed-metrics dict) of ``_stats_exprs``."""
-    out = {}
-    for c in cols:
+def _meta_from_row(row, dtypes: dict, sets: tuple) -> tuple:
+    """``(col_stats, bloom)`` entries from one evaluated row (or
+    observed-metrics dict) of ``_meta_exprs``; None for an empty set.
+
+    A stats entry is ``[min, max, null_count(, sum)]``. All-null/empty
+    input yields [None, None, n(, None)], which range readers treat as
+    'unknown' (scan, never skip). The null count is what lets
+    ``count_version`` answer a range COUNT from metadata alone (min/max
+    ignore nulls, so a dir whose recorded range sits fully inside the
+    requested bounds still is not fully COUNTABLE unless it provably
+    holds zero nulls); the sum — recorded for integral columns only,
+    where re-association is exact — is ``sum_version``'s source the
+    same way. Manifests written before these fields carry 2-element
+    entries; readers treat the missing fields as unknown (never fully
+    countable/summable, still skippable/scannable as before).
+
+    A bloom entry is ``{"bits", "k", "b64"}``: bit p of the bitset is
+    bit p % 8 of byte p // 8."""
+    import base64
+
+    stats_for, bloom_for, bits = sets
+    stats, bloom = {}, {}
+    for c in stats_for:
         ent = [row[f"mn_{c}"], row[f"mx_{c}"], int(row[f"nu_{c}"] or 0)]
         if dtypes.get(c) in _SUMMABLE_TYPES:
             s = row[f"su_{c}"]
             ent.append(int(s) if s is not None else None)
-        out[c] = ent
-    return out
+        stats[c] = ent
+    for i, c in enumerate(bloom_for):
+        acc = 0
+        for seed in range(_BLOOM_K):
+            for b in range(-(-bits >> _BITMAP_SHIFT)):
+                acc |= int.from_bytes(row[f"__mr4_bm{i}_{seed}_{b}"],
+                                      "little") << (b << _BITMAP_SHIFT)
+        bloom[c] = {"bits": bits, "k": _BLOOM_K, "b64": base64.b64encode(
+            acc.to_bytes(bits // 8, "little")).decode("ascii")}
+    return stats or None, bloom or None
 
 
-def _column_stats(df: DataFrame, cols: list[str]) -> dict:
-    """{col: [min, max, null_count(, sum)]} for ``cols``, from ONE
-    aggregate over ``df`` — a scan of an existing dir (``analyze_table``
-    backfills, ``fsck_table``'s deep check, a publish's fallback when
-    its write-job observation is unusable). A publish normally records
-    the same entries without any scan: ``_write_observed`` evaluates
-    the same ``_stats_exprs`` on the write job itself. All-null/empty
-    input yields
-    [None, None, n(, None)], which range readers treat as 'unknown'
-    (scan, never skip). The null count is what lets ``count_version``
-    answer a range COUNT from metadata alone (min/max ignore nulls, so
-    a dir whose recorded range sits fully inside the requested bounds
-    still is not fully COUNTABLE unless it provably holds zero nulls);
-    the sum — recorded for integral columns only, where re-association
-    is exact — is ``sum_version``'s source the same way. Manifests
-    written before these fields carry 2-element entries; readers treat
-    the missing fields as unknown (never fully countable/summable,
-    still skippable/scannable as before)."""
+def _scan_meta(df: DataFrame, sets: tuple) -> tuple:
+    """``(col_stats, bloom)`` for ``sets`` from ONE aggregate over
+    ``df`` — a scan of an existing dir (``analyze_table`` backfills,
+    ``fsck_table``'s deep check, a publish whose write-job observation
+    is unusable). A publish normally records the same entries without
+    any scan: ``_write_observed`` evaluates the same ``_meta_exprs`` on
+    the write job itself."""
     dtypes = dict(df.dtypes)
-    return _stats_from_row(df.agg(*_stats_exprs(dtypes, cols)).first(),
-                           dtypes, cols)
+    inputs, aggs = _meta_exprs(dtypes, sets)
+    row = df.select("*", *[x.alias(n) for n, x in inputs.items()]) \
+        .agg(*aggs).first()
+    return _meta_from_row(row, dtypes, sets)
 
 
 #: the observed row count's name in a write job's observation
 _OBS_ROWS = "__mr4_rows"
 
 
-def _write_observed(df: DataFrame, cols: list[str] | None, write):
+def _write_observed(df: DataFrame, sets: tuple, write):
     """Run ``write(frame)`` with ``frame`` = ``df`` observing its row
-    count and ``cols``' stats expressions (``_stats_exprs``) — the dir's
-    stats come from the write job itself, with no second pass over
-    ``df``'s lineage and no read-back of the written files. Returns
-    ``(observed_rows, {col: entry})``, or None when nothing was observed
-    (no ``cols``, or Spark reported no metrics).
+    count and the ``_meta_exprs`` of ``sets`` — the dir's stats and
+    blooms come from the write job itself, with no second pass over
+    ``df``'s lineage and no read-back of the written files (the bloom
+    inputs are projected in and dropped again before the writer).
+    Returns ``(observed_rows, sets, col_stats, bloom)``, or None when
+    nothing was observed (empty ``sets``, or Spark reported no
+    metrics).
 
     ``df`` must be the exact frame handed to the writer, after any
     repartition or sort: the observation then sits in the write job's
@@ -265,26 +344,31 @@ def _write_observed(df: DataFrame, cols: list[str] | None, write):
     which a fetch failure can re-run and count twice). The caller
     still compares ``observed_rows`` with the footer row count and
     scans the written dir when they differ (``_new_dir_meta``)."""
-    if not cols:
+    if not (sets[0] or sets[1]):
         write(df)
         return None
     dtypes = dict(df.dtypes)
-    got = _observe_write(df, _stats_exprs(dtypes, cols), write)
-    if got is None:
-        return None
-    return got[_OBS_ROWS], _stats_from_row(got, dtypes, cols)
+    inputs, aggs = _meta_exprs(dtypes, sets)
+    got = _observe_write(df, aggs, write, inputs)
+    return got and (got[_OBS_ROWS], sets,
+                    *_meta_from_row(got, dtypes, sets))
 
 
-def _observe_write(df: DataFrame, exprs: list, write):
+def _observe_write(df: DataFrame, exprs: list, write,
+                   inputs: dict | None = None):
     """Run ``write(frame)`` with ``frame`` = ``df`` observing its row
-    count (``_OBS_ROWS``) and the aggregate ``exprs``; the observed Row,
-    or None when Spark reported no metrics. ``df`` must be the exact
-    frame handed to the writer (``_write_observed``)."""
+    count (``_OBS_ROWS``) and the aggregate ``exprs`` over ``df`` plus
+    the per-row ``inputs`` (dropped again before the writer); the
+    observed Row, or None when Spark reported no metrics. ``df`` must
+    be the exact frame handed to the writer (``_write_observed``)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     obs = Observation()
-    write(df.observe(obs, F.count(F.lit(1)).alias(_OBS_ROWS), *exprs))
+    if inputs:  # a stats-only observation adds no projection
+        df = df.select("*", *[x.alias(n) for n, x in inputs.items()])
+    frame = df.observe(obs, F.count(F.lit(1)).alias(_OBS_ROWS), *exprs)
+    write(frame.drop(*inputs) if inputs else frame)
     # the metrics are set when the write action returns; never block
     # on them (Observation.get waits forever if a plan dropped them)
     if obs._jo.getRowOrEmpty().isEmpty():
@@ -309,79 +393,24 @@ def _new_dir_meta(spark: SparkSession, m: dict, data_dir: str, rows: int,
     """The ``(col_stats, bloom)`` entries of the dir a commit just wrote
     at ``data_dir`` (``rows``: its footer row count) for the derived
     manifest ``m``'s column sets; None for a set ``m`` does not carry.
-    Stats are the write job's observation (``_write_observed``) when
-    it counted exactly the footer rows and covers ``m["stats_for"]``.
-    Otherwise, and for blooms, the written dir is scanned through the
-    manifest-pinned ``_scan_dirs``: no commit re-executes its input
-    lineage."""
-    stats_for, bloom_for = m["stats_for"], m["bloom_for"]
-    stats = bloom = None
-    if stats_for:
-        if (observed is not None and observed[0] == rows
-                and set(stats_for) <= set(observed[1])):
-            stats = {c: observed[1][c] for c in stats_for}
-        else:
-            stats = _column_stats(_scan_dirs(spark, m, [data_dir]),
-                                  stats_for)
-    if bloom_for:
-        bloom = _dir_bloom(_scan_dirs(spark, m, [data_dir]), bloom_for,
-                           m["bloom_bits"])
-    return stats, bloom
-
-
-#: bloom hash functions per value (positions = pmod(xxhash64(seed, col),
-#: bits) for seed in range(k)). 4 keeps the false-positive rate at
-#: fill^4 — e.g. ~4e-4 at 14% fill — while the build stays ONE
-#: distinct-positions aggregate per column.
-_BLOOM_K = 4
-
-
-def _bloom_positions_col(col: str, bits: int):
-    """Array column of the _BLOOM_K bit positions for ``col``'s value —
-    the ONE definition both the build and the probe evaluate (JVM-side
-    xxhash64 on the native column type), so membership can never drift
-    between writer and reader."""
-    from pyspark.sql import functions as F
-
-    return F.array(*[
-        F.pmod(F.xxhash64(F.lit(seed), F.col(col)), F.lit(bits))
-        for seed in range(_BLOOM_K)
-    ])
-
-
-def _dir_bloom(df: DataFrame, cols: list[str], bits: int) -> dict:
-    """{col: {"bits", "k", "b64"}} bloom filters over ``df``'s non-null
-    values. Cost: one distinct-positions aggregate per column whose
-    result is bounded by ``bits`` rows (positions live in [0, bits)),
-    NEVER by the row count — a 10^7-row append collects at most the
-    bitset itself. Only non-null values are inserted (a point lookup
-    ``col = v`` can never match a null)."""
-    import base64
-
-    from pyspark.sql import functions as F
-
-    if bits % 8:
-        raise ValueError("bloom_bits must be a multiple of 8")
-    out = {}
-    for c in cols:
-        rows = (
-            df.filter(F.col(c).isNotNull())
-            .select(F.explode(_bloom_positions_col(c, bits)).alias("p"))
-            .distinct().collect()
-        )
-        ba = bytearray(bits // 8)
-        for r in rows:
-            p = int(r["p"])
-            ba[p // 8] |= 1 << (p % 8)
-        out[c] = {"bits": bits, "k": _BLOOM_K,
-                  "b64": base64.b64encode(bytes(ba)).decode("ascii")}
-    return out
+    They are the write job's observation (``_write_observed``) when it
+    counted exactly the footer rows for exactly ``m``'s sets. Otherwise
+    (a miscount, or a concurrent commit landing on a head that wants
+    other columns) one ``_scan_meta`` aggregate over the written dir,
+    read through the manifest-pinned ``_scan_dirs``, builds them: no
+    commit re-executes its input lineage."""
+    sets = _meta_sets(m)
+    if not (sets[0] or sets[1]):
+        return None, None
+    if observed and observed[:2] == (rows, sets):
+        return observed[2:]
+    return _scan_meta(_scan_dirs(spark, m, [data_dir]), sets)
 
 
 def _zorder_col(df: DataFrame, cols: list[str], bits: int):
     """The Morton (Z-order) clustering key for ``cols``: each column is
     range-quantized to ``bits`` buckets from its OWN min/max (one tiny
-    aggregate over ``df``, same cost class as ``_column_stats``), then
+    aggregate over ``df``, same cost class as ``_scan_meta``), then
     the bucket bits interleave — bit i of column j lands at position
     i*len(cols)+j. One sort order over this key keeps every written
     file's span narrow in EVERY dimension, which is what lets parquet
@@ -773,7 +802,8 @@ def write_version(df: DataFrame, table_dir: str,
     With ``bloom_for=[cols]``, the manifest additionally records a
     per-data-dir BLOOM filter over each column's non-null values
     (``bloom_bits`` bits, default 2^17 = 16 KiB per column per dir;
-    one bounded distinct-positions aggregate per column at publish).
+    built by bounded bitmap aggregates observed on the write job
+    beside the stats, so a bloom costs the commit no extra Spark job).
     ``read_version_bloom_pruned`` then serves point lookups
     (``col IN (values)``) by skipping every chain dir whose bloom
     provably misses all probe values — the pruning min/max stats
@@ -885,7 +915,7 @@ def write_version(df: DataFrame, table_dir: str,
     if bucket_by:
         sort_cols = sort_by or bucket_by
         observed = _write_observed(
-            df, m["stats_for"],
+            df, _meta_sets(m),
             lambda frame: frame.write.mode("errorifexists")
             .bucketBy(n_buckets, *bucket_by)
             .sortBy(*sort_cols)
@@ -911,7 +941,7 @@ def write_version(df: DataFrame, table_dir: str,
                 .sortWithinPartitions("__mr4_zval")
                 .drop("__mr4_zval")
             )
-        observed = _write_observed(df, m["stats_for"],
+        observed = _write_observed(df, _meta_sets(m),
                                    _parquet_write(data_dir, partition_by))
     # exact count from the footers just written — no second data scan
     # (append: parent's manifest count + the new dir's footers)
@@ -983,23 +1013,22 @@ def write_version_concurrent(df: DataFrame, table_dir: str,
     nonce = uuid.uuid4().hex[:12]
     staged_rel = _staged_rel(nonce)
     staged_dir = os.path.join(table_dir, staged_rel)
-    # observe the stats columns the commit will most likely need: the
-    # explicit ones, else (appends) the current head's — a commit that
-    # lands on a head asking for others scans the staged dir instead
-    want = stats_for
+    # observe the metadata the commit will most likely need: the
+    # explicit stats columns, else (appends) the current head's, and
+    # (appends) the head's blooms — a commit that lands on a head
+    # asking for others scans the staged dir for those instead
     head = latest_version(table_dir)
-    if want is None and append and head is not None:
-        want = read_manifest(table_dir, head).get("stats_for")
-    dtypes = dict(df.dtypes)
-    observed = _write_observed(
-        df, [c for c in want or () if dtypes.get(c) in _STATS_TYPES],
-        _parquet_write(staged_dir, partition_by))
+    want = (read_manifest(table_dir, head) if append and head is not None
+            else {})
+    if stats_for is not None:
+        want = {**want, "stats_for": stats_for}
+    observed = _write_observed(df, _meta_sets(want),
+                               _parquet_write(staged_dir, partition_by))
     new_rows = fsio.parquet_row_count(staged_dir)
     mine: dict = {}  # this writer's entries per column set, made once
 
     def dir_meta(m):
-        sets = (tuple(m["stats_for"] or ()), tuple(m["bloom_for"] or ()),
-                m["bloom_bits"])
+        sets = _meta_sets(m)
         if sets not in mine:
             mine[sets] = _new_dir_meta(df.sparkSession, m, staged_dir,
                                        new_rows, observed)
@@ -1067,7 +1096,9 @@ def analyze_table(spark: SparkSession, table_dir: str,
                   detail: bool = False):
     """ANALYZE: backfill per-dir col_stats / bloom filters for chain
     dirs MISSING them, published as a metadata-only commit (data_dirs
-    unchanged — one scan per un-statted dir, zero data movement). The
+    unchanged, zero data movement). Each such dir is scanned once: one
+    ``_scan_meta`` aggregate builds its missing stats and blooms
+    together, from the same ``_meta_exprs`` a publish observes. The
     maintenance pass that gives skipping metadata to dirs whose
     publish path couldn't collect it: the ``mr4ver`` DataSource
     writer's staged dirs, pre-``stats_for`` history, legacy chains.
@@ -1100,11 +1131,14 @@ def analyze_table(spark: SparkSession, table_dir: str,
         return (None, {"analyzed": []}) if detail else None
     for d in todo:
         # physical rows of this one dir (no DV mask: table_dir omitted)
-        df = _scan_dirs(spark, pm, [os.path.join(table_dir, d)])
-        if stats_for and d not in col_stats:
-            col_stats[d] = _column_stats(df, stats_for)
-        if bloom_for and d not in bloom:
-            bloom[d] = _dir_bloom(df, bloom_for, bloom_bits)
+        s, b = _scan_meta(
+            _scan_dirs(spark, pm, [os.path.join(table_dir, d)]),
+            (() if d in col_stats else stats_for or (),
+             () if d in bloom else bloom_for or (), bloom_bits))
+        if s:
+            col_stats[d] = s
+        if b:
+            bloom[d] = b
     v = _publish(table_dir, {
         **_inherited_manifest(pm),
         "version": version + 1,
@@ -2471,7 +2505,7 @@ def fsck_table(table_dir: str, version: int | None = None,
             df_d = spark.read.parquet(p)
             present = set(df_d.columns)
             todo = [c for c in cols if c in present]
-            live = _column_stats(df_d, todo) if todo else {}
+            live = _scan_meta(df_d, (todo, (), None))[0] if todo else {}
             for c, ent in cols.items():
                 if c not in present:
                     if ent[0] is not None or ent[1] is not None:
@@ -2731,11 +2765,12 @@ def _cow_publish(spark: SparkSession, table_dir: str, pm: dict,
     any dir a retained manifest references, so shared dirs outlive
     their original version exactly as appended dirs do.
 
-    The new dir's stats are observed on its write job
+    The new dir's stats and blooms are observed on its write job
     (``_write_observed``), so a rewrite is one Spark job: the survivors'
     scan, filter and write, with no read-back of the files just
-    written. Blooms, and stats whose observation did not count exactly
-    the footer rows, scan the written dir (``_new_dir_meta``)."""
+    written. Only an observation that did not count exactly the footer
+    rows falls back to one aggregate over the written dir
+    (``_new_dir_meta``)."""
     version = pm["version"] + 1
     data_dir = _data_dir(table_dir, version)
     _reclaim_torn_write(table_dir, version)
@@ -2748,7 +2783,7 @@ def _cow_publish(spark: SparkSession, table_dir: str, pm: dict,
     new_rows = 0
     if new_df is not None:
         observed = _write_observed(_conform_to_schema(new_df, pm),
-                                   m["stats_for"],
+                                   _meta_sets(m),
                                    _parquet_write(data_dir, m["partition_by"]))
         new_rows = fsio.parquet_row_count(data_dir)
         if new_rows == 0 and keep_dirs:
@@ -3190,8 +3225,11 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
     (IN-list), a boolean ``predicate`` Column, or range ``where`` —
     definitely-TRUE semantics like every delete path here. Repeated DV
     deletes accumulate into a fresh sidecar (already-deleted rows are
-    excluded from the scan, so entries never duplicate). Returns the
-    new version; ``detail=True`` adds ``{"deleted", "dv_rows"}``."""
+    excluded from the scan, so entries never duplicate). The locating
+    scan reads only the dirs ``_plan_dirs`` does not prove free of
+    matches (keys as a point lookup, ``where`` as ranges; a
+    ``predicate`` scans every dir). Returns the new version;
+    ``detail=True`` adds ``{"deleted", "dv_rows"}``."""
     from pyspark.sql import functions as F
 
     if sum(x is not None for x in (key, predicate, where)) != 1:
@@ -3206,21 +3244,22 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
     _require_plain_table(pm, table_dir, "delete_version_dv")
     vals = _collect_keys(keys, key, max_keys) if key is not None else None
     # live scan (rows already deleted excluded) WITH the (file, pos)
-    # join key still attached
-    scan = _scan_dirs(
-        spark, pm, [os.path.join(table_dir, d) for d in _chain_dirs(pm)],
-        table_dir, keep_pos=True)
-    old_dv = pm.get("dv")
-    old_total = old_dv["count"] if old_dv else 0
-    new_deletes = None
-    if _DV_COLS[0] in scan.columns:  # an all-empty chain deletes nothing
+    # join key still attached, over the dirs the planner cannot prove
+    # free of matches: keys probe as a point lookup, ``where`` prunes
+    # as ranges, a ``predicate`` Column proves nothing (every dir)
+    plan = _plan_dirs(
+        pm, where=where, probes={key: [vals]} if vals is not None else None,
+        positions=lambda c: _bloom_positions(spark, pm, c))
+    scan = _scan_dirs(spark, pm, _kept(table_dir, plan), table_dir,
+                      keep_pos=True)
+    dv = old_dv = pm.get("dv")
+    total = old_total = old_dv["count"] if old_dv else 0
+    # an all-empty (or all-missed) scan deletes nothing
+    if _DV_COLS[0] in scan.columns:
         new_deletes = scan.filter(
             _delete_cond(key, vals, predicate, where)
         ).select(F.col(_DV_COLS[0]).alias("file"),
                  F.col(_DV_COLS[1]).alias("pos"))
-    dv = None
-    total = 0
-    if new_deletes is not None:
         if old_dv:
             # fold the previous sidecar in, dropping STALE entries —
             # rows of dirs a copy-on-write commit has since rewritten
@@ -3236,39 +3275,32 @@ def delete_version_dv(spark: SparkSession, table_dir: str,
         dv_abs = os.path.join(table_dir, dv_rel)
         # exact per-dir cardinalities (the numbers count_version's
         # metadata arithmetic subtracts), observed on the sidecar's own
-        # write: one prefix test per chain dir and sidecar row. Every
-        # entry names a chain dir, so the counts must add up to the
-        # footer rows; the sidecar is read back otherwise.
+        # write: one prefix test per chain dir and sidecar row — every
+        # chain dir, scanned or not, since the folded older sidecar can
+        # name any of them. Every entry names a chain dir, so the
+        # counts must add up to the footer rows; the sidecar is read
+        # back otherwise.
         dirs = _chain_dirs(pm)
         got = _observe_write(
             new_deletes.coalesce(1),
             [F.count_if(F.col("file").startswith(f"{d}/")).alias(f"d{i}")
              for i, d in enumerate(dirs)],
             lambda frame: frame.write.mode("errorifexists").parquet(dv_abs))
-        observed = None
-        if got is not None and got[_OBS_ROWS] == fsio.parquet_row_count(
-                dv_abs):
-            observed = {d: got[f"d{i}"] for i, d in enumerate(dirs)
-                        if got[f"d{i}"]}
-        if observed is not None and sum(observed.values()) == got[_OBS_ROWS]:
-            dir_counts = observed
-        else:
+        dir_counts = got and {d: got[f"d{i}"] for i, d in enumerate(dirs)
+                              if got[f"d{i}"]}
+        if not got or got[_OBS_ROWS] != fsio.parquet_row_count(dv_abs) \
+                or sum(dir_counts.values()) != got[_OBS_ROWS]:
             counts = (
                 spark.read.schema(_DV_SCHEMA).parquet(dv_abs)
                 .groupBy(_dv_dir_col().alias("d"))
                 .count().collect()
             )
             dir_counts = {r["d"]: int(r["count"]) for r in counts}
-        total = sum(dir_counts.values())
-        if total:
+        if sum(dir_counts.values()):
+            total = sum(dir_counts.values())
             dv = {"path": dv_rel, "count": total, "dir_counts": dir_counts}
         else:
             fsio.delete(dv_abs, recursive=True)  # no-op delete: no sidecar
-            dv = old_dv
-            total = old_total
-    else:
-        dv = old_dv
-        total = old_total
     n_new = total - old_total
     v = _publish(table_dir, {
         **_inherited_manifest(pm),
@@ -3528,10 +3560,10 @@ def compact_tail(spark: SparkSession, table_dir: str,
         return None  # keep_base=0 over an all-empty chain: nothing real
     # a keep-these-dirs-plus-one-new-dir commit: base dirs carry their
     # stats/blooms/counts/DV entries by reference; the folded dir gets
-    # stats observed on the fold's write (same content as the tail it
-    # replaced, but recomputed rather than min/max-merged so the fold
-    # can only tighten after deletes ever land in a chain) and an exact
-    # footer count. Tail DV entries folded away above; an emptied DV
+    # stats and blooms observed on the fold's write (same content as
+    # the tail it replaced, but recomputed rather than merged so the
+    # fold can only tighten after deletes ever land in a chain) and an
+    # exact footer count. Tail DV entries folded away above; an emptied DV
     # releases its sidecar to vacuum.
     return _cow_publish(spark, table_dir, manifest, base, rows,
                         operation="compact-tail")

@@ -7,7 +7,10 @@ its own job group and counts the jobs Spark started for it
 (``statusTracker().getJobIdsForGroup``):
 
 - a commit runs one job for its data, the write, with the new dir's
-  stats observed on it (no aggregate over the input, no read-back);
+  stats and bloom filters observed on it (no aggregate over the input,
+  no read-back);
+- ``analyze_table`` builds each dir's missing stats and blooms in one
+  aggregate;
 - a scan reads with the manifest's schema (no footer-inference job);
 - a bloom probe hashes with the pure-Python xxh64 twin (no hash job);
 - ``avg_version`` serves both of its components from one aggregate.
@@ -117,3 +120,45 @@ def test_dv_delete_is_one_job(spark, chain):
     assert m["dv"]["count"] == 2
     assert m["dv"]["dir_counts"] == {"v=000001": 1, "v=000002": 1}
     assert V.count_version(None, tdir) == 148
+
+
+def test_bloom_append_is_one_job(spark, chain):
+    """The new dir's bloom rides the write's observation beside its
+    stats (a distinct-positions build over the written dir cost two
+    more jobs)."""
+    tdir = chain(bloom=True)
+    assert _jobs(spark, lambda: V.write_version(
+        _rows(spark, 300), tdir, append=True)) == 1
+    assert set(V.read_manifest(tdir, 4)["bloom"]) \
+        == {f"v={v:06d}" for v in range(1, 5)}
+    got, info = V.read_version_bloom_pruned(spark, tdir, "k", [305],
+                                            detail=True)
+    assert [r["k"] for r in got.collect()] == [305]
+    assert info["missed"] == 3
+
+
+def test_bloom_compact_tail_is_one_job(spark, chain):
+    """Folding two bloom-carrying tail dirs is one job: the fold's
+    write, its stats and blooms observed on it."""
+    tdir = chain(bloom=True)
+    assert _jobs(spark, lambda: V.compact_tail(spark, tdir)) == 1
+    m = V.read_manifest(tdir, 4)
+    assert m["data_dirs"] == ["v=000001", "v=000004"]
+    assert set(m["bloom"]) == set(m["data_dirs"])
+    assert V.count_version(None, tdir) == 150
+
+
+def test_analyze_backfill_is_one_job_per_dir(spark, tmp_path):
+    """Backfilling stats and a bloom column on two bare dirs: one
+    aggregate per dir builds both, i.e. per dir its AQE shuffle-map job
+    plus the result job (a stats aggregate and a separate
+    distinct-positions bloom build per dir ran 8)."""
+    tdir = str(tmp_path / "bare")
+    for lo in (0, 100):
+        V.write_version(_rows(spark, lo), tdir, append=True)
+    assert _jobs(spark, lambda: V.analyze_table(
+        spark, tdir, stats_for=["k"], bloom_for=["k"])) == 4
+    m = V.read_manifest(tdir, 3)
+    assert m["col_stats"]["v=000002"]["k"] == [100, 149, 0,
+                                               sum(range(100, 150))]
+    assert set(m["bloom"]) == {"v=000001", "v=000002"}
